@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
 
 /** Benchmark main (driver-run per round → BENCH_r{N}.json).
   *
@@ -128,23 +129,22 @@ object Bench {
   def minWithRetry(sample: () => Option[Double]): Double =
     minWithRetryCpu(() => sample().map(w => (w, 0.0)))._1
 
-  /** Extracts a named per-query map (`"<field>":{"name":sec,...}`,
-    * no nested braces inside the object — our own writer's format)
-    * from a BENCH record line. Dependency-free by design: the record
-    * is read on the bench path where a JSON-library schema drift must
-    * never fail the sweep; returns empty on any shape surprise. */
-  def parseRecordMap(line: String, field: String): Map[String, Double] = {
-    val tag = "\"" + field + "\":{"
-    val i = line.indexOf(tag)
-    if (i < 0) Map.empty
-    else {
-      val body = line.substring(i + tag.length, line.indexOf('}', i))
-      val entry = """"([^"]+)":(-?[0-9.]+)""".r
-      entry.findAllMatchIn(body)
-        .flatMap(m => scala.util.Try(m.group(1) -> m.group(2).toDouble).toOption)
-        .toMap
-    }
-  }
+  /** The record parsed as a JSON tree, or None when it is not JSON. */
+  private def recordTree(line: String)
+      : Option[com.fasterxml.jackson.databind.JsonNode] =
+    scala.util.Try(new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(line)).toOption.filter(t => t != null && t.isObject)
+
+  /** Extracts a named per-query map (`"<field>":{"name":sec,...}`) from
+    * a BENCH record. The record is read on the bench path, where a
+    * schema drift must never fail the sweep: any shape surprise (not
+    * JSON, field missing or not an object) returns empty, and non-
+    * numeric entries are skipped. */
+  def parseRecordMap(line: String, field: String): Map[String, Double] =
+    recordTree(line).map(_.get(field)).filter(n => n != null && n.isObject)
+      .map(_.properties().asScala.collect {
+        case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble
+      }.toMap).getOrElse(Map.empty)
 
   /** The record's wall map (spec surface since round 11). */
   def parseRecordQueries(line: String): Map[String, Double] =
@@ -152,10 +152,9 @@ object Bench {
 
   /** The record's `"sf"` field (the re-time pass must not compare an
     * sf1 sweep against an sf0.1 record — everything would flag). */
-  def parseRecordSf(line: String): Option[String] = {
-    val m = """"sf":"([^"]+)"""".r.findFirstMatchIn(line)
-    m.map(_.group(1))
-  }
+  def parseRecordSf(line: String): Option[String] =
+    recordTree(line).map(_.get("sf")).filter(n => n != null && n.isTextual)
+      .map(_.asText)
 
   /** True when `wall` is a contention suspect vs the committed record:
     * both present and positive, wall > [[RetimeFactor]]·record, AND the

@@ -1,11 +1,30 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+
+  /** Why `args` cannot be a Verify call, or None when they can. The
+    * filter is the third argument: a comma in the outDir means a filter
+    * went into the wrong slot, and a name outside SparkEntry.queries
+    * would silently dump nothing for it. */
+  def argError(args: Array[String]): Option[String] =
+    if (args.length < 2 || args.length > 3)
+      Some("usage: Verify <sfDir> <outDir> [query,query,...]")
+    else if (args(1).contains(','))
+      Some(s"outDir '${args(1)}' contains ',' (the query filter is the third argument)")
+    else args.lift(2).map(_.split(',').filterNot(SparkEntry.queries.contains))
+      .filter(_.nonEmpty)
+      .map(bad => s"unknown queries: ${bad.mkString(",")}")
+
   def main(args: Array[String]): Unit = {
     // args: <sfDir> <outDir> [comma-separated query-name filter]
+    argError(args).foreach { e =>
+      System.err.println(s"[verify] $e")
+      sys.exit(2)
+    }
     val sfDir = args(0)
     val outDir = args(1)
     val only: Option[Set[String]] =
@@ -46,21 +65,9 @@ object Verify {
       // plan — drop it so caches never accumulate across the dump
       spark.catalog.clearCache()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      .writeValueAsString(SparkEntry.oracleSql
+        .filter { case (k, _) => only.forall(_.contains(k)) }.asJava)
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.TextAnalysis
 
@@ -119,53 +119,18 @@ object Bpe {
     out.result()
   }
 
-  // The learned merge table is deterministic in (fixture, textCol,
-  // steps) — exact-integer counts, total-order winner — so it is
-  // memoized per (session, caller key) like ClusteringQueries'
-  // coarse/PQ models ("train once, publish the model"): q101, q110
-  // and q145 share ONE training loop per bench sweep instead of each
-  // paying the Steps-round scan+collect ladder. Driver-held case
-  // classes (not a cached plan), so Bench's per-run clearCache can't
-  // evict it; entries of stopped sessions are dropped on access like
-  // the centroid memo.
-  private val mergeMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Long, String, Int), Seq[MergeStep]]
-
-  /** Cheap fixture fingerprint for the memo key: file count + every
-    * backing file's (length, mtime), folded order-independently of
-    * listing order (paths sorted). A path string alone is NOT identity
-    * — data rewritten under the same dir in-session would silently
-    * reuse the stale merge table (round-10 advisor finding). Driver-
-    * side stat of the fixture's file list only; 0 for non-file-backed
-    * frames (those fall back to path-string identity alone). */
-  private def fixtureFingerprint(docs: DataFrame): Long =
-    try {
-      val files = docs.inputFiles.sorted
-      val conf = docs.sparkSession.sessionState.newHadoopConf()
-      files.foldLeft(files.length.toLong) { (acc, f) =>
-        val p = new org.apache.hadoop.fs.Path(f)
-        val st = p.getFileSystem(conf).getFileStatus(p)
-        acc * 1000003L + st.getLen * 31L + st.getModificationTime
-      }
-    } catch { case scala.util.control.NonFatal(_) => 0L }
-
-  /** [[learn]] memoized per (session, `key`, fixture fingerprint,
-    * textCol, steps) — `key` is the caller's fixture identity (the sf
-    * dir path in the query surface); the fingerprint invalidates the
-    * entry when files under that path change in-session. NOTE for
-    * bench readers: q101/q110/q145 share one training per sweep by
-    * design, so their committed timings measure the memoized path
-    * (train-once-publish-the-model), not per-query training — recorded
-    * in BASELINE.md's BPE section. */
+  /** [[learn]] held in [[graft.sources.Memo]] under the path `key` (the
+    * sf dir in the query surface): the merge table is deterministic in
+    * (fixture, textCol, steps), so q101, q110 and q145 share ONE
+    * training loop per sweep instead of each paying the Steps-round
+    * scan+collect ladder ("train once, publish the model"). NOTE for
+    * bench readers: their committed timings therefore measure the
+    * memoized path, not per-query training — recorded in BASELINE.md's
+    * BPE section. */
   def learnMemoized(key: String, docs: DataFrame, textCol: String = "text",
-                    steps: Int = Steps): Seq[MergeStep] = {
-    val s = docs.sparkSession
-    mergeMemo.keys.foreach { case k @ (ks, _, _, _, _) =>
-      if (ks.sparkContext.isStopped) mergeMemo.remove(k)
-    }
-    mergeMemo.getOrElseUpdate((s, key, fixtureFingerprint(docs), textCol, steps),
+                    steps: Int = Steps): Seq[MergeStep] =
+    graft.sources.Memo(docs.sparkSession, key, s"bpe/$textCol/$steps")(
       learn(docs, textCol, steps))
-  }
 
   /** Encode — the inference side of [[learn]]: tokenize every
     * document and apply the learned merges in training order as

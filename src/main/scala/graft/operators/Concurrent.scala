@@ -15,18 +15,28 @@ package graft.operators
   */
 object Concurrent {
 
+  /** `xs.map(f)` on at most min(|xs|, cores) driver threads. The first
+    * element to fail cancels the others, and its own exception is
+    * rethrown, not the ExecutionException wrapping it. */
   def parMap[T, R](xs: Seq[T])(f: T => R): Seq[R] = {
     if (xs.lengthCompare(1) <= 0) xs.map(f)
     else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(xs.length)
-      try {
-        val futures = xs.map { x =>
-          pool.submit(new java.util.concurrent.Callable[R] {
-            override def call(): R = f(x)
-          })
-        }
-        futures.map(_.get())
-      } finally pool.shutdown()
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.min(xs.length, Runtime.getRuntime.availableProcessors))
+      val done = new java.util.concurrent.ExecutorCompletionService[(Int, R)](pool)
+      xs.zipWithIndex.foreach { case (x, i) =>
+        done.submit(new java.util.concurrent.Callable[(Int, R)] {
+          override def call(): (Int, R) = (i, f(x))
+        })
+      }
+      val out = new Array[Any](xs.length)
+      try xs.indices.foreach { _ =>
+        val (i, r) =
+          try done.take().get()
+          catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+        out(i) = r
+      } finally pool.shutdownNow()
+      out.toSeq.asInstanceOf[Seq[R]]
     }
   }
 }

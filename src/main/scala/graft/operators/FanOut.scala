@@ -25,10 +25,10 @@ import org.apache.spark.sql.{Column, DataFrame}
   * there the same repartition is pure overhead (+0.6–1.7 s on q105/
   * q115/q175 at sf1, A/B-measured against the pre-change tree). The
   * operator therefore reads the input's total row-group count from the
-  * parquet footers (memoized per file; one footer read each, the same
-  * metadata the scan planner touches) and becomes a NO-OP when the
-  * layout can already feed at least half the configured cores —
-  * exactly the guide's contract: repartition-after-read is the defense
+  * parquet footers (one footer read per file, held in
+  * graft.sources.Memo — the same metadata the scan planner touches)
+  * and becomes a NO-OP when the layout can already feed at least half
+  * the configured cores — exactly the guide's contract: repartition-after-read is the defense
   * for unsplittable inputs, not a blanket policy. On a production
   * many-file layout the no-op path always wins, so nothing here is
   * local-mode tuning; the widths involved all derive from
@@ -42,17 +42,11 @@ import org.apache.spark.sql.{Column, DataFrame}
   */
 object FanOut {
 
-  /** path#len#mtime → row-group count (footer metadata, read once per
-    * file VERSION — the length+mtime token makes a regenerated file a
-    * cache miss instead of a stale count; graft.sources.FixtureStamp). */
-  private val rowGroupMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Int]
-
   private def rowGroups(df: DataFrame): Option[Int] = {
     val files = try df.inputFiles catch { case _: Throwable => Array.empty[String] }
     if (files.isEmpty || !files.forall(_.endsWith(".parquet"))) None
     else Some(files.map { f =>
-      rowGroupMemo.computeIfAbsent(graft.sources.FixtureStamp.fileToken(f), { _ =>
+      graft.sources.Memo(df.sparkSession, f, "rowGroups") {
         try {
           val conf = df.sparkSession.sessionState.newHadoopConf()
           val in = org.apache.parquet.hadoop.util.HadoopInputFile
@@ -60,7 +54,7 @@ object FanOut {
           val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
           try r.getRowGroups.size finally r.close()
         } catch { case scala.util.control.NonFatal(_) => Int.MaxValue }
-      })
+      }
     }.foldLeft(0L)((a, b) => math.min(a + b, Int.MaxValue.toLong)).toInt)
   }
 

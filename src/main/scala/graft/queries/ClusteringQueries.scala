@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, KMeans, TopK}
-import graft.sources.Tables
+import graft.sources.{Memo, Tables}
 
 /** Embedding-clustering extension queries (q98, q100): deterministic
   * integer k-means over the `embeddings` fixture — the clustering step
@@ -65,38 +65,23 @@ object ClusteringQueries {
   // Five queries (q98, q100, q111, q147, q151) train the SAME coarse
   // k = 8 / Iters = 2 Lloyd fit over the embeddings fixture — the fit
   // is deterministic (content-addressed seeds, exact integer updates),
-  // so the k×dim centroid array is memoized per (session, dir) like
-  // PostsProxy/q118's shared frames. Driver-held longs (not a cached
-  // plan), so Bench's per-run clearCache can't evict it; stopped
-  // sessions are dropped on access like PostsProxy's cache. On a
-  // production cluster this is the "train once, publish the model"
-  // move — consumers load centroids, they don't refit.
-  private val centsMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Array[Array[Long]]]
-
-  private def coarseCents(s: SparkSession, dir: String): Array[Array[Long]] = {
-    centsMemo.keys.foreach { case k @ (ks, _) =>
-      if (ks.sparkContext.isStopped) centsMemo.remove(k)
-    }
-    centsMemo.getOrElseUpdate((s, dir),
+  // so the k×dim centroid array is held in Memo. On a production
+  // cluster this is the "train once, publish the model" move —
+  // consumers load centroids, they don't refit.
+  private def coarseCents(s: SparkSession, dir: String): Array[Array[Long]] =
+    Memo(s, dir, "coarseCents") {
       KMeans.fitCentroids(Tables.load(s, dir, "embeddings"),
-        "vec_id", "embedding", K, Iters))
-  }
+        "vec_id", "embedding", K, Iters)
+    }
 
   /** The trained IVF-PQ MODEL (coarse centroids + the PqM residual
     * codebooks) — q147 scores with it, q158 audits its distortion.
     * The residual frame feeds 4 codebook trainings, so it is persisted
     * for the fits and released; the model itself is k·dim driver longs,
-    * memoized per (session, dir) like [[coarseCents]]. */
-  private val pqMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (Array[Array[Long]], Seq[Array[Array[Long]]])]
-
+    * held like [[coarseCents]]. */
   private def ivfPqModel(s: SparkSession, dir: String)
-      : (Array[Array[Long]], Seq[Array[Array[Long]]]) = {
-    pqMemo.keys.foreach { case k @ (ks, _) =>
-      if (ks.sparkContext.isStopped) pqMemo.remove(k)
-    }
-    pqMemo.getOrElseUpdate((s, dir), {
+      : (Array[Array[Long]], Seq[Array[Array[Long]]]) =
+    Memo(s, dir, "ivfPqModel") {
       val coarse = coarseCents(s, dir)
       val res = pqResiduals(s, dir, coarse)
         .persist() // feeds the 4 codebook trainings
@@ -111,8 +96,7 @@ object ClusteringQueries {
         }
       res.unpersist()
       (coarse, cents)
-    })
-  }
+    }
 
   /** (vec_id, coarse, rv): every vector's coarse list id + exact
     * integer residual against its coarse centroid — a zero-shuffle

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Bfs, KCore, LabelProp, PageRank, TopK, Triangles}
-import graft.sources.Tables
+import graft.sources.{Memo, Tables}
 
 /** Graph / link-analysis extension queries (q112–q114): deterministic
   * integer PageRank, multi-source BFS seed distance, and
@@ -103,43 +103,16 @@ object GraphQueries {
     * 2·custkey, suppliers at 2·suppkey+1 — disjoint integer ids
     * without a string tag in the shuffle key.
     *
-    * MEMOIZED per (session, fixture dir): seven of the eight graph
-    * queries propagate over this SAME edge list, and each used to
-    * rebuild it from scratch (orders⋈lineitem + distinct — two fact
-    * scans and two shuffles that dwarfed the per-iteration cost at
-    * sf0.1). A production pipeline computing eight link signals builds
-    * the graph once; the memo mirrors that, backed by a lazy
-    * localCheckpoint so the build runs on the first consumer and every
-    * later query reads the materialized edge blocks (RDD-level
-    * storage — survives spark.catalog.clearCache(), same contract as
-    * CorpusQueries.selectionManifest). Results are unchanged by
-    * construction: the edge MULTISET is deterministic and every
-    * consumer is order-insensitive (exact-integer folds with total tie
-    * orders); only the physical row layout differs. */
-  private val edgeMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Long), DataFrame]
-
-  /** Size-derived loop partitions for the purchase/kNN graphs
-    * ([[graft.operators.LoopSizing]]), memoized with the edges so the
-    * count job runs once per (session, fixture) instead of once per
-    * bench run (the count reads the already-checkpointed edge blocks). */
-  private val partsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Long), Int]
-  private val knnPartsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Long), Int]
-
-  private def purchaseParts(s: SparkSession, dir: String): Int =
-    partsMemo.computeIfAbsent(graft.sources.FixtureStamp.key(partsMemo, s, dir), { _ =>
-      graft.operators.LoopSizing.partitions(s, 2L * purchaseEdges(s, dir).count())
-    })
-
-  private def knnParts(s: SparkSession, dir: String): Int =
-    knnPartsMemo.computeIfAbsent(graft.sources.FixtureStamp.key(knnPartsMemo, s, dir), { _ =>
-      graft.operators.LoopSizing.partitions(s, 2L * knnEdges(s, dir).count())
-    })
-
+    * Held in [[Memo]]: seven of the eight graph queries propagate over
+    * this SAME edge list, as a production pipeline computing eight
+    * link signals builds the graph once. The lazy localCheckpoint runs
+    * the build (orders⋈lineitem + distinct — two fact scans and two
+    * shuffles) on the first consumer; every later query reads the
+    * materialized edge blocks. The edge MULTISET is deterministic and
+    * every consumer is order-insensitive (exact-integer folds with
+    * total tie orders); only the physical row layout differs. */
   private def purchaseEdges(s: SparkSession, dir: String): DataFrame =
-    edgeMemo.computeIfAbsent(graft.sources.FixtureStamp.key(edgeMemo, s, dir), { _ =>
+    Memo(s, dir, "purchaseEdges") {
       val orders = Tables.load(s, dir, "orders")
       val lineitem = Tables.load(s, dir, "lineitem")
       orders.join(lineitem, col("l_orderkey") === col("o_orderkey"))
@@ -147,15 +120,26 @@ object GraphQueries {
           (col("l_suppkey") * 2 + 1).as("dst"))
         .distinct()
         .localCheckpoint(false)
-    })
+    }
+
+  /** Size-derived loop partitions for the purchase/kNN graphs
+    * ([[graft.operators.LoopSizing]]), held in [[Memo]] with the edges
+    * so the count job (over the checkpointed edge blocks) runs once
+    * per fixture instead of once per bench run. */
+  private def purchaseParts(s: SparkSession, dir: String): Int =
+    Memo(s, dir, "purchaseParts") {
+      graft.operators.LoopSizing.partitions(s, 2L * purchaseEdges(s, dir).count())
+    }
+
+  private def knnParts(s: SparkSession, dir: String): Int =
+    Memo(s, dir, "knnParts") {
+      graft.operators.LoopSizing.partitions(s, 2L * knnEdges(s, dir).count())
+    }
 
   /** q121's weighted twin: edge multiplicity w = distinct orders
-    * between the pair. Same memo rationale as [[purchaseEdges]]. */
-  private val weightedEdgeMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Long), DataFrame]
-
+    * between the pair, held like [[purchaseEdges]]. */
   private def weightedEdges(s: SparkSession, dir: String): DataFrame =
-    weightedEdgeMemo.computeIfAbsent(graft.sources.FixtureStamp.key(weightedEdgeMemo, s, dir), { _ =>
+    Memo(s, dir, "weightedEdges") {
       val orders = Tables.load(s, dir, "orders")
       val lineitem = Tables.load(s, dir, "lineitem")
       orders.join(lineitem, col("l_orderkey") === col("o_orderkey"))
@@ -163,7 +147,7 @@ object GraphQueries {
           (col("l_suppkey") * 2 + 1).as("dst"))
         .agg(countDistinct(col("o_orderkey")).as("w"))
         .localCheckpoint(false)
-    })
+    }
 
   /** The oracle twin of [[purchaseEdges]], as the `e` CTE body. */
   private val purchaseEdgesSql =
@@ -178,14 +162,10 @@ object GraphQueries {
     * undirected (u < v) kNN edge list with degree ≤ 2·TriK at ANY
     * scale — the sparsification that makes downstream triangle/core
     * analytics O(|V|) where the raw projection densifies
-    * quadratically. Memoized per (session, dir) like [[purchaseEdges]]
-    * (localCheckpoint-backed, so Bench's cache teardown doesn't defeat
-    * it; both consumers reference it from several subtrees). */
-  private val knnEdgeMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Long), DataFrame]
-
+    * quadratically. Held like [[purchaseEdges]] (both consumers
+    * reference it from several subtrees). */
   private def knnEdges(s: SparkSession, dir: String): DataFrame =
-    knnEdgeMemo.computeIfAbsent(graft.sources.FixtureStamp.key(knnEdgeMemo, s, dir), { _ =>
+    Memo(s, dir, "knnEdges") {
       val li = Tables.load(s, dir, "lineitem")
       val pw = li.groupBy(col("l_orderkey").as("ok"))
         .agg(sort_array(collect_set(col("l_suppkey"))).as("sks"))
@@ -203,7 +183,7 @@ object GraphQueries {
           greatest(col("node"), col("nbr")).as("v"))
         .distinct()
         .localCheckpoint(false)
-    })
+    }
 
   /** [[knnEdges]] as oracle CTEs ending in `e(u, v)`. */
   private def knnEdgesSql: String =

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.sources.Tables
+import graft.sources.{Memo, Tables}
 
 /** Deterministic posts-shaped corpus derived from the `documents` fixture.
   *
@@ -74,7 +74,8 @@ object PostsProxy {
        |FROM documents""".stripMargin
   }
 
-  // One persisted proxy per (session, sfDir). Two reasons:
+  // One persisted proxy per fixture, held in graft.sources.Memo. Two
+  // reasons:
   //  (1) codegen: even with element_at(array(...)), downstream queries fuse
   //      the 12-branch title expression into their own Sort/Project stages,
   //      and the combined method blows janino's 64 KB limit → interpreted
@@ -85,30 +86,14 @@ object PostsProxy {
   //      move as materializing a shared staging table on a real cluster.
   // The proxy is a test-fixture corpus (|documents| rows, narrow), so
   // MEMORY_AND_DISK is safe at every driver SF.
-  private val cached =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Long), DataFrame]
 
-  /** Spark-side proxy DataFrame (registers `documents` as a temp view).
-    * Entries for stopped sessions are dropped on every access so a
-    * long-lived JVM cycling through sessions (test suites, notebooks)
-    * never pins a dead SparkContext or its cached plan; entries whose
-    * fixture files were regenerated (stamp mismatch) are unpersisted
-    * and rebuilt (graft.sources.FixtureStamp). */
+  /** Spark-side proxy DataFrame (registers `documents` as a temp view). */
   def df(spark: SparkSession, sfDir: String): DataFrame = {
-    val stamp = graft.sources.FixtureStamp.of(sfDir)
-    cached.keys.foreach { case k @ (s, d, st) =>
-      if (s.sparkContext.isStopped) cached.remove(k)
-      else if ((s eq spark) && d == sfDir && st != stamp)
-        cached.remove(k).foreach { old =>
-          try old.unpersist(false)
-          catch { case scala.util.control.NonFatal(_) => () }
-        }
-    }
-    val frame = cached.getOrElseUpdate((spark, sfDir, stamp), {
+    val frame = Memo(spark, sfDir, "postsProxy") {
       Tables.load(spark, sfDir, "documents").createOrReplaceTempView("documents")
       spark.sql(sql(SparkSql))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
     // spark.catalog.clearCache() (Bench's per-run isolation) does not
     // just evict blocks — it DEREGISTERS the plan from the cache
     // manager, so the memoized frame stops substituting an

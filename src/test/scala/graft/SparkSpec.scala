@@ -5,19 +5,28 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for specs (one JVM-wide session; scalatest
-  * runs suites sequentially in the forked test JVM). */
+  * runs suites sequentially in the forked test JVM). A suite reads it
+  * once, so it sees the session that is live when the suite starts. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   override def afterAll(): Unit = () // keep the shared session alive
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.warehouse.dir", "target/spark-warehouse")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private var current: SparkSession = _
+
+  /** The shared session, rebuilt when a spec has stopped its context
+    * (MemoSpec stops one to pin the memo's stopped-session rule). */
+  def session: SparkSession = synchronized {
+    if (current == null || current.sparkContext.isStopped)
+      current = SparkSession.builder()
+        .master("local[2]")
+        .config("spark.sql.shuffle.partitions", "2")
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.extensions", "graft.GraftExtensions")
+        .config("spark.sql.warehouse.dir", "target/spark-warehouse")
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+    current
+  }
 }
