@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Deliverable tool (optimization rounds): dump `.explain("formatted")`
   * for named queries to files — the judge checks plan claims against
   * `plans/r<N>/<query>_{before,after}.txt`.
@@ -14,17 +12,8 @@ object PlanDump {
     val outDir = args(0)
     val suffix = args(1)
     val names = args(2).split(',').toSeq
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.minPartitionNum", cpus)
-      .config("spark.sql.files.openCostInBytes", (512 * 1024).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val sfDir = LocalSession.sfDir
+    val spark = LocalSession.build()
     new java.io.File(outDir).mkdirs()
     for (name <- names) {
       val df = SparkEntry.queries(name)(spark, sfDir)

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Measurement tool (optimization rounds): run one query under a stage
   * listener and print per-stage task counts / runtimes / shuffle bytes,
@@ -10,24 +9,15 @@ import org.apache.spark.sql.SparkSession
   * harness, so the listener stands in for the stage page).
   *
   * Usage: SPARK_GRAFT_SF_DIR=... sbt "runMain graft.Probe q181_distinct_n [n]"
-  * (n = timed repetitions after one warm-up; default 1; same session
-  * configs as Bench so numbers are comparable).
+  * (n = timed repetitions after one warm-up; default 1; Bench's
+  * LocalSession, so numbers are comparable).
   */
 object Probe {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val reps = if (args.length > 1) args(1).toInt else 1
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.minPartitionNum", cpus)
-      .config("spark.sql.files.openCostInBytes", (512 * 1024).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val sfDir = LocalSession.sfDir
+    val spark = LocalSession.build()
 
     case class St(job: Int, stage: Int, name: String, tasks: Int,
                   wallMs: Long, taskMs: Long, cpuMs: Long,

@@ -464,31 +464,20 @@ object ClusteringQueries {
       val emb = Tables.load(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
       val streamSide = emb.where(col("vec_id") >= 250)
-      val path = "target/q257_stream_classify/" + new java.io.File(dir).getName
-      val fpRow = emb.agg(
-        count(lit(1)).cast("string").as("c"),
-        bit_xor(xxhash64(col("vec_id"), Dedup.norm(col("embedding"))))
-          .cast("string").as("h")).collect()(0)
-      val fp = "v1:" + (0 until fpRow.length).map(fpRow.getString).mkString(":")
       // degenerate-fixture guard (the q251 convention): no stream side
       // → schema-matched empty result, no marker
       if (streamSide.agg(max("vec_id")).head.isNullAt(0)) {
         streamSide.select(col("vec_id"), lit(0L).as("cluster"),
           lit(0L).as("dist")).limit(0)
       } else {
-      StreamGuard.ensure(path, fp) {
+      val path = StreamGuard.ensure("q257_stream_classify", dir, "v1",
+          emb.select(col("vec_id"), Dedup.norm(col("embedding")))) { path =>
         val cents = coarseCents(s, dir) // frozen model: full-table fit
-        val in = s"$path/in"
-        def runOnce(): Unit = StreamGuard.await(
-          graft.streaming.StreamingIngest.classifyToParquet(
-            s.readStream.schema(streamSide.schema).parquet(in), cents,
-            targetPath = s"$path/out", checkpoint = s"$path/ckpt"))
-        streamSide.where(col("vec_id") % 2 === 0)
-          .write.mode("append").parquet(in)
-        runOnce()
-        streamSide.where(col("vec_id") % 2 === 1)
-          .write.mode("append").parquet(in)
-        runOnce()
+        StreamGuard.streamDrops(path, streamSide.where(col("vec_id") % 2 === 0),
+            streamSide.where(col("vec_id") % 2 === 1)) { in =>
+          graft.streaming.StreamingIngest.classifyToParquet(in, cents,
+            targetPath = s"$path/out", checkpoint = s"$path/ckpt")
+        }
       }
       s.read.parquet(s"$path/out")
         .select(col("vec_id"), col("cluster").cast("long").as("cluster"),

@@ -301,7 +301,6 @@ object OpsQueries {
     "q256_streamed_drift_parity" -> ((s, dir) => {
       val ev = Tables.load(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("value"), col("ts"))
-      val path = "target/q256_stream_drift/" + new java.io.File(dir).getName
       // degenerate-fixture guard (round-13 advisor, the q251
       // convention): an empty events table has no midpoint and nothing
       // to stream — degrade to the schema-matched empty result instead
@@ -313,14 +312,8 @@ object OpsQueries {
           lit(0L).as("chi2_milli"), lit(0L).as("novel_rows"),
           lit(0L).as("null_key_rows")).limit(0)
       } else {
-      val fpRow = ev.agg(
-        count(lit(1)).cast("string").as("c"),
-        bit_xor(xxhash64(col("event_id"), col("event_type"), col("value"),
-          col("ts"))).cast("string").as("h")).collect()(0)
-      val fp = "v1:" + (0 until fpRow.length).map(fpRow.getString).mkString(":")
-      StreamGuard.ensure(path, fp) {
+      val path = StreamGuard.ensure("q256_stream_drift", dir, "v1", ev) { path =>
         import s.implicits._
-        val in = s"$path/in"
         val halfPred = expr("unix_millis(ts)") * 2 <
           lit(bRow.getLong(0) + bRow.getLong(1))
         // reference grid: (event_type, $10-bin) counts of half 0 —
@@ -341,14 +334,11 @@ object OpsQueries {
         // q217/oracle convention — a bare !halfPred would drop null-ts
         // rows from both halves
         val live = ev.where(when(halfPred, lit(0)).otherwise(lit(1)) === 1)
-        def runOnce(): Unit = StreamGuard.await(
-          graft.streaming.StreamingIngest.trackValueDrift(
-            s.readStream.schema(live.schema).parquet(in), "event_type",
-            "value", s"$path/ckpt", tracker))
-        live.where(col("event_id") % 2 === 0).write.mode("append").parquet(in)
-        runOnce()
-        live.where(col("event_id") % 2 === 1).write.mode("append").parquet(in)
-        runOnce()
+        StreamGuard.streamDrops(path, live.where(col("event_id") % 2 === 0),
+            live.where(col("event_id") % 2 === 1)) { in =>
+          graft.streaming.StreamingIngest.trackValueDrift(in, "event_type",
+            "value", s"$path/ckpt", tracker)
+        }
         tracker.chi2Milli.toSeq
           .map { case (k, chi) =>
             (k, chi, tracker.novelCount, tracker.nullKeyCount) }
@@ -383,7 +373,6 @@ object OpsQueries {
     "q261_streamed_window_counts_parity" -> ((s, dir) => {
       val ev = Tables.load(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("value"), col("ts"))
-      val path = "target/q261_stream_window/" + new java.io.File(dir).getName
       val bRow = ev.agg(min(expr("unix_millis(ts)")).as("t0"),
         max(expr("unix_millis(ts)")).as("t1")).head
       if (bRow.isNullAt(0)) {
@@ -391,28 +380,19 @@ object OpsQueries {
           col("event_type").cast("string").as("event_type"),
           lit(0L).as("n"), lit(0L).as("total_e4")).limit(0)
       } else {
-      val fpRow = ev.agg(
-        count(lit(1)).cast("string").as("c"),
-        bit_xor(xxhash64(col("event_id"), col("event_type"), col("value"),
-          col("ts"))).cast("string").as("h")).collect()(0)
-      val fp = "v1:" + (0 until fpRow.length).map(fpRow.getString).mkString(":")
-      StreamGuard.ensure(path, fp) {
-        val in = s"$path/in"
+      val path = StreamGuard.ensure("q261_stream_window", dir, "v1", ev) { path =>
         val halfPred = expr("unix_millis(ts)") * 2 <
           lit(bRow.getLong(0) + bRow.getLong(1))
-        def runOnce(): Unit = StreamGuard.await(
-          graft.streaming.StreamingIngest.windowedEventCounts(
-              s.readStream.schema(ev.schema).parquet(in),
+        StreamGuard.streamDrops(path, ev.where(halfPred).coalesce(1),
+            ev.where(!halfPred).coalesce(1)) { in =>
+          graft.streaming.StreamingIngest.windowedEventCounts(in,
               windowLen = "6 hours", slack = "5 minutes")
             .writeStream.format("parquet")
             .option("path", s"$path/out")
             .option("checkpointLocation", s"$path/ckpt")
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start())
-        ev.where(halfPred).coalesce(1).write.mode("append").parquet(in)
-        runOnce()
-        ev.where(!halfPred).coalesce(1).write.mode("append").parquet(in)
-        runOnce()
+            .start()
+        }
       }
       s.read.parquet(s"$path/out")
         // ×10000 lifts the full scale-4 decimal into an exact int64 —
@@ -446,37 +426,27 @@ object OpsQueries {
       import s.implicits._
       val ev = Tables.load(s, dir, "events")
         .select(col("user_id"), col("ts"), col("event_type"))
-      val path = "target/q262_stream_session/" + new java.io.File(dir).getName
       val bRow = ev.agg(min(expr("unix_millis(ts)")).as("t0"),
         max(expr("unix_millis(ts)")).as("t1")).head
       if (bRow.isNullAt(0)) {
         ev.select(col("user_id"), col("ts").as("session_start"),
           col("ts").as("session_end"), lit(0L).as("n_events")).limit(0)
       } else {
-      val fpRow = ev.agg(
-        count(lit(1)).cast("string").as("c"),
-        bit_xor(xxhash64(col("user_id"), col("ts"), col("event_type")))
-          .cast("string").as("h")).collect()(0)
-      val fp = "v1:" + (0 until fpRow.length).map(fpRow.getString).mkString(":")
-      StreamGuard.ensure(path, fp) {
-        val in = s"$path/in"
+      val path = StreamGuard.ensure("q262_stream_session", dir, "v1", ev) { path =>
         val halfPred = expr("unix_millis(ts)") * 2 <
           lit(bRow.getLong(0) + bRow.getLong(1))
-        def runOnce(): Unit = StreamGuard.await(
+        StreamGuard.streamDrops(path, ev.where(halfPred).coalesce(1),
+            ev.where(!halfPred).coalesce(1)) { in =>
           graft.streaming.StreamingIngest.sessionize(
-              s.readStream.schema(ev.schema).parquet(in)
-                .as[graft.streaming.StreamingIngest.Event],
+              in.as[graft.streaming.StreamingIngest.Event],
               gapMs = StreamGapMs, slack = "10 seconds")
             .toDF()
             .writeStream.format("parquet")
             .option("path", s"$path/out")
             .option("checkpointLocation", s"$path/ckpt")
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start())
-        ev.where(halfPred).coalesce(1).write.mode("append").parquet(in)
-        runOnce()
-        ev.where(!halfPred).coalesce(1).write.mode("append").parquet(in)
-        runOnce()
+            .start()
+        }
       }
       s.read.parquet(s"$path/out")
         .select(col("user_id"), col("session_start"), col("session_end"),
@@ -502,28 +472,26 @@ object OpsQueries {
     "q263_streamed_interval_join_parity" -> ((s, dir) => {
       val ev = Tables.load(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("ts"), col("event_type"))
-      val path = "target/q263_stream_ijoin/" + new java.io.File(dir).getName
       val bRow = ev.agg(min(expr("unix_millis(ts)")).as("t0"),
         max(expr("unix_millis(ts)")).as("t1")).head
       if (bRow.isNullAt(0)) {
         ev.select(col("user_id"), col("ts").as("l_ts"),
           col("ts").as("r_ts")).limit(0)
       } else {
-      val fpRow = ev.agg(
-        count(lit(1)).cast("string").as("c"),
-        bit_xor(xxhash64(col("event_id"), col("user_id"), col("ts"),
-          col("event_type"))).cast("string").as("h")).collect()(0)
-      val fp = "v1:" + (0 until fpRow.length).map(fpRow.getString).mkString(":")
       val sideSchema = ev.select(col("user_id"), col("ts")).schema
-      StreamGuard.ensure(path, fp) {
+      val path = StreamGuard.ensure("q263_stream_ijoin", dir, "v1", ev) { path =>
         val halfPred = expr("unix_millis(ts)") * 2 <
           lit(bRow.getLong(0) + bRow.getLong(1))
         val clicks = ev.where(col("event_type") === "click")
           .select(col("user_id"), col("ts"))
         val purchases = ev.where(col("event_type") === "purchase")
           .select(col("user_id"), col("ts"))
-        def runOnce(): Unit = StreamGuard.await(
-          graft.streaming.StreamingIngest.intervalJoin(
+        // two inputs, so not StreamGuard.streamDrops: each half lands
+        // on both sides before the join's next restart
+        for (half <- Seq(halfPred, !halfPred)) {
+          clicks.where(half).coalesce(1).write.mode("append").parquet(s"$path/in_l")
+          purchases.where(half).coalesce(1).write.mode("append").parquet(s"$path/in_r")
+          StreamGuard.await(graft.streaming.StreamingIngest.intervalJoin(
               s.readStream.schema(sideSchema).parquet(s"$path/in_l"),
               s.readStream.schema(sideSchema).parquet(s"$path/in_r"),
               key = "user_id", horizon = "2 hours", slack = "5 minutes")
@@ -532,12 +500,7 @@ object OpsQueries {
             .option("checkpointLocation", s"$path/ckpt")
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
             .start())
-        clicks.where(halfPred).coalesce(1).write.mode("append").parquet(s"$path/in_l")
-        purchases.where(halfPred).coalesce(1).write.mode("append").parquet(s"$path/in_r")
-        runOnce()
-        clicks.where(!halfPred).coalesce(1).write.mode("append").parquet(s"$path/in_l")
-        purchases.where(!halfPred).coalesce(1).write.mode("append").parquet(s"$path/in_r")
-        runOnce()
+        }
       }
       s.read.parquet(s"$path/out")
         .select(col("user_id"), col("l_ts"), col("r_ts"))
@@ -567,7 +530,6 @@ object OpsQueries {
       val ev = Tables.load(s, dir, "events")
         .select(col("user_id"), col("event_type"), col("ts"),
           date_trunc("day", col("ts")).as("day"))
-      val path = "target/q264_stream_dedup/" + new java.io.File(dir).getName
       val bRow = ev.agg(min(expr("unix_millis(ts)")).as("t0"),
         max(expr("unix_millis(ts)")).as("t1")).head
       if (bRow.isNullAt(0)) {
@@ -575,19 +537,14 @@ object OpsQueries {
           col("event_type").cast("string").as("event_type"),
           col("day"), lit(0L).as("n_emitted")).limit(0)
       } else {
-      val fpRow = ev.agg(
-        count(lit(1)).cast("string").as("c"),
-        bit_xor(xxhash64(col("user_id"), col("event_type"), col("ts")))
-          .cast("string").as("h")).collect()(0)
-      val fp = "v1:" + (0 until fpRow.length).map(fpRow.getString).mkString(":")
-      StreamGuard.ensure(path, fp) {
-        val in = s"$path/in"
+      val path = StreamGuard.ensure("q264_stream_dedup", dir, "v1",
+          ev.select("user_id", "event_type", "ts")) { path =>
         val spanDays = (bRow.getLong(1) - bRow.getLong(0)) / 86400000L + 2L
         val halfPred = expr("unix_millis(ts)") * 2 <
           lit(bRow.getLong(0) + bRow.getLong(1))
-        def runOnce(): Unit = StreamGuard.await(
-          graft.streaming.StreamingIngest.dedupStream(
-              s.readStream.schema(ev.schema).parquet(in),
+        StreamGuard.streamDrops(path, ev.where(halfPred).coalesce(1),
+            ev.where(!halfPred).coalesce(1)) { in =>
+          graft.streaming.StreamingIngest.dedupStream(in,
               tsCol = "ts", keys = Seq("user_id", "event_type", "day"),
               slack = s"$spanDays days")
             .select(col("user_id"), col("event_type"), col("day"))
@@ -595,11 +552,8 @@ object OpsQueries {
             .option("path", s"$path/out")
             .option("checkpointLocation", s"$path/ckpt")
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start())
-        ev.where(halfPred).coalesce(1).write.mode("append").parquet(in)
-        runOnce()
-        ev.where(!halfPred).coalesce(1).write.mode("append").parquet(in)
-        runOnce()
+            .start()
+        }
       }
       s.read.parquet(s"$path/out")
         .groupBy(col("user_id"), col("event_type"), col("day"))

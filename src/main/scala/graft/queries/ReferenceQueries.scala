@@ -126,27 +126,17 @@ object ReferenceQueries {
       val updates = ev.where(col("event_id") % 3 === 0)
         .withColumn("event_type", lit("updated"))
         .withColumn("value", col("value") * 2)
-      val path = "target/q259_stream_upsert/" + new java.io.File(dir).getName
-      val fpRow = ev.agg(
-        count(lit(1)).cast("string").as("c"),
-        bit_xor(xxhash64(col("event_id"), col("ts"), col("event_type"),
-          col("value"))).cast("string").as("h")).collect()(0)
-      val fp = "v1:" + (0 until fpRow.length).map(fpRow.getString).mkString(":")
-      StreamGuard.ensure(path, fp) {
-        val in = s"$path/in"
-        def runOnce(): Unit = StreamGuard.await(
-          graft.streaming.StreamingIngest.upsertEachBatch(
-            s.readStream.schema(base.schema).parquet(in),
-            targetPath = s"$path/store", keys = Seq("event_id"),
-            checkpoint = s"$path/ckpt"))
+      val path = StreamGuard.ensure("q259_stream_upsert", dir, "v1",
+          ev.select("event_id", "ts", "event_type", "value")) { path =>
         // one file per drop: updates must arrive AFTER the base run
         // completes (last-writer-wins is an ORDER contract — the
         // q250 single-file-per-drop discipline)
-        base.coalesce(1).write.mode("append").parquet(in)
-        runOnce()
-        updates.select(base.columns.map(col).toSeq: _*)
-          .coalesce(1).write.mode("append").parquet(in)
-        runOnce()
+        StreamGuard.streamDrops(path, base.coalesce(1),
+            updates.select(base.columns.map(col).toSeq: _*).coalesce(1)) { in =>
+          graft.streaming.StreamingIngest.upsertEachBatch(in,
+            targetPath = s"$path/store", keys = Seq("event_id"),
+            checkpoint = s"$path/ckpt")
+        }
       }
       // empty-fixture degenerate case: zero batches commit no store —
       // degrade to the schema-matched empty frame (the marker is fine

@@ -457,24 +457,14 @@ object RelationalQueries {
     // distinct the oracle recomputes (HLL p=12, σ≈1.6%).
     "q253_streamed_distinct_parity" -> ((s, dir) => {
       val ev = t(s, dir, "events").select(col("event_id"), col("user_id"))
-      val path = "target/q253_stream_hll/" + new java.io.File(dir).getName
-      val fpRow = ev.agg(
-        count(lit(1)).cast("string").as("c"),
-        bit_xor(xxhash64(col("event_id"), col("user_id")))
-          .cast("string").as("h")).collect()(0)
-      val fp = "v1:" + (0 until fpRow.length).map(fpRow.getString).mkString(":")
-      StreamGuard.ensure(path, fp) {
+      val path = StreamGuard.ensure("q253_stream_hll", dir, "v1", ev) { path =>
         import s.implicits._
-        val in = s"$path/in"
         val tracker = new graft.streaming.StreamingIngest.DistinctTracker
-        def runOnce(): Unit = StreamGuard.await(
-          graft.streaming.StreamingIngest.trackDistinct(
-            s.readStream.schema(ev.schema).parquet(in), "user_id",
-            s"$path/ckpt", tracker))
-        ev.where(col("event_id") % 2 === 0).write.mode("append").parquet(in)
-        runOnce()
-        ev.where(col("event_id") % 2 === 1).write.mode("append").parquet(in)
-        runOnce()
+        StreamGuard.streamDrops(path, ev.where(col("event_id") % 2 === 0),
+            ev.where(col("event_id") % 2 === 1)) { in =>
+          graft.streaming.StreamingIngest.trackDistinct(in, "user_id",
+            s"$path/ckpt", tracker)
+        }
         val batchRegs = ev.agg(call_function("graft_hll", col("user_id")))
           .head.getAs[Array[Byte]](0)
         Seq((tracker.estimate,
@@ -505,27 +495,17 @@ object RelationalQueries {
     // stays inert and the oracle needs no clamp arm.
     "q254_streamed_quantiles_parity" -> ((s, dir) => {
       val ev = t(s, dir, "events").select(col("event_id"), col("value"))
-      val path = "target/q254_stream_quant/" + new java.io.File(dir).getName
-      val fpRow = ev.agg(
-        count(lit(1)).cast("string").as("c"),
-        bit_xor(xxhash64(col("event_id"), col("value")))
-          .cast("string").as("h")).collect()(0)
-      val fp = "v1:" + (0 until fpRow.length).map(fpRow.getString).mkString(":")
-      StreamGuard.ensure(path, fp) {
+      val path = StreamGuard.ensure("q254_stream_quant", dir, "v1", ev) { path =>
         import s.implicits._
-        val in = s"$path/in"
         val dom = ev.select(floor(col("value") * 100).cast("long").as("c"))
           .agg(min("c").as("lo"), max("c").as("hi")).head
         val tracker = new graft.streaming.StreamingIngest.QuantileTracker(
           lo = dom.getLong(0), hi = dom.getLong(1))
-        def runOnce(): Unit = StreamGuard.await(
-          graft.streaming.StreamingIngest.trackQuantiles(
-            s.readStream.schema(ev.schema).parquet(in), "value",
-            s"$path/ckpt", tracker))
-        ev.where(col("event_id") % 2 === 0).write.mode("append").parquet(in)
-        runOnce()
-        ev.where(col("event_id") % 2 === 1).write.mode("append").parquet(in)
-        runOnce()
+        StreamGuard.streamDrops(path, ev.where(col("event_id") % 2 === 0),
+            ev.where(col("event_id") % 2 === 1)) { in =>
+          graft.streaming.StreamingIngest.trackQuantiles(in, "value",
+            s"$path/ckpt", tracker)
+        }
         Seq((tracker.count, tracker.lo, tracker.hi,
             tracker.quantile(50).get, tracker.quantile(90).get,
             tracker.quantile(99).get))

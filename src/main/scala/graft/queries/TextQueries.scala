@@ -377,27 +377,15 @@ object TextQueries {
     "q252_streamed_heavy_hitters_parity" -> ((s, dir) => {
       val streamSide = docs(s, dir).select(col("doc_id"), col("text"))
         .where(col("doc_id") >= 250)
-      val path = "target/q252_stream_hh/" + new java.io.File(dir).getName
-      val fpRow = streamSide.agg(
-        count(lit(1)).cast("string").as("c"),
-        bit_xor(xxhash64(col("doc_id"), col("text"))).cast("string").as("h"))
-        .collect()(0)
-      val fp = "v1:" + (0 until fpRow.length).map(fpRow.getString).mkString(":")
-      StreamGuard.ensure(path, fp) {
+      val path = StreamGuard.ensure("q252_stream_hh", dir, "v1", streamSide) { path =>
         import s.implicits._
-        val in = s"$path/in"
         val tracker =
           new graft.streaming.StreamingIngest.HeavyHitterTracker(k = 20)
-        def runOnce(): Unit = StreamGuard.await(
-          graft.streaming.StreamingIngest.trackHeavyHitters(
-            s.readStream.schema(streamSide.schema).parquet(in),
-            "text", 20, s"$path/ckpt", tracker))
-        streamSide.where(col("doc_id") % 2 === 0)
-          .write.mode("append").parquet(in)
-        runOnce()
-        streamSide.where(col("doc_id") % 2 === 1)
-          .write.mode("append").parquet(in)
-        runOnce()
+        StreamGuard.streamDrops(path, streamSide.where(col("doc_id") % 2 === 0),
+            streamSide.where(col("doc_id") % 2 === 1)) { in =>
+          graft.streaming.StreamingIngest.trackHeavyHitters(in,
+            "text", 20, s"$path/ckpt", tracker)
+        }
         // probe the restart-spanning grid at the exact global top-20
         // (k/limit-bounded collect — 20 rows)
         val top = streamSide

@@ -69,7 +69,7 @@ object Memo {
 
   /** Fold of (name, length, mtime) over `path` itself when it is a file,
     * else over its top-level `*.parquet` files. */
-  private def stamp(path: String): Long = {
+  private[graft] def stamp(path: String): Long = {
     val f = new java.io.File(
       if (path.startsWith("file:"))
         scala.util.Try(new java.net.URI(path).getPath).getOrElse(path.stripPrefix("file:"))

@@ -81,6 +81,24 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.minWithRetryCpu(() => it.next()) == ((-1.0, -1.0)))
   }
 
+  test("a sample during which the setup count moved is not the recorded sample") {
+    var setups = 0L
+    var calls = 0
+    // the first sample runs a one-time setup and is (implausibly) the
+    // fastest: recorded, it would win the min; it must be retaken
+    val sample = () => {
+      calls += 1
+      if (calls == 1) { setups += 1; Some((0.5, 0.5)) } else Some((1.0, 2.0))
+    }
+    assert(Bench.minWithRetryCpu(Bench.withoutSetup(sample, () => setups))
+      == ((1.0, 2.0)))
+    assert(calls == 3)
+    // a failed sample is a failure either way: not retaken
+    var failedCalls = 0
+    val failing = () => { failedCalls += 1; setups += 1; None }
+    assert(Bench.withoutSetup(failing, () => setups)().isEmpty && failedCalls == 1)
+  }
+
   test("committed-record parse: queries map and sf, empty on shape surprises") {
     val rec = """{"queries":{"q01_a":0.44,"q02_b":12.00},"cpu":{"q01_a":3.10},""" +
       """"n_failed":0,"metric":"total","value":12.44,"unit":"sec","sf":"sf0.1"}"""

@@ -86,30 +86,6 @@ class ExtensionsSpec extends SparkSpec {
     assert(r.getDouble(1) == 11.0)
   }
 
-  test("CentroidAggregator: typed and udaf-registered paths agree exactly") {
-    val data = Seq(
-      (0, Array(1.0f, 2.0f)), (0, Array(3.0f, 4.0f)), // centroid (2, 3)
-      (1, Array(10.0f, 20.0f)))                        // centroid (10, 20)
-      .toDF("label", "embedding")
-    // untyped path: Aggregator wrapped as a UDAF, usable from SQL
-    spark.udf.register("graft_centroid", udaf(graft.functions.CentroidAggregator))
-    data.createOrReplaceTempView("cent_in")
-    val viaSql = spark.sql(
-      "SELECT label, graft_centroid(embedding) AS c FROM cent_in GROUP BY label ORDER BY label")
-      .as[(Int, Seq[Double])].collect().toSeq
-    assert(viaSql == Seq((0, Seq(2.0, 3.0)), (1, Seq(10.0, 20.0))))
-    // typed path
-    import org.apache.spark.sql.Encoders
-    val typed = data.as[(Int, Array[Float])](
-        Encoders.tuple(Encoders.scalaInt,
-          org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Float]]()))
-      .groupByKey(_._1)
-      .mapValues(_._2)
-      .agg(graft.functions.CentroidAggregator.toColumn)
-      .collect().toMap
-    assert(typed(0).toSeq == Seq(2.0, 3.0) && typed(1).toSeq == Seq(10.0, 20.0))
-  }
-
   test("graft_approx_distinct: partial-merge associativity — estimate is partitioning-invariant") {
     import graft.functions.HllSketchAgg
     // 40k values, 10k distinct, skewed repeats
