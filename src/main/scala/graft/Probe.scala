@@ -23,16 +23,18 @@ object Probe {
                   wallMs: Long, taskMs: Long, cpuMs: Long,
                   shRead: Long, shWrite: Long, records: Long)
     val stages = scala.collection.mutable.ArrayBuffer.empty[St]
-    var currentJob = -1
+    // stage → job from each job's own stage list: under AQE jobs
+    // overlap, so "the last job started" is not the stage's job
+    val jobOf = scala.collection.concurrent.TrieMap.empty[Int, Int]
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
-        currentJob = j.jobId
+        j.stageIds.foreach(jobOf.putIfAbsent(_, j.jobId))
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
         val si = sc.stageInfo
         val wall = (for {s <- si.submissionTime; c <- si.completionTime}
           yield c - s).getOrElse(-1L)
         val m = si.taskMetrics
-        stages += St(currentJob, si.stageId,
+        stages += St(jobOf.getOrElse(si.stageId, -1), si.stageId,
           si.name.takeWhile(_ != '\n').take(60), si.numTasks, wall,
           m.executorRunTime, m.executorCpuTime / 1000000,
           m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten,

@@ -1,8 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.DataFrame
 
 /** Multi-source BFS hop distance — the "distance to a trusted seed
   * set" signal (link-quality curation ranks pages by hop distance from
@@ -20,20 +18,17 @@ import org.apache.spark.storage.StorageLevel
   *    hops of a seed and `Inf` beyond (the GraphFrames
   *    shortestPaths/maxIter contract).
   *
-  * Scale shape (same Pregel-relational pattern as [[PageRank]]):
-  *  - adjacency built once, repartitioned by `src`, persisted; every
-  *    round's message join reuses the co-location.
-  *  - per round ONE shuffle moves data: messages aggregate min by
-  *    `dst` with map-side combine; the reached-frontier filter
-  *    (`dist < Inf`) keeps the message volume at reached nodes only.
-  *  - each round's |nodes|-row distance frame is `localCheckpoint`ed
-  *    (the [[Components]] loop discipline): the carry-forward `least`
-  *    references it ALONGSIDE the message join, so an untruncated
-  *    chain doubles the logical plan every round — 2^k subtrees that
-  *    OOM the driver on plan stringification long before execution
-  *    (observed at 14 rounds). Checkpointing is the relational
-  *    equivalent of Pregel's materialized per-superstep vertex state:
-  *    plan size and per-round work stay constant in k.
+  * Scale shape: the [[CsrGraph]] kernel, as for [[PageRank.run]]. One
+  * round ships each node's distance to its neighbours, min-combined
+  * per destination map-side (at most |nodes| values per partition in
+  * ONE shuffle), and the receiver takes
+  * dist'(v) = min(dist₀(v), 1 + min_{u~v} dist(u)). That equals the
+  * update above for every BFS state: a non-seed node reached in k
+  * hops has a neighbour reached in k − 1 and none in fewer, so
+  * carrying dist(v) forward adds nothing to the minimum. A round's
+  * state thus depends on its messages and the seed floor only, and no
+  * round carries the previous state through its shuffle. Cache
+  * contract as in [[PageRank]].
   */
 object Bfs {
 
@@ -43,38 +38,19 @@ object Bfs {
 
   /** Hop distances after `iters` rounds over the UNDIRECTED graph
     * `edges` (src, dst) from `seeds` (single column `node`). Returns
-    * (node, dist) for every node in the edge list; unreached nodes
-    * carry dist = [[Inf]]. */
+    * (node, dist) for every node in the edge list, persisted (cache
+    * contract in [[PageRank]]); unreached nodes carry dist = [[Inf]]. */
   def run(edges: DataFrame, seeds: DataFrame, iters: Int,
-          parts: Int = 0): DataFrame = {
+          parts: Int = 0): DataFrame =
+    CsrGraph.once(edges, parts)(run(_, seeds, iters))
+
+  /** [[run]] on a prepared graph. Lazy; persists nothing. */
+  def run(g: CsrGraph, seeds: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val bp = if (parts > 0) parts
-      else LoopSizing.partitions(edges.sparkSession, 2L * edges.count())
-    val adj = edges.select(col("src"), col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(bp, col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = adj.select(col("src").as("node")).distinct()
-    val d0 = nodes
-      .join(broadcast(seeds.select(col("node")).distinct()
-        .withColumn("zero", lit(0L))), Seq("node"), "left")
-      .select(col("node"), coalesce(col("zero"), lit(Inf)).as("dist"))
-      .localCheckpoint()
-    (1 to iters).foldLeft(d0) { (d, i) =>
-      val msgs = adj
-        .join(d.where(col("dist") < Inf).withColumnRenamed("node", "src"), "src")
-        .groupBy(col("dst").as("node"))
-        .agg((min(col("dist")) + 1L).as("md"))
-      val next = d.join(msgs, Seq("node"), "left")
-        .select(col("node"),
-          least(col("dist"), coalesce(col("md"), lit(Inf))).as("dist"))
-      // every-other-round truncation: the odd rounds persist (lazy —
-      // the state's two references per round still compute it once)
-      // instead of paying an eager checkpoint job, so plan depth stays
-      // bounded at two rounds' subtrees while the loop schedules half
-      // the materialization jobs
-      if (i % 2 == 0) next.localCheckpoint() else next.persist()
-    }
+    val d0 = g.mark(seeds).map(_.map(s => if (s == 1L) 0L else Inf))
+    g.frame(g.propagate(d0, d0, iters, min = true)((d, _) => d)(
+      (floor, md) => if (md >= Inf) floor else math.min(floor, md + 1)),
+      "dist", withDeg = false)
   }
 
   /** DuckDB rendering: the same rounds unrolled as CTEs over caller-

@@ -7,27 +7,29 @@ import org.apache.spark.sql.SparkSession
   * from a constant tuned for one deployment).
   *
   * Why not the session default: a Pregel-style loop reuses its
-  * persisted adjacency every round, so the adjacency's partition count
-  * sets the width of EVERY per-round join/aggregate stage. At the
-  * session's 32 (= core count) on a sub-million-row graph, each round
-  * schedules 32 tasks whose per-task fixed cost (dispatch, codegen
-  * lookup, shuffle writer setup) dwarfs its ~20k-row compute — measured
-  * on q112 (587k symmetrized edges, 3 rounds): 32 partitions = 3.97
-  * s/run with 106 s of task time; 4 partitions = 1.73 s/run with ~16 s
-  * of task time, identical results. Sizing by rows keeps partitions
-  * ~work-proportional at every scale: small graphs collapse to a few
-  * meaty tasks, large graphs grow partitions linearly until the
-  * session width (the cluster-size knob, SPARK_GRAFT_CPUS here) caps
-  * them. AQE cannot do this for us: the persisted adjacency's
-  * REPARTITION_BY_COL width is user-specified, and the downstream
-  * ENSURE_REQUIREMENTS exchanges align to it.
+  * partitioned graph every round — the [[CsrGraph]] blocks, or a
+  * persisted src-partitioned adjacency in the relational loops — so the
+  * graph's partition count sets the width of EVERY per-round stage. At
+  * the session's 32 (= core count) on a sub-million-row graph, each
+  * round schedules 32 tasks whose per-task fixed cost (dispatch, shuffle
+  * writer setup, codegen lookup) dwarfs its ~20k-row compute. Sizing by
+  * rows keeps partitions ~work-proportional at every scale: small
+  * graphs collapse to a few meaty tasks, large graphs grow partitions
+  * linearly until the session width (the cluster-size knob,
+  * SPARK_GRAFT_CPUS here) caps them. For the CSR kernel the count also
+  * bounds a round's traffic: each node receives at most one combined
+  * value per partition. AQE cannot choose it: the graph's width is
+  * fixed when it is built, and every round's exchange aligns to it.
   *
   * [[Components.connectedComponents]] pioneered the pattern (500k
   * rows/partition since round 9); the graph family now shares one
-  * implementation. Target default 150k rows: the q112 sweep put the
-  * optimum at 4–8 partitions for 587k rows (100–150k rows each), and
-  * a round's join+combine over 150k rows (~30–60 ms) comfortably
-  * amortizes task fixed costs without starving parallelism.
+  * implementation. Target default 150k rows, set on q112 (587k
+  * symmetrized edges) when it still ran as a relational loop: 32
+  * partitions took 3.97 s/run, 4 took 1.73 s/run, and the optimum sat
+  * at 4–8 partitions (100–150k rows each). The CSR kernel that replaced
+  * that loop keeps the sizing; its rounds are cheap enough (~40–60 ms
+  * a round at 4 partitions) that the count now matters mostly for the
+  * relational loops.
   */
 object LoopSizing {
 

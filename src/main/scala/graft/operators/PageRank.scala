@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic integer PageRank — the link-analysis quality signal a
@@ -30,40 +31,37 @@ import org.apache.spark.sql.functions._
   *    (share = danglingMass div n, truncation loss ≤ n-1 units of
   *    10^-12 mass per round).
   *
-  * Scale shape (the Pregel/GraphX message-passing pattern expressed
-  * relationally, which is how GraphFrames runs it too):
-  *
-  *  - the adjacency list is built once, repartitioned by `src`, and
-  *    persisted: every iteration's message join reuses the same
-  *    co-location instead of re-deriving the edge list from the fact
-  *    join (at 100 TB the edge build is itself a big join — paying it
-  *    k times would dominate the loop).
-  *  - per iteration exactly ONE shuffle moves data: messages aggregate
-  *    by `dst` with map-side combine (contributions are summed longs),
-  *    so the exchange carries at most |nodes| rows per map partition.
-  *    The rank⋈adjacency join is co-partitioned on `src` by the
-  *    persisted layout.
-  *  - degree rides inside the rank frame (node, deg, rank), so the
-  *    contribution `rank div deg` is a row-local projection — no
-  *    second join per iteration.
-  *  - n (node count) enters as a broadcast 1-row aggregate (the q77
-  *    scalar-join idiom), keeping the whole k-iteration computation
-  *    one lazy Catalyst plan with no driver-side collect.
+  * Scale shape. [[run]] and [[runTrust]] run on a prepared
+  * [[CsrGraph]] (the Pregel layout: symmetrized once, hash-partitioned
+  * by node into CSR blocks, rank state co-partitioned in primitive
+  * arrays). One round walks each block, sums `rank div deg` per
+  * destination map-side, ships at most |nodes| values per partition in
+  * ONE shuffle and zips the sums back onto the blocks — no per-round
+  * join or sort over the adjacency, nothing broadcast. The node count
+  * n is the graph's, so the uniform start and the damping base are
+  * plain constants. [[runWeighted]], [[runDirected]] and [[runHits]]
+  * keep their own relational loops (persisted src-partitioned
+  * adjacency, one message join and map-side-combined aggregate per
+  * round).
   *
   * Convergence at fixed iterations is the production contract for
   * ranking-as-a-feature (GraphFrames defaults to maxIter rather than
   * tolerance for the same reason): the judge-facing differential
   * oracle unrolls the same iterations as CTEs.
   *
-  * CACHE CONTRACT: every run* variant `persist()`s its adjacency and
-  * degree/base frames — they are re-read each iteration and by the
-  * caller's (lazy) result plan, so they cannot be unpersisted inside
-  * the operator. The CALLER owns the release once the result is
-  * consumed: Verify/Bench call `spark.catalog.clearCache()` after
-  * every query; library users should do the same (or track
-  * `sparkSession.sharedState.cacheManager`) between unrelated jobs.
-  * [[graft.operators.Bfs]] and the q118 selection pipeline share this
-  * contract.
+  * CACHE CONTRACT.
+  *  - `run(g: CsrGraph, ...)`/`runTrust(g, ...)` return a lazy frame
+  *    over the graph's blocks and persist nothing; the graph's owner
+  *    (the caller, or [[graft.sources.Memo]]) releases the blocks.
+  *  - The edge-list overloads build a throwaway graph, release it, and
+  *    return their result persisted in the session cache
+  *    ([[CsrGraph.once]]): `spark.catalog.clearCache()` (what
+  *    Verify/Bench call after every query) or `unpersist()` on the
+  *    result releases it. [[Bfs.run]] has the same two forms.
+  *  - [[runWeighted]], [[runDirected]] and [[runHits]] `persist()`
+  *    their adjacency and degree/base frames, which their lazy result
+  *    re-reads; the caller releases them with `clearCache()`. The q118
+  *    selection pipeline shares this contract.
   */
 object PageRank {
 
@@ -77,23 +75,17 @@ object PageRank {
 
   /** Ranks after `iters` synchronous updates over the UNDIRECTED graph
     * given by `edges` (src, dst) — both directions are added here, so
-    * pass each undirected edge once. Returns (node, deg, rank). */
-  def run(edges: DataFrame, iters: Int, parts: Int = 0): DataFrame = {
+    * pass each undirected edge once. Returns (node, deg, rank),
+    * persisted (cache contract above). */
+  def run(edges: DataFrame, iters: Int, parts: Int = 0): DataFrame =
+    CsrGraph.once(edges, parts)(run(_, iters))
+
+  /** [[run]] on a prepared graph: uniform start `Mass div n`, base
+    * `(15 · (Mass div n)) div 100`. Lazy; persists nothing. */
+  def run(g: CsrGraph, iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val (adj, deg) = adjacency(edges, parts)
-    val n = deg.agg(count(lit(1)).as("n"))
-    // (node, deg, rank0, base): the scalar n is broadcast-joined ONCE —
-    // the uniform start and the damping base term become row-local
-    // columns, and the frame is cached so every iteration starts from
-    // the |nodes|-row cache instead of re-aggregating adj (the naive
-    // fold re-ran the degree aggregation and the scalar broadcast per
-    // iteration: measured 3.05 s → this shape at sf0.1).
-    val degBase = deg.crossJoin(broadcast(n))
-      .select(col("node"), col("deg"),
-        expr(s"${Mass}L div n").as("rank"),
-        expr(s"(15 * (${Mass}L div n)) div 100").as("base"))
-      .persist()
-    iterate(adj, degBase, iters)
+    val r0 = Mass / math.max(g.nodes, 1L)
+    ranks(g, g.fill(r0), g.fill((15 * r0) / 100), iters)
   }
 
   /** TrustRank (Gyöngyi et al. 2004): the same damped propagation with
@@ -101,26 +93,27 @@ object PageRank {
     * of spread uniformly — rank becomes "trust flowed from the
     * whitelist through the link structure", 0 for nodes unreachable
     * from any seed. Identical iteration machinery and scale shape as
-    * [[run]]; only the (rank0, base) columns differ: Mass splits over
-    * the seed nodes present in the graph. */
+    * [[run]]; only the start and base differ: Mass splits over the
+    * seed nodes present in the graph. */
   def runTrust(edges: DataFrame, seeds: DataFrame, iters: Int,
-               parts: Int = 0): DataFrame = {
+               parts: Int = 0): DataFrame =
+    CsrGraph.once(edges, parts)(runTrust(_, seeds, iters))
+
+  /** [[runTrust]] on a prepared graph. One job counts the seeds present
+    * (the start needs it); the result is lazy and persists nothing. */
+  def runTrust(g: CsrGraph, seeds: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val (adj, deg) = adjacency(edges, parts)
-    val seedSet = seeds.select(col("node")).distinct()
-    val ns = deg.join(broadcast(seedSet), Seq("node"), "left_semi")
-      .agg(count(lit(1)).as("ns"))
-    val degBase = deg
-      .join(broadcast(seedSet.withColumn("is_seed", lit(1))), Seq("node"), "left")
-      .crossJoin(broadcast(ns))
-      .select(col("node"), col("deg"),
-        when(col("is_seed") === 1, expr(s"${Mass}L div ns"))
-          .otherwise(lit(0L)).as("rank"),
-        when(col("is_seed") === 1, expr(s"(15 * (${Mass}L div ns)) div 100"))
-          .otherwise(lit(0L)).as("base"))
-      .persist()
-    iterate(adj, degBase, iters)
+    val seed = g.mark(seeds)
+    val r0 = Mass / math.max(seed.map(_.sum).fold(0L)(_ + _), 1L)
+    ranks(g, seed.map(_.map(_ * r0)), seed.map(_.map(_ * ((15 * r0) / 100))), iters)
   }
+
+  /** The shared update: r'(v) = (85 · Σ_{u~v} r(u) div deg(u)) div 100
+    * + base(v). */
+  private def ranks(g: CsrGraph, init: RDD[Array[Long]], base: RDD[Array[Long]],
+                    iters: Int): DataFrame =
+    g.frame(g.propagate(init, base, iters, min = false)((r, deg) => r / deg)(
+      (b, insum) => (DampNum * insum) / DampDen + b), "rank", withDeg = true)
 
   /** Weighted PageRank: edges carry an integer multiplicity `w` (link
     * count between hosts in the web-graph reading) and a node's rank
@@ -356,8 +349,8 @@ object PageRank {
     val adjD = adjS.repartition(hp, col("dst")).persist()
     val nodes = adjS.select(col("src").as("node"))
       .unionByName(adjS.select(col("dst").as("node"))).distinct().persist()
-    // Lineage: each half-step localCheckpoints (the Bfs.scala pattern —
-    // without truncation Catalyst re-analysis grows 2^(2·rounds);
+    // Lineage: each half-step localCheckpoints (the Components loop
+    // discipline — without truncation Catalyst re-analysis grows 2^(2·rounds);
     // measured 76.8 → 4.9 s at sf0.1 when first introduced).
     //
     // Round-9 fusion (the q125 job-count floor was scheduling, not
@@ -436,41 +429,6 @@ object PageRank {
        |pr AS (SELECT node, wtot, rank FROM r$iters)""".stripMargin
   }
 
-  /** Symmetrized adjacency (persisted, src-partitioned) + degrees.
-    * Partition width is size-derived ([[LoopSizing]]): the adjacency's
-    * width sets every round's stage width, so it follows the edge
-    * count, not the session default (r14 measurement at the
-    * LoopSizing scaladoc). */
-  private def adjacency(edges: DataFrame,
-                        parts: Int = 0): (DataFrame, DataFrame) = {
-    val p = if (parts > 0) parts
-      else LoopSizing.partitions(edges.sparkSession, 2L * edges.count())
-    val adj = edges.select(col("src"), col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(p, col("src"))
-      .persist()
-    (adj, adj.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")))
-  }
-
-  /** The shared synchronous-update loop over a cached (node, deg,
-    * rank0, base) frame. */
-  private def iterate(adj: DataFrame, degBase: DataFrame,
-                      iters: Int): DataFrame = {
-    val r0 = degBase.select(col("node"), col("deg"), col("rank"))
-    (1 to iters).foldLeft(r0) { (r, _) =>
-      // contribution projected BEFORE the message join: the exchange
-      // carries (src, contrib) only, never the full rank frame
-      val contribs = r.select(col("node").as("src"),
-        expr("rank div deg").as("contrib"))
-      val in = adj.join(contribs, "src")
-        .groupBy(col("dst").as("node")).agg(sum("contrib").as("insum"))
-      degBase.join(in, Seq("node"), "left")
-        .select(col("node"), col("deg"),
-          (expr(s"($DampNum * coalesce(insum, 0L)) div $DampDen") +
-            col("base")).as("rank"))
-    }
-  }
-
   /** DuckDB rendering: the same iterations unrolled as CTEs over an
     * edge CTE named `e` with columns (src, dst) — the caller prepends
     * `WITH e AS MATERIALIZED (...)`. Ends in CTE `pr` = (node, deg,
@@ -507,8 +465,8 @@ object PageRank {
        |pr AS (SELECT node, deg, rank FROM r$iters)""".stripMargin
 
   /** The shared unrolled update steps over the `db` = (node, deg,
-    * rank0, base) CTE, mirroring [[iterate]]: r0 projects db, each
-    * round is message-min join + damped base add. */
+    * rank0, base) CTE, mirroring [[ranks]]: r0 projects db, each
+    * round is message-sum join + damped base add. */
   private def stepCtes(iters: Int): String = {
     def step(i: Int): String =
       s"""m$i AS (SELECT a.dst AS node, CAST(sum(r.rank // r.deg) AS BIGINT) AS insum

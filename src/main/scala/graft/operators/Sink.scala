@@ -11,14 +11,19 @@ import org.apache.spark.sql.functions._
   * partitions and row-group min/max statistics skip within them. */
 object Sink {
 
-  /** Write `df` date-partitioned by `tsCol` (partition column `dt`),
-    * clustered so each output partition is one sorted file run. */
+  /** The date partition column of the time-partitioned sink:
+    * `to_date(tsCol)` in the session time zone. */
+  val DateCol = "dt"
+
+  /** Write `df` date-partitioned by `tsCol` (partition column
+    * [[DateCol]]), clustered so each output partition is one sorted file
+    * run. */
   def writeTimePartitioned(df: DataFrame, path: String, tsCol: String): Unit =
-    df.withColumn("dt", to_date(col(tsCol)))
-      .repartition(col("dt"))
-      .sortWithinPartitions(col("dt"), col(tsCol))
+    df.withColumn(DateCol, to_date(col(tsCol)))
+      .repartition(col(DateCol))
+      .sortWithinPartitions(col(DateCol), col(tsCol))
       .write.mode("overwrite")
-      .partitionBy("dt")
+      .partitionBy(DateCol)
       .parquet(path)
 
   /** Training-shard write — the PHYSICAL end of the q116/q118 shard
@@ -109,17 +114,17 @@ object Sink {
   def upsertTimePartitioned(spark: org.apache.spark.sql.SparkSession,
                             targetPath: String, updates: DataFrame,
                             keys: Seq[String], tsCol: String): Unit = {
-    val up = updates.withColumn("dt", to_date(col(tsCol)))
-    val touched = up.select("dt").distinct().collect().map(_.getDate(0)).toSeq
+    val up = updates.withColumn(DateCol, to_date(col(tsCol)))
+    val touched = up.select(DateCol).distinct().collect().map(_.getDate(0)).toSeq
     val existing = spark.read.parquet(targetPath)
-      .where(col("dt").isin(touched: _*))
+      .where(col(DateCol).isin(touched: _*))
     val merged = Merge.upsert(existing, up.select(existing.columns.map(col).toSeq: _*), keys)
       .persist()
     merged.count() // materialize before overwriting source partitions
     val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try
-      merged.write.mode("overwrite").partitionBy("dt").parquet(targetPath)
+      merged.write.mode("overwrite").partitionBy(DateCol).parquet(targetPath)
     finally {
       merged.unpersist()
       prev match {

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import scala.jdk.CollectionConverters._
@@ -7,7 +8,8 @@ import scala.jdk.CollectionConverters._
 /** The engine's one store for values reused ACROSS queries: the
   * reference builds its `posts` relation once per DAG run and every
   * later step reads that one table; the engine's shared frames (posts
-  * proxy, title chain, purchase/kNN graphs, q118's selection manifest)
+  * proxy, title chain, purchase/kNN edge lists, the purchase
+  * [[graft.operators.CsrGraph]], q118's selection manifest)
   * and driver-held models (coarse/PQ centroids, BPE merges, plane and
   * loop-partition counts, row-group counts) are computed once the same
   * way.
@@ -17,10 +19,11 @@ import scala.jdk.CollectionConverters._
   *    fixture regenerated at the same path is a miss, never a stale hit.
   *  - It is dropped when its session's SparkContext is stopped, without
   *    any call into that context (stopping it freed the blocks).
-  *  - When it is replaced, it releases every frame its value holds (a
-  *    frame, or frames inside a case class, tuple or collection): the
+  *  - When it is replaced, it releases every frame and RDD its value
+  *    holds (directly, or inside a case class, tuple or collection): a
   *    frame's persisted copy and every `localCheckpoint` RDD in its
-  *    plan. The memo OWNS those frames.
+  *    plan, an RDD's persisted blocks (a CsrGraph's). The memo OWNS
+  *    those values.
   *
   * The condition: a fixture is a FLAT directory of top-level `*.parquet`
   * files (what perfbench/gen.py, scripts/make_sf1.py and
@@ -35,8 +38,9 @@ import scala.jdk.CollectionConverters._
   * build may itself call the memo (q112's loop sizing reads the
   * memoized purchase graph). Frames held here survive
   * `spark.catalog.clearCache()` only as far as their storage does:
-  * `localCheckpoint` blocks are RDD-level and survive it, `persist`ed
-  * frames are deregistered by it (PostsProxy re-persists on access).
+  * `localCheckpoint` blocks and persisted RDDs are RDD-level and
+  * survive it, `persist`ed frames are deregistered by it (PostsProxy
+  * re-persists on access).
   */
 object Memo {
 
@@ -85,20 +89,23 @@ object Memo {
     }
   }
 
-  private def frames(v: Any): Iterator[Dataset[_]] = v match {
-    case d: Dataset[_] => Iterator(d)
-    case i: Iterable[_] => i.iterator.flatMap(frames)
-    case p: Product => p.productIterator.flatMap(frames)
-    case _ => Iterator.empty
-  }
-
-  private def release(v: Any): Unit = frames(v).foreach { d =>
-    try {
-      d.queryExecution.logical.foreach {
-        case r: LogicalRDD => r.rdd.unpersist(blocking = false)
-        case _ => ()
-      }
-      d.unpersist(blocking = false)
-    } catch { case scala.util.control.NonFatal(_) => () }
+  /** Releases every frame and RDD `v` holds: a frame's persisted copy
+    * and the `localCheckpoint` RDDs in its plan, an RDD's persisted
+    * blocks. */
+  private def release(v: Any): Unit = v match {
+    case d: Dataset[_] =>
+      try {
+        d.queryExecution.logical.foreach {
+          case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+          case _ => ()
+        }
+        d.unpersist(blocking = false)
+      } catch { case scala.util.control.NonFatal(_) => () }
+    case r: RDD[_] =>
+      try r.unpersist(blocking = false)
+      catch { case scala.util.control.NonFatal(_) => () }
+    case i: Iterable[_] => i.foreach(release)
+    case p: Product => p.productIterator.foreach(release)
+    case _ => ()
   }
 }

@@ -16,7 +16,7 @@ import graft.operators.{Incremental, Merge, Transform}
   *  - `incrementalBatch`: the reference's actual semantics — a driver-
   *    scheduled batch loop with a stored high-water mark. This is the
   *    100 TB-friendly default (each run reads only the new range; a
-  *    date-partitioned sink prunes the HWM read to ~30 partitions).
+  *    date-partitioned sink prunes the HWM read to ~31 partitions).
   *  - `readStream`-based helpers: watermarked windowed aggregation,
   *    streaming dedup, stateful sessionization, and a foreachBatch
   *    upsert sink whose per-batch work is exactly `Merge.upsert` —

@@ -70,6 +70,25 @@ class MemoSpec extends SparkSpec {
     p2.unpersist()
   }
 
+  test("a rewrite releases the RDDs a value holds (a CsrGraph's blocks)") {
+    val d = tmpDir()
+    put(d, "t", rows(10))
+    def held = Memo(spark, d.toString, "rdds") {
+      (graft.operators.CsrGraph(spark.range(1, 20).selectExpr("id AS src", "id + 1 AS dst"), 2),
+        spark.sparkContext.parallelize(1 to 5).persist())
+    }
+    val before = persistentIds
+    val (g1, r1) = held
+    assert(g1.nodes == 20 && r1.count() == 5)
+    assert(persistentIds -- before == Set(g1.blocks.id, r1.id))
+    put(d, "t", rows(1000))
+    val (g2, r2) = held
+    assert(!(g2 eq g1) && g2.nodes == 20)
+    assert((Set(g1.blocks.id, r1.id) & persistentIds).isEmpty, "old entry's RDDs still held")
+    g2.release()
+    r2.unpersist()
+  }
+
   test("two fixture dirs in one session never mix") {
     val (a, b) = (tmpDir(), tmpDir())
     put(a, "t", rows(10))

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, Incremental, LmScore, Merge, Transform}
+import graft.operators.{Dedup, Incremental, LmScore, Merge, Sink, Transform}
 
 /** Operator-level tests: dedup keeper determinism + idempotence, upsert
   * last-writer-wins + idempotence (SURVEY.md §5.3 properties), and the
@@ -86,6 +86,40 @@ class OperatorsSpec extends SparkSpec {
     val cold = Incremental.highWaterMark(empty, "ts", now)
       .head().getTimestamp(0).toInstant.toString
     assert(cold == "2024-02-03T00:00:00Z") // now - 7 days
+  }
+
+  test("highWaterMark prunes a date-partitioned sink to the window's days, same value") {
+    val base = java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get("target"), "hwmsink").toString + "/posts"
+    // 40 days, one post a day at 10:00: 2024-01-01 .. 2024-02-09
+    Sink.writeTimePartitioned(spark.range(40).select(
+        concat(lit("p"), col("id")).as("post_id"),
+        expr("timestamp'2024-01-01 10:00:00' + make_interval(0, 0, 0, CAST(id AS INT))")
+          .as("ts")), base, "ts")
+    def filters(df: org.apache.spark.sql.DataFrame): String =
+      df.queryExecution.executedPlan.toString.linesIterator
+        .find(_.contains("PartitionFilters")).get
+    // the second `now` puts lower at 12:00 of the last stored day: that
+    // day's partition is read and its 10:00 post is cut by the exact
+    // timestamp predicate, so the mark falls back to now - 7 days
+    for (now <- Seq("2024-02-10 00:00:00", "2024-03-10 12:00:00")) {
+      val at = to_timestamp(lit(now))
+      val pruned = Incremental.highWaterMark(spark.read.parquet(base), "ts", at)
+      val unpruned = Incremental.highWaterMark(
+        spark.read.parquet(base).drop(Sink.DateCol), "ts", at)
+      assert(filters(pruned).contains(s"${Sink.DateCol}#"), filters(pruned))
+      assert(filters(unpruned).contains("PartitionFilters: []"), filters(unpruned))
+      assert(pruned.collect().toSeq == unpruned.collect().toSeq, now)
+    }
+    val hwm = Incremental.highWaterMark(spark.read.parquet(base), "ts",
+      to_timestamp(lit("2024-02-10 00:00:00")))
+    // collect() runs hwm's own plan, whose scan metrics are read below
+    assert(hwm.collect()(0).getTimestamp(0).toInstant.toString == "2024-02-09T10:00:00Z")
+    object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val files = Plans.collect(hwm.queryExecution.executedPlan) {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f.metrics("numFiles").value
+    }
+    assert(files == Seq(30L), s"files read: $files") // 2024-01-11 .. 2024-02-09
   }
 
   test("jaccard and shingles basics") {

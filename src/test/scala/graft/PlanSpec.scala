@@ -171,14 +171,15 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("TopKPerKey"), p)
   }
 
-  test("q112: PageRank iterations are map-side-combined equi-joins; scalar n broadcasts") {
+  test("q112: PageRank rounds run on the CSR kernel, not joins") {
     val p = plan("q112_pagerank")
-    // contribution sums must carry partials (map-side combine) so the
-    // per-iteration exchange moves at most |nodes| rows per map task
-    assert(p.contains("partial_sum"), p)
-    // the 1-row node count joins as a broadcast, never a cartesian
-    assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"), p)
-    assert(!p.contains("CartesianProduct"), p)
+    // the rounds are the CsrGraph kernel's RDD lineage; the frame on top
+    // is its (node, deg, rank) rows, and the only Sort is the output order
+    assert(p.contains("Scan ExistingRDD"), p)
+    for (op <- Seq("SortMergeJoin", "BroadcastNestedLoopJoin", "InMemoryTableScan",
+                   "CartesianProduct"))
+      assert(!p.contains(op), s"$op in\n$p")
+    assert(p.linesIterator.count(_.matches("""\(\d+\) Sort\b.*""")) == 1, p)
   }
 
   test("q114: centrality sample runs through TopKPerKeyExec; no cartesian") {
