@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{Bloom, BloomAgg, BloomContainsExpr, CharGramsExpr, CmsAgg, CmsEstExpr, DotProduct, FingerprintExpr, HllSketchAgg, MatVecLong, MergePairExpr, MinHashSignatureExpr, MultiMatchCount, NearestCentroid, ShinglesExpr, SimHashExpr, SqDistLong}
+import graft.functions.{BloomAgg, BloomContainsExpr, CharGramsExpr, CmsAgg, CmsEstExpr, DotProduct, FingerprintExpr, HllRegistersAgg, HllSketchAgg, MatVecLong, MergePairExpr, MinHashSignatureExpr, MultiMatchCount, NearestCentroid, ShinglesExpr, SimHashExpr, SqDistLong}
 
 /** SparkSessionExtensions entry point — enable with
   * `.config("spark.sql.extensions", "graft.GraftExtensions")` (or stack
@@ -12,37 +12,8 @@ import graft.functions.{Bloom, BloomAgg, BloomContainsExpr, CharGramsExpr, CmsAg
   * Column API. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  /** (expr, n) builders where n must be an integer literal — the kernel
-    * bakes n into generated code, so it is pinned at plan time. */
-  private def withLitN(name: String, build: (Expression, Int) => Expression) = (
-    new FunctionIdentifier(name),
-    new ExpressionInfo(classOf[GraftExtensions].getName, name),
-    (children: Seq[Expression]) => {
-      require(children.length == 2, s"$name(x, n) takes two arguments")
-      val n = children(1) match {
-        case e if e.foldable => e.eval() match {
-          case i: Int => i
-          case l: Long =>
-            require(l == l.toInt, s"$name n out of Int range: $l")
-            l.toInt
-          case other => throw new IllegalArgumentException(
-            s"$name n must be an integer literal, got $other")
-        }
-        case _ => throw new IllegalArgumentException(
-          s"$name n must be a literal (pinned at plan time)")
-      }
-      build(children.head, n)
-    })
-
-  private def unary(name: String, build: Expression => Expression) = (
-    new FunctionIdentifier(name),
-    new ExpressionInfo(classOf[GraftExtensions].getName, name),
-    (children: Seq[Expression]) => {
-      require(children.length == 1, s"$name(arr) takes one argument")
-      build(children.head)
-    })
-
-  /** Evaluate a foldable argument as a pinned-at-plan-time Int. */
+  /** Evaluate a foldable argument as a pinned-at-plan-time Int — the
+    * kernels bake it into generated code. */
   private def litInt(name: String, arg: String, e: Expression): Int = e match {
     case f if f.foldable => f.eval() match {
       case i: Int => i
@@ -57,103 +28,67 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    // registers `name(sig)`, documented under `cls`: `build` takes the
+    // argument list apart, one case per accepted arity; any other arity
+    // is rejected
+    def fn(name: String, cls: Class[_], sig: String)
+          (build: PartialFunction[Seq[Expression], Expression]): Unit =
+      ext.injectFunction((
+        new FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name),
+        (args: Seq[Expression]) => build.applyOrElse(args, (_: Seq[Expression]) =>
+          throw new IllegalArgumentException(
+            s"$name$sig: wrong number of arguments (${args.length})"))))
+
     ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
     ext.injectOptimizerRule(_ => graft.plans.TopKFilterPushdown)
-    ext.injectFunction((
-      new FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "graft_dot(arr1, arr2) takes two arguments")
-        DotProduct(children.head, children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_sqdist"),
-      new ExpressionInfo(classOf[SqDistLong].getName, "graft_sqdist"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "graft_sqdist(arr1, arr2) takes two arguments")
-        SqDistLong(children.head, children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_matvec"),
-      new ExpressionInfo(classOf[MatVecLong].getName, "graft_matvec"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          "graft_matvec(vec, matrix) takes two arguments")
-        MatVecLong(children.head, children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_nearest"),
-      new ExpressionInfo(classOf[NearestCentroid].getName, "graft_nearest"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          "graft_nearest(vec, centroids) takes two arguments")
-        NearestCentroid(children.head, children(1))
-      }))
-    // aggregate: the analyzer wraps a bare AggregateFunction in its
+    fn("graft_dot", classOf[DotProduct], "(arr1, arr2)") {
+      case Seq(a, b) => DotProduct(a, b) }
+    fn("graft_sqdist", classOf[SqDistLong], "(arr1, arr2)") {
+      case Seq(a, b) => SqDistLong(a, b) }
+    fn("graft_matvec", classOf[MatVecLong], "(vec, matrix)") {
+      case Seq(v, m) => MatVecLong(v, m) }
+    fn("graft_nearest", classOf[NearestCentroid], "(vec, centroids)") {
+      case Seq(v, c) => NearestCentroid(v, c) }
+    fn("graft_merge_pair", classOf[MergePairExpr], "(toks, l, r)") {
+      case Seq(t, l, r) => MergePairExpr(t, l, r) }
+    fn("graft_multi_count", classOf[MultiMatchCount], "(text, patterns)") {
+      case Seq(t, p) => MultiMatchCount(t, p) }
+    fn("graft_minhash", classOf[MinHashSignatureExpr], "(arr)") {
+      case Seq(x) => MinHashSignatureExpr(x) }
+    fn("graft_simhash", classOf[SimHashExpr], "(arr)") {
+      case Seq(x) => SimHashExpr(x) }
+    fn("graft_fingerprint", classOf[FingerprintExpr], "(arr)") {
+      case Seq(x) => FingerprintExpr(x) }
+    fn("graft_shingles", classOf[ShinglesExpr], "(toks, n)") {
+      case Seq(x, n) => ShinglesExpr(x, litInt("graft_shingles", "n", n)) }
+    fn("graft_chargrams", classOf[CharGramsExpr], "(text, n)") {
+      case Seq(x, n) => CharGramsExpr(x, litInt("graft_chargrams", "n", n)) }
+    fn("graft_bloom_contains", classOf[BloomContainsExpr], "(bloom, key[, m, k])") {
+      case Seq(bf, key) => BloomContainsExpr(bf, key)
+      case Seq(bf, key, m, k) => BloomContainsExpr(bf, key,
+        litInt("graft_bloom_contains", "m", m), litInt("graft_bloom_contains", "k", k))
+    }
+    fn("graft_cms_est", classOf[CmsEstExpr], "(sketch, key[, d, w])") {
+      case Seq(sk, key) => CmsEstExpr(sk, key)
+      case Seq(sk, key, d, w) => CmsEstExpr(sk, key,
+        litInt("graft_cms_est", "d", d), litInt("graft_cms_est", "w", w))
+    }
+    // aggregates: the analyzer wraps a bare AggregateFunction in its
     // AggregateExpression when it appears in an aggregation context
-    ext.injectFunction((
-      new FunctionIdentifier("graft_merge_pair"),
-      new ExpressionInfo(classOf[MergePairExpr].getName, "graft_merge_pair"),
-      (children: Seq[Expression]) => {
-        require(children.length == 3,
-          "graft_merge_pair(toks, l, r) takes three arguments")
-        MergePairExpr(children.head, children(1), children(2))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_multi_count"),
-      new ExpressionInfo(classOf[MultiMatchCount].getName, "graft_multi_count"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          "graft_multi_count(text, patterns) takes two arguments")
-        MultiMatchCount(children.head, children(1))
-      }))
-    ext.injectFunction(unary("graft_approx_distinct", c => HllSketchAgg(c)))
-    ext.injectFunction(unary("graft_hll", c => graft.functions.HllRegistersAgg(c)))
-    ext.injectFunction(unary("graft_minhash", MinHashSignatureExpr))
-    ext.injectFunction(unary("graft_simhash", SimHashExpr))
-    ext.injectFunction(unary("graft_fingerprint", FingerprintExpr))
-    ext.injectFunction(withLitN("graft_shingles", ShinglesExpr))
-    ext.injectFunction(withLitN("graft_chargrams", CharGramsExpr))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_bloom"),
-      new ExpressionInfo(classOf[BloomAgg].getName, "graft_bloom"),
-      (children: Seq[Expression]) => children match {
-        case Seq(key) => BloomAgg(key)
-        case Seq(key, m, k) => BloomAgg(key,
-          litInt("graft_bloom", "m", m), litInt("graft_bloom", "k", k))
-        case _ => throw new IllegalArgumentException(
-          "graft_bloom(key[, m, k]) takes one or three arguments")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_bloom_contains"),
-      new ExpressionInfo(classOf[BloomContainsExpr].getName, "graft_bloom_contains"),
-      (children: Seq[Expression]) => children match {
-        case Seq(bf, key) => BloomContainsExpr(bf, key)
-        case Seq(bf, key, m, k) => BloomContainsExpr(bf, key,
-          litInt("graft_bloom_contains", "m", m),
-          litInt("graft_bloom_contains", "k", k))
-        case _ => throw new IllegalArgumentException(
-          "graft_bloom_contains(bloom, key[, m, k]) takes two or four arguments")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_cms"),
-      new ExpressionInfo(classOf[CmsAgg].getName, "graft_cms"),
-      (children: Seq[Expression]) => children match {
-        case Seq(key) => CmsAgg(key)
-        case Seq(key, d, w) => CmsAgg(key,
-          litInt("graft_cms", "d", d), litInt("graft_cms", "w", w))
-        case _ => throw new IllegalArgumentException(
-          "graft_cms(key[, d, w]) takes one or three arguments")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_cms_est"),
-      new ExpressionInfo(classOf[CmsEstExpr].getName, "graft_cms_est"),
-      (children: Seq[Expression]) => children match {
-        case Seq(sk, key) => CmsEstExpr(sk, key)
-        case Seq(sk, key, d, w) => CmsEstExpr(sk, key,
-          litInt("graft_cms_est", "d", d), litInt("graft_cms_est", "w", w))
-        case _ => throw new IllegalArgumentException(
-          "graft_cms_est(sketch, key[, d, w]) takes two or four arguments")
-      }))
+    fn("graft_approx_distinct", classOf[HllSketchAgg], "(x)") {
+      case Seq(x) => HllSketchAgg(x) }
+    fn("graft_hll", classOf[HllRegistersAgg], "(x)") {
+      case Seq(x) => HllRegistersAgg(x) }
+    fn("graft_bloom", classOf[BloomAgg], "(key[, m, k])") {
+      case Seq(key) => BloomAgg(key)
+      case Seq(key, m, k) => BloomAgg(key,
+        litInt("graft_bloom", "m", m), litInt("graft_bloom", "k", k))
+    }
+    fn("graft_cms", classOf[CmsAgg], "(key[, d, w])") {
+      case Seq(key) => CmsAgg(key)
+      case Seq(key, d, w) => CmsAgg(key,
+        litInt("graft_cms", "d", d), litInt("graft_cms", "w", w))
+    }
   }
 }

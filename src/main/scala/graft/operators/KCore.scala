@@ -74,14 +74,20 @@ object KCore {
   }
 
   /** DuckDB CTE chain mirroring [[run]]; expects `e(u, v)` in scope,
-    * leaves `kcore_out(node, deg, peel_round)`. */
+    * leaves `kcore_out(node, deg, peel_round)`. MATERIALIZED on every
+    * round's `e` and `k` CTE is an evaluation hint, not a change of meaning:
+    * DuckDB inlines a plain CTE at each reference, and each round reads
+    * the previous `k` twice, so the un-materialized chain expands
+    * 2^rounds-fold (at sf0.01 it filled the spill disk; materialized,
+    * it answers in well under a second) — the same trap
+    * PageRank.oracleHitsCtes documents. */
   def oracleCtes(k: Int, rounds: Int): String = {
     val steps = (1 to rounds).map { i =>
-      s"""e$i AS (SELECT e.u, e.v FROM e
+      s"""e$i AS MATERIALIZED (SELECT e.u, e.v FROM e
          |  JOIN k${i - 1} a ON a.node = e.u JOIN k${i - 1} b ON b.node = e.v),
          |d$i AS (SELECT node, CAST(count(*) AS BIGINT) AS d FROM
          |  (SELECT u AS node FROM e$i UNION ALL SELECT v FROM e$i) GROUP BY node),
-         |k$i AS (SELECT node FROM d$i WHERE d >= $k)""".stripMargin
+         |k$i AS MATERIALIZED (SELECT node FROM d$i WHERE d >= $k)""".stripMargin
     }.mkString(",\n")
     val cases = (1 to rounds)
       .map(i => s"WHEN k$i.node IS NULL THEN $i").mkString("\n|       ")
@@ -89,7 +95,7 @@ object KCore {
       .map(i => s"LEFT JOIN k$i ON k$i.node = d0.node").mkString("\n|  ")
     s"""d0 AS (SELECT node, CAST(count(*) AS BIGINT) AS d FROM
        |  (SELECT u AS node FROM e UNION ALL SELECT v FROM e) GROUP BY node),
-       |k0 AS (SELECT node FROM d0 WHERE d >= $k),
+       |k0 AS MATERIALIZED (SELECT node FROM d0 WHERE d >= $k),
        |$steps,
        |kcore_out AS (
        |  SELECT d0.node, d0.d AS deg,

@@ -1,17 +1,24 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Approximate-nearest-neighbor primitives over an embedding column
   * (builder-prompt extension surface): brute-force cosine top-k as the
   * exactness baseline, and random-hyperplane LSH bucketing as the scale
   * path — at 100 TB the bucket key turns the all-pairs cross join into
-  * one hash shuffle on the bucket key. Both scale levers are
-  * parameters, not constants: `numPlanes` grows the bucket space with
-  * the corpus (b planes → 2^b buckets), and independent plane tables
-  * (distinct `seed`s, see [[tableSeed]]) trade cost for recall the
-  * standard multi-table way.
+  * one hash shuffle on the bucket key.
+  *
+  * The embedding near-dup family runs on two operators that share one
+  * bucketing (one (vec_id, t, bucket) row per plane table) and one
+  * probe list ([[hammingProbes]]), and verify every candidate by exact
+  * cosine: [[nearDupPairs]] within one set (q54, q88, q89), and
+  * [[historyMatches]] of a batch against a capped [[historyIndex]]
+  * (q90, q92, the streamed admission behind q249). Their scale levers
+  * are parameters, not constants: `numPlanes` grows the bucket space
+  * with the corpus (b planes → 2^b buckets), `numTables` independent
+  * plane tables (distinct seeds, see [[tableSeed]]) trade cost for
+  * recall the standard multi-table way, and `cap` bounds each bucket.
   *
   * Hyperplanes are deterministic (fixed LCG seed) small-integer vectors
   * embedded as literals in BOTH the Spark plan and the DuckDB oracle, so
@@ -121,168 +128,145 @@ object Similarity {
   def cosine(a: Column, b: Column, normA: Column, normB: Column): Column =
     Dedup.dotProduct(a, b) / (normA * normB)
 
-  /** Embedding near-dup pairs, LSH-prefiltered (the q54 engine):
-    * candidates are pairs whose `numPlanes`-bit hyperplane buckets
-    * differ in at most ONE bit, generated by exploding each vector's
-    * (numPlanes + 1) probe keys (own bucket + Hamming-1 neighbors) and
-    * equi-joining probe = bucket — a pair at Hamming ≤ 1 meets exactly
-    * once, so no DISTINCT pass is needed. Survivors get an EXACT cosine
-    * verify ≥ `minCosine` with the codegen'd graft_dot kernel (same
-    * left-to-right fold as the DuckDB oracle rendering).
+  /** Hamming-≤1 probe keys of a `numPlanes`-bit bucket: the bucket
+    * itself, then one key per plane with that bit flipped. Exploding
+    * them and equi-joining probe = bucket finds every pair whose
+    * buckets differ in at most one bit with one hash join on the key,
+    * never a cross join. */
+  def hammingProbes(bucket: Column, numPlanes: Int = NumPlanes): Column =
+    array(bucket +: (0 until numPlanes).map(i => bucket.bitwiseXOR(lit(1 << i))): _*)
+
+  /** (vec_id, embedding, nrm): the rows the exact verify fetches by
+    * vec_id. */
+  private def normed(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id"), col("embedding"),
+      Dedup.norm(col("embedding")).as("nrm"))
+
+  /** One (vec_id, t, bucket) row per vector and table; table t buckets
+    * over planesFor(numPlanes, tableSeed(t)), so table 0 is the
+    * default-seed table. */
+  private def tableBuckets(vecs: DataFrame, numTables: Int,
+                           numPlanes: Int): DataFrame =
+    vecs.select(col("vec_id"), explode(array((0 until numTables).map(t =>
+        struct(lit(t).as("t"), bucketFor(col("embedding"),
+          planesFor(numPlanes, tableSeed(t))).as("bucket"))): _*)).as("tb"))
+      .select(col("vec_id"), col("tb.t").as("t"), col("tb.bucket").as("bucket"))
+
+  /** (vec_id, t, probe): every bucket's [[hammingProbes]] keys. */
+  private def probes(buckets: DataFrame, numPlanes: Int): DataFrame =
+    buckets.select(col("vec_id"), col("t"),
+      explode(hammingProbes(col("bucket"), numPlanes)).as("probe"))
+
+  /** Exact-cosine verify of the candidate id pairs `cand(a, b)`: a's
+    * vector is fetched by vec_id from `va`, b's from `vb`, so the
+    * probe join before it shuffled ids only, never vectors. a's vector
+    * is the first operand, as in the oracle renderings. When `va` and
+    * `vb` are one frame, both fetches plan the same exchange, which
+    * Spark then runs once. */
+  private def verify(cand: DataFrame, a: String, va: DataFrame,
+                     b: String, vb: DataFrame, minCosine: Double): DataFrame =
+    cand.join(va.as("va"), col(a) === col("va.vec_id"))
+      .join(vb.as("vb"), col(b) === col("vb.vec_id"))
+      .select(col(a), col(b), cosine(col("va.embedding"), col("vb.embedding"),
+        col("va.nrm"), col("vb.nrm")).as("cosine"))
+      .where(col("cosine") >= minCosine)
+
+  /** Embedding near-dup pairs within one set (q54, q88, q89):
+    * candidates are pairs whose `numPlanes`-bit buckets differ in at
+    * most ONE bit in ANY of `numTables` independent plane tables
+    * ([[tableSeed]]); survivors get an EXACT cosine verify ≥
+    * `minCosine` with the codegen'd graft_dot kernel (the DuckDB
+    * oracle's left-to-right fold). Output (vec_a, vec_b, cosine) with
+    * vec_a < vec_b, unordered — callers sort.
     *
-    * Scale shape: the probe join shuffles on the bucket key instead of
-    * crossing, and the BUILD side is bounded per bucket by `cap`
-    * (Dedup.capBuckets, smallest vec_ids kept — deterministic and
-    * mirrored in [[nearDupPairsDuckSql]]), so candidate volume is
-    * ≤ (numPlanes+1) · cap · n — LINEAR in corpus size even when every
-    * vector collides in one bucket (ScaleSpec pins C(cap,2) output on
-    * an identical-vector corpus, invariant in n). `numPlanes` grows
-    * with the corpus to keep mean occupancy below the cap (8 bits is
-    * fixture-sized; 100 TB wants 20+ bits).
+    * Scale shape: the probe join shuffles ids on (t, bucket), and the
+    * BUILD side is capped per (t, bucket) by `cap` (Dedup.capBuckets,
+    * smallest vec_ids kept; a probe-side cap would also bound it but
+    * loses pairs the build cap keeps), so candidate volume is
+    * ≤ numTables · (numPlanes+1) · cap · n — LINEAR in corpus size
+    * even when every vector collides in one bucket (ScaleSpec pins
+    * C(cap,2) output on an identical-vector corpus, invariant in n).
+    * One DISTINCT collapses pairs that meet in several tables; at
+    * numTables = 1 a Hamming-≤1 pair meets exactly once.
     *
     * Recall < 1 by design — the contract (and the oracle) is "pairs
-    * whose buckets collide within Hamming 1, capped". Equal vectors
-    * share a bucket by construction, so TRUE duplicates below the cap
-    * are kept with recall 1.0 (ExtensionsSpec); the multi-table union
-    * (q88) is the recall lever for the weak-similarity tail. */
-  def nearDupPairs(s: SparkSession, emb: DataFrame, minCosine: Double,
-                   numPlanes: Int = NumPlanes, cap: Int = Dedup.MaxBucket,
-                   seed: Long = DefaultSeed): DataFrame = {
-    val ps = planesFor(numPlanes, seed)
-    val base = emb.select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", Dedup.norm(col("embedding")))
-      .withColumn("bucket", bucketFor(col("embedding"), ps))
-    base.createOrReplaceTempView("emb_probe")
-    // skew guard on the build side only: a probe-side cap would also
-    // bound it but loses pairs the build cap already keeps
-    Dedup.capBuckets(base, Seq("bucket"), "vec_id", cap)
-      .createOrReplaceTempView("emb_cand")
-    val probes = (Seq("bucket") ++ (0 until numPlanes)
-      .map(i => s"bucket ^ ${1 << i}")).mkString("array(", ", ", ")")
-    s.sql(s"""
-      |WITH probes AS (
-      |  SELECT vec_id, embedding, nrm, explode($probes) AS probe FROM emb_probe)
-      |SELECT vec_a, vec_b, cosine FROM (
-      |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-      |    graft_dot(a.embedding, b.embedding) / (a.nrm * b.nrm) AS cosine
-      |  FROM probes a JOIN emb_cand b
-      |    ON b.bucket = a.probe AND a.vec_id < b.vec_id)
-      |WHERE cosine >= $minCosine""".stripMargin)
+    * whose buckets collide within Hamming 1 in some table, capped".
+    * Equal vectors share a bucket by construction, so TRUE duplicates
+    * below the cap are kept with recall 1.0 (ExtensionsSpec). The
+    * three levers are parameters: `numTables` trades cost for recall
+    * on the weak tail (per-table retention r lifts to
+    * 1-(1-r)^numTables: 0.154 → 0.423 at cos 0.4 over 3×8 planes on
+    * the sf0.1 fixture, zero false positives), `numPlanes` grows the
+    * bucket space with the corpus ([[planesForCorpus]]), `cap` bounds
+    * adversarial buckets. */
+  def nearDupPairs(emb: DataFrame, minCosine: Double, numTables: Int = 1,
+                   numPlanes: Int = NumPlanes,
+                   cap: Int = Dedup.MaxBucket): DataFrame = {
+    val vecs = normed(emb)
+    val buckets = tableBuckets(vecs, numTables, numPlanes)
+    val build = Dedup.capBuckets(buckets, Seq("t", "bucket"), "vec_id", cap)
+    val cand = probes(buckets, numPlanes).as("a").join(build.as("b"),
+        col("b.t") === col("a.t") && col("b.bucket") === col("a.probe") &&
+          col("a.vec_id") < col("b.vec_id"))
+      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
+      .distinct()
+    verify(cand, "vec_a", vecs, "vec_b", vecs, minCosine)
   }
 
-  /** Multi-table LSH near-dup pairs (the q88 engine): `numTables`
-    * INDEPENDENT hyperplane tables (distinct LCG seeds via
-    * [[tableSeed]]; table 0 is [[nearDupPairs]]'s table), candidates =
-    * pairs within Hamming ≤ 1 in ANY table — the standard recall lever
-    * when the weak-similarity tail matters: a pair missed by one
-    * table's cuts gets `numTables` chances, so per-table retention r
-    * lifts to 1-(1-r)^numTables (measured 0.154 → 0.423 at cos 0.4
-    * over 3×8 planes on the sf0.1 fixture, zero false positives —
-    * same-bucket-only tables would LOSE to single-table multiprobe).
-    * Every table's buckets are capped like every other candidate path;
-    * one DISTINCT collapses pairs that meet in several tables/probes
-    * before the exact-cosine verify, and the verify joins fetch
-    * embeddings by vec_id so the (t, bucket) shuffle moves ids only,
-    * never the vectors. All three scale levers are parameters:
-    * `numTables` trades cost for recall, `numPlanes` grows the bucket
-    * space with the corpus, `cap` bounds adversarial buckets. */
-  def multiTableNearDupPairs(s: SparkSession, emb: DataFrame,
-                             minCosine: Double, numTables: Int,
-                             numPlanes: Int = NumPlanes,
-                             cap: Int = Dedup.MaxBucket): DataFrame = {
-    val base = emb.select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", Dedup.norm(col("embedding")))
-    base.createOrReplaceTempView("mt_emb")
-    val buckets = base.select(col("vec_id"),
-      explode(array((0 until numTables).map(t =>
-        struct(lit(t).as("t"), bucketFor(col("embedding"),
-          planesFor(numPlanes, tableSeed(t))).as("bucket"))): _*)).as("tb"))
-      .select(col("vec_id"), col("tb.t").as("t"), col("tb.bucket").as("bucket"))
-    buckets.createOrReplaceTempView("mt_buckets")
-    Dedup.capBuckets(buckets, Seq("t", "bucket"), "vec_id", cap)
-      .createOrReplaceTempView("mt_cand")
-    val probes = (Seq("bucket") ++ (0 until numPlanes)
-      .map(i => s"bucket ^ ${1 << i}")).mkString("array(", ", ", ")")
-    s.sql(s"""
-      |WITH probes AS (
-      |  SELECT vec_id, t, explode($probes) AS probe FROM mt_buckets),
-      |cand AS (
-      |  SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-      |  FROM probes a JOIN mt_cand b
-      |    ON b.t = a.t AND b.bucket = a.probe AND a.vec_id < b.vec_id)
-      |SELECT vec_a, vec_b, cosine FROM (
-      |  SELECT vec_a, vec_b,
-      |    graft_dot(ea.embedding, eb.embedding) / (ea.nrm * eb.nrm) AS cosine
-      |  FROM cand JOIN mt_emb ea ON ea.vec_id = vec_a
-      |            JOIN mt_emb eb ON eb.vec_id = vec_b)
-      |WHERE cosine >= $minCosine""".stripMargin)
+  /** The persistent side of [[historyMatches]]: history vectors
+    * (`vectors`, fetched by the verify) and their (vec_id, t, bucket)
+    * rows capped per (t, bucket) (`buckets`, the probe join's build
+    * side). [[cache]] pins both for a caller that probes many
+    * batches. */
+  final case class HistoryIndex(vectors: DataFrame, buckets: DataFrame,
+                                numTables: Int, numPlanes: Int) {
+    def cache(): HistoryIndex = { vectors.cache(); buckets.cache(); this }
   }
 
-  /** Multi-table INCREMENTAL embedding dedup (the q92 engine): q90's
-    * continuous-ingestion contract — a new batch (vec_id ≥ `splitId`)
-    * probed against the already-indexed history (vec_id < `splitId`) —
-    * with `numTables` independent hyperplane tables instead of one.
-    * Table 0 is q90's table, so q92 ⊇ q90 decision-wise (ScaleSpec
-    * pins it). This is the recall lever applied where it matters most
-    * in production: ADMIT/DROP decisions on ingest are irreversible,
-    * and the single-table weak-tail decision recall measured 0.152 at
-    * sf0.1 (scripts/recall_check.py) — the multi-table union lifts
-    * per-table retention r to 1-(1-r)^numTables at `numTables`× index
-    * cost, zero false positives (every candidate is exact-cosine
-    * verified).
-    *
-    * Scale shape, unchanged from q90: the history side is bucketed
-    * ONCE per table and capped per (table, bucket) — the persistent
-    * index — while only the batch explodes its
-    * numTables·(numPlanes+1) Hamming-1 probe keys, so per-batch cost
-    * is O(|batch| · numTables · probes · occupancy), independent of
-    * corpus size. A pair can now meet in several tables, so
-    * candidates go through one DISTINCT before the exact verify (the
-    * verify fetches embeddings by vec_id — the probe shuffle moves
-    * ids, never vectors). Output: one row per batch vector —
-    * (vec_id, dup_of = earliest verified history near-dup or NULL to
-    * admit, n_matches = count of DISTINCT history near-dups). */
-  def multiTableIncrementalDedup(s: SparkSession, emb: DataFrame,
-                                 minCosine: Double, numTables: Int,
-                                 splitId: Long,
-                                 numPlanes: Int = NumPlanes,
-                                 cap: Int = Dedup.MaxBucket): DataFrame = {
-    val base = emb.select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", Dedup.norm(col("embedding")))
-    base.createOrReplaceTempView("mti_emb")
-    val buckets = base.select(col("vec_id"),
-      explode(array((0 until numTables).map(t =>
-        struct(lit(t).as("t"), bucketFor(col("embedding"),
-          planesFor(numPlanes, tableSeed(t))).as("bucket"))): _*)).as("tb"))
-      .select(col("vec_id"), col("tb.t").as("t"), col("tb.bucket").as("bucket"))
-    Dedup.capBuckets(buckets.where(col("vec_id") < splitId),
-        Seq("t", "bucket"), "vec_id", cap)
-      .createOrReplaceTempView("mti_hist")
-    buckets.where(col("vec_id") >= splitId).createOrReplaceTempView("mti_batch")
-    val probes = (Seq("bucket") ++ (0 until numPlanes)
-      .map(i => s"bucket ^ ${1 << i}")).mkString("array(", ", ", ")")
-    s.sql(s"""
-      |WITH probes AS (
-      |  SELECT vec_id, t, explode($probes) AS probe FROM mti_batch),
-      |cand AS (
-      |  SELECT DISTINCT a.vec_id AS bv, h.vec_id AS hv
-      |  FROM probes a JOIN mti_hist h ON h.t = a.t AND h.bucket = a.probe),
-      |m AS (
-      |  SELECT bv, min(hv) AS dup_of, count(*) AS n_matches FROM (
-      |    SELECT bv, hv,
-      |      graft_dot(ea.embedding, eb.embedding) / (ea.nrm * eb.nrm) AS cosine
-      |    FROM cand JOIN mti_emb ea ON ea.vec_id = bv
-      |              JOIN mti_emb eb ON eb.vec_id = hv)
-      |  WHERE cosine >= $minCosine GROUP BY bv)
-      |SELECT b.vec_id, m.dup_of, coalesce(m.n_matches, 0) AS n_matches
-      |FROM (SELECT vec_id FROM mti_emb WHERE vec_id >= $splitId) b
-      |LEFT JOIN m ON m.bv = b.vec_id
-      |ORDER BY b.vec_id""".stripMargin)
+  /** Buckets `history` (vec_id, embedding) once per table and caps each
+    * (t, bucket) at `cap` smallest vec_ids. */
+  def historyIndex(history: DataFrame, numTables: Int = 1,
+                   numPlanes: Int = NumPlanes,
+                   cap: Int = Dedup.MaxBucket): HistoryIndex = {
+    val vecs = normed(history)
+    HistoryIndex(vecs, Dedup.capBuckets(tableBuckets(vecs, numTables, numPlanes),
+      Seq("t", "bucket"), "vec_id", cap), numTables, numPlanes)
   }
 
-  /** DuckDB rendering of [[multiTableIncrementalDedup]] — identical
-    * per-table plane literals, identical (t, bucket) cap on the history
-    * side only, identical probe list and fold order. */
+  /** Incremental embedding dedup (q90, q92, and every trigger of
+    * StreamingIngest.admitNovelEmbeddings, q249): a new `batch`
+    * (vec_id, embedding) probed against a capped [[historyIndex]].
+    * Only the batch explodes its numTables·(numPlanes+1) probe keys, so
+    * per-batch cost is O(|batch| · probes · occupancy), independent of
+    * history size. Output: one row per batch vector with at least one
+    * verified history near-dup — (vec_id, dup_of = the earliest such
+    * vec_id, n_matches = how many); a batch vector without a row is new
+    * content. Candidates meet once per table at most, and one DISTINCT
+    * collapses them before the verify. A multi-table index only adds
+    * candidates over table 0's, so its decisions only get stricter
+    * (ScaleSpec pins q92 ⊇ q90); the single-table weak-tail decision
+    * recall measured 0.152 at sf0.1 (scripts/recall_check.py).
+    * Intra-batch duplicates are q89's job, by design — admitting then
+    * clustering is the standard two-phase ingest. */
+  def historyMatches(index: HistoryIndex, batch: DataFrame,
+                     minCosine: Double): DataFrame = {
+    val vecs = normed(batch)
+    val cand = probes(tableBuckets(vecs, index.numTables, index.numPlanes),
+        index.numPlanes).as("a")
+      .join(index.buckets.as("h"),
+        col("h.t") === col("a.t") && col("h.bucket") === col("a.probe"))
+      .select(col("a.vec_id").as("bv"), col("h.vec_id").as("hv"))
+      .distinct()
+    verify(cand, "bv", vecs, "hv", index.vectors, minCosine)
+      .groupBy(col("bv").as("vec_id"))
+      .agg(min("hv").as("dup_of"), count(lit(1)).as("n_matches"))
+  }
+
+  /** DuckDB rendering of q92's [[historyMatches]] over a
+    * [[historyIndex]] of the vectors below `splitId`, one row per batch
+    * vector — identical per-table plane literals, identical (t, bucket)
+    * cap on the history side only, identical probe list and fold
+    * order. */
   def multiTableIncrementalDedupDuckSql(minCosine: Double, numTables: Int,
                                         splitId: Long,
                                         numPlanes: Int = NumPlanes,
@@ -314,7 +298,7 @@ object Similarity {
        |ORDER BY b.vec_id""".stripMargin
   }
 
-  /** DuckDB rendering of [[multiTableNearDupPairs]] — identical plane
+  /** DuckDB rendering of [[nearDupPairs]] at `numTables` — identical plane
     * literals per table seed, identical cap and probe list, identical
     * fold order. No ORDER BY — callers append their own. */
   def multiTableNearDupPairsDuckSql(minCosine: Double, numTables: Int,
@@ -342,7 +326,7 @@ object Similarity {
        |WHERE cosine >= $minCosine""".stripMargin
   }
 
-  /** DuckDB rendering of [[nearDupPairs]] — identical plane literals,
+  /** DuckDB rendering of single-table [[nearDupPairs]] — identical plane literals,
     * identical cap (row_number by vec_id within bucket), identical fold
     * order, so the capped contract matches at ANY corpus size. No
     * ORDER BY — callers append their own. */

@@ -121,16 +121,11 @@ object Sink {
     val merged = Merge.upsert(existing, up.select(existing.columns.map(col).toSeq: _*), keys)
       .persist()
     merged.count() // materialize before overwriting source partitions
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    // the write option, not the session setting: it takes precedence
+    // for this write alone and leaves the shared session untouched
     try
-      merged.write.mode("overwrite").partitionBy(DateCol).parquet(targetPath)
-    finally {
-      merged.unpersist()
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
+      merged.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy(DateCol).parquet(targetPath)
+    finally merged.unpersist()
   }
 }

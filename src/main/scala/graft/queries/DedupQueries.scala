@@ -56,6 +56,20 @@ object DedupQueries {
       Similarity.planesForCorpus(Tables.load(s, dir, "embeddings").count())
     }
 
+  /** q90/q92: every batch vector (vec_id ≥ 250) with its earliest
+    * verified near-dup in the history (vec_id < 250) — NULL admits it —
+    * and its match count, over a `numTables`-table index. */
+  private def incrementalDedup(emb: DataFrame, numTables: Int): DataFrame = {
+    val batch = emb.where(col("vec_id") >= 250)
+    val matches = Similarity.historyMatches(
+      Similarity.historyIndex(emb.where(col("vec_id") < 250), numTables),
+      batch, 0.4)
+    batch.select("vec_id").join(matches, Seq("vec_id"), "left")
+      .select(col("vec_id"), col("dup_of"),
+        coalesce(col("n_matches"), lit(0L)).as("n_matches"))
+      .orderBy("vec_id")
+  }
+
   /** Title-level near-dup pairs — the MinHash+LSH candidate pipeline up
     * to (but not including) the member expansion: registers the
     * `mh_members` (doc_id, title) and `mh_sh` (title, rep, n_docs, sh)
@@ -463,7 +477,7 @@ object DedupQueries {
     // Embedding-cosine near-dup pairs, LSH-prefiltered — the full
     // engine (Hamming-1 multiprobe + per-bucket cap + parameterized
     // plane count) lives in Similarity.nearDupPairs; this query is the
-    // default-table instance at the deliberately-low 0.4 threshold.
+    // single-table instance at the deliberately-low 0.4 threshold.
     // This replaced the round-3 all-pairs `a.vec_id < b.vec_id`
     // baseline — the one O(n²) construct in the suite — and since
     // round 6 the build side is ALSO capped per bucket (the last
@@ -483,19 +497,17 @@ object DedupQueries {
     // documented 100 TB lever, now actually bound). The oracle computes
     // the same width in SQL.
     "q54_embedding_dup" -> ((s, dir) =>
-      Similarity.nearDupPairs(s, Tables.load(s, dir, "embeddings"), 0.4,
+      Similarity.nearDupPairs(Tables.load(s, dir, "embeddings"), 0.4,
           numPlanes = adaptivePlanes(s, dir))
         .orderBy("vec_a", "vec_b")),
 
     // Multi-table LSH near-dup — the parameterized recall lever
-    // (engine and scale analysis in Similarity.multiTableNearDupPairs);
-    // this query is the default-table instance: NumTables independent
-    // tables at the q54 threshold, table 0 = q54's planes (ScaleSpec
-    // pins q88 ⊇ q54 structurally).
+    // (engine and scale analysis in Similarity.nearDupPairs): q54's
+    // operator at NumTables independent tables, table 0 = q54's planes
+    // (ScaleSpec pins q88 ⊇ q54 structurally).
     "q88_embedding_dup_multitable" -> ((s, dir) =>
-      Similarity.multiTableNearDupPairs(s,
-        Tables.load(s, dir, "embeddings"), 0.4, NumTables,
-        numPlanes = adaptivePlanes(s, dir))
+      Similarity.nearDupPairs(Tables.load(s, dir, "embeddings"), 0.4,
+        numTables = NumTables, numPlanes = adaptivePlanes(s, dir))
         .orderBy("vec_a", "vec_b")),
 
     // Semantic dedup — q87's production contract transplanted to the
@@ -513,7 +525,7 @@ object DedupQueries {
     // at sf1.
     "q89_semantic_dedup" -> ((s, dir) => {
       val emb = Tables.load(s, dir, "embeddings")
-      val pairs = Similarity.nearDupPairs(s, emb, 0.4)
+      val pairs = Similarity.nearDupPairs(emb, 0.4)
       val comps = Components.connectedComponents(
         pairs.select(col("vec_a").as("src"), col("vec_b").as("dst")))
       emb.select(col("vec_id"))
@@ -525,39 +537,12 @@ object DedupQueries {
 
     // Incremental embedding dedup — q67's continuous-ingestion contract
     // in the embedding space: a new batch (vec_id ≥ 250) probed against
-    // the already-indexed corpus (vec_id < 250). The HISTORY side is
-    // bucketed once and capped (the persistent index a 100 TB pipeline
-    // maintains); only the BATCH explodes its (numPlanes+1) Hamming-1
-    // probe keys — index-once, probe-many, so per-batch cost is
-    // O(|batch| · probes · occupancy), independent of corpus size. A
+    // the already-indexed corpus (vec_id < 250) through the single-table
+    // Similarity.historyMatches (engine and scale analysis there). A
     // batch vector reports its earliest near-dup in history (NULL = new
-    // content, admit) and the match count; a Hamming≤1 pair meets on
-    // exactly one probe, so the counts need no DISTINCT. Intra-batch
-    // duplicates are q89's job, by design — admitting then clustering
-    // is the standard two-phase ingest.
-    "q90_incremental_embedding_dedup" -> ((s, dir) => {
-      val emb = Tables.load(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"))
-        .withColumn("nrm", Dedup.norm(col("embedding")))
-        .withColumn("bucket", Similarity.bucket(col("embedding")))
-      Dedup.capBuckets(emb.where(col("vec_id") < 250), Seq("bucket"), "vec_id")
-        .createOrReplaceTempView("inc_hist")
-      emb.where(col("vec_id") >= 250).createOrReplaceTempView("inc_batch")
-      val probes = (Seq("bucket") ++ (0 until Similarity.NumPlanes)
-        .map(i => s"bucket ^ ${1 << i}")).mkString("array(", ", ", ")")
-      s.sql(s"""
-        |WITH probes AS (
-        |  SELECT vec_id, embedding, nrm, explode($probes) AS probe FROM inc_batch),
-        |m AS (
-        |  SELECT bv, min(hv) AS dup_of, count(*) AS n_matches FROM (
-        |    SELECT a.vec_id AS bv, h.vec_id AS hv,
-        |      graft_dot(a.embedding, h.embedding) / (a.nrm * h.nrm) AS cosine
-        |    FROM probes a JOIN inc_hist h ON h.bucket = a.probe)
-        |  WHERE cosine >= 0.4 GROUP BY bv)
-        |SELECT b.vec_id, m.dup_of, coalesce(m.n_matches, 0) AS n_matches
-        |FROM inc_batch b LEFT JOIN m ON m.bv = b.vec_id
-        |ORDER BY b.vec_id""".stripMargin)
-    }),
+    // content, admit) and the match count.
+    "q90_incremental_embedding_dedup" -> ((s, dir) =>
+      incrementalDedup(Tables.load(s, dir, "embeddings"), numTables = 1)),
 
     // Bloom-prefiltered incremental dedup — q67's contract behind the
     // broadcast-index scale path: at 100 TB the history side can
@@ -600,12 +585,11 @@ object DedupQueries {
     }),
 
     // Multi-table incremental embedding dedup — q90's admit/drop
-    // contract with the q88 recall lever (engine and scale analysis in
-    // Similarity.multiTableIncrementalDedup; table 0 = q90's table, so
-    // decisions only get stricter — ScaleSpec pins q92 ⊇ q90).
+    // contract with the q88 recall lever: the same operator at
+    // NumTables tables; table 0 = q90's table, so decisions only get
+    // stricter — ScaleSpec pins q92 ⊇ q90.
     "q92_incremental_embedding_dedup_multitable" -> ((s, dir) =>
-      Similarity.multiTableIncrementalDedup(s,
-        Tables.load(s, dir, "embeddings"), 0.4, NumTables, 250)),
+      incrementalDedup(Tables.load(s, dir, "embeddings"), NumTables)),
 
     // STREAMED admission parity (q249, round 12): the ANN admission
     // decisions of StreamingIngest.admitNovelEmbeddings — the

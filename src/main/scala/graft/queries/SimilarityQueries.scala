@@ -171,18 +171,17 @@ object SimilarityQueries {
     // hyperplane. Probes explode 9× on the tiny query side only; the
     // corpus is still touched through one bucket equi-join.
     "q66_ann_multiprobe" -> ((s, dir) => {
-      emb(s, dir).withColumn("bucket", Similarity.bucket(col("embedding")))
-        .createOrReplaceTempView("emb_mp")
-      val xors = (Seq("bucket") ++ (0 until Similarity.NumPlanes)
-        .map(i => s"bucket ^ ${1 << i}")).mkString("array(", ", ", ")")
+      val mp = emb(s, dir).withColumn("bucket", Similarity.bucket(col("embedding")))
+      mp.createOrReplaceTempView("emb_mp")
+      mp.where(col("vec_id") < NumQueries)
+        .select(col("vec_id"), col("embedding"), col("nrm"),
+          explode(Similarity.hammingProbes(col("bucket"))).as("probe"))
+        .createOrReplaceTempView("mp_probes")
       s.sql(s"""
-        |WITH probes AS (
-        |  SELECT vec_id, embedding, nrm, explode($xors) AS probe
-        |  FROM emb_mp WHERE vec_id < $NumQueries),
-        |scored AS (
+        |WITH scored AS (
         |  SELECT q.vec_id AS query_id, c.vec_id AS vec_id, c.bucket AS bucket,
         |    graft_dot(q.embedding, c.embedding) / (q.nrm * c.nrm) AS cosine
-        |  FROM probes q JOIN emb_mp c ON c.bucket = q.probe
+        |  FROM mp_probes q JOIN emb_mp c ON c.bucket = q.probe
         |    AND c.vec_id <> q.vec_id),
         |ranked AS (
         |  SELECT query_id, vec_id, bucket, cosine,

@@ -173,18 +173,12 @@ object StreamingIngest {
     * micro-batch is one `Merge.upsert`; idempotent merge + the
     * [[VersionedStore]] atomic pointer flip + committed-batch skip ⇒
     * effectively-once under at-least-once replays, with no
-    * store-missing window during the swap. Read back via
+    * store-missing window during the swap. `stream` is a stateless
+    * input (Append mode: each row reaches one batch). Read back via
     * [[readStore]]. */
   def upsertEachBatch(stream: DataFrame, targetPath: String, keys: Seq[String],
                       checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        upsertOneBatch(batch, batchId, targetPath, keys)
-      }
-      .start()
+    eachBatch(stream, checkpoint)(upsertOneBatch(_, _, targetPath, keys))
 
   /** Streaming twin of q157's shared-prefix reuse audit
     * ([[graft.queries.CorpusQueries.prefixKeys]] — the same
@@ -200,18 +194,12 @@ object StreamingIngest {
     * effectively-once is enforced structurally: the store is a
     * [[VersionedStore]] (atomic pointer flip — no store-missing
     * window) and a replayed batchId that is already committed SKIPS
-    * the merge (StreamingSpec pins both). Read back via
+    * the merge (StreamingSpec pins both). `stream` is a stateless
+    * input (Append mode: each row reaches one batch). Read back via
     * [[readStore]]. */
   def trackSharedPrefixes(stream: DataFrame, targetPath: String,
                           checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergePrefixBatch(batch, batchId, targetPath)
-      }
-      .start()
+    eachBatch(stream, checkpoint)(mergePrefixBatch(_, _, targetPath))
 
   /** One micro-batch of the prefix store merge (factored for replay
     * tests): counts SUM on merge — double-applying a batch corrupts
@@ -236,17 +224,6 @@ object StreamingIngest {
     merged.unpersist()
   }
 
-  /** Streaming semantic admission — q90's incremental embedding dedup
-    * as a foreachBatch sink: each micro-batch of `(vec_id, embedding)`
-    * rows is probed (own bucket + Hamming-1) against a STATIC
-    * LSH-bucketed history index, and only rows with no exact-cosine
-    * near-dup ≥ `minCosine` in history are appended to `targetPath`
-    * (admit); near-dups of existing content are dropped. The index is
-    * bucketed, capped and cached ONCE at stream start, so per-batch
-    * cost tracks the batch — the 100 TB history is scanned exactly
-    * once, never per trigger. Admission is vs HISTORY by contract:
-    * intra-stream duplicates compose with `dropDuplicates`/a periodic
-    * index refresh, exactly as a two-phase production ingest does. */
   /** Streaming Bloom admission — q91's broadcast-index incremental
     * dedup as a foreachBatch sink, with the index MAINTAINED across
     * triggers: the Bloom filter of history text-hashes is built once
@@ -281,28 +258,23 @@ object StreamingIngest {
     }
     var bloom: Array[Byte] = storeHashes(history.sparkSession)
       .agg(call_function("graft_bloom", col("h"))).head.getAs[Array[Byte]](0)
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val flagged = Transform.dedupFirst(
-            batch.withColumn("h", md5(col("text"))), Seq("h"), Seq("doc_id"))
-          .withColumn("bloom_positive",
-            call_function("graft_bloom_contains", lit(bloom), col("h")))
-        val neg = flagged.where(!col("bloom_positive"))
-        val pos = flagged.where(col("bloom_positive"))
-          .join(storeHashes(spark).distinct(), Seq("h"), "left_anti")
-        val admitted = neg.unionByName(pos).persist()
-        admitted.drop("h", "bloom_positive")
-          .write.mode("append").parquet(targetPath)
-        val delta = admitted
-          .agg(call_function("graft_bloom", col("h"))).head.getAs[Array[Byte]](0)
-        admitted.unpersist()
-        bloom = Bloom.or(bloom, delta)
-      }
-      .start()
+    eachBatch(stream, checkpoint) { (batch, _) =>
+      val spark = batch.sparkSession
+      val flagged = Transform.dedupFirst(
+          batch.withColumn("h", md5(col("text"))), Seq("h"), Seq("doc_id"))
+        .withColumn("bloom_positive",
+          call_function("graft_bloom_contains", lit(bloom), col("h")))
+      val neg = flagged.where(!col("bloom_positive"))
+      val pos = flagged.where(col("bloom_positive"))
+        .join(storeHashes(spark).distinct(), Seq("h"), "left_anti")
+      val admitted = neg.unionByName(pos).persist()
+      admitted.drop("h", "bloom_positive")
+        .write.mode("append").parquet(targetPath)
+      val delta = admitted
+        .agg(call_function("graft_bloom", col("h"))).head.getAs[Array[Byte]](0)
+      admitted.unpersist()
+      bloom = Bloom.or(bloom, delta)
+    }
   }
 
   /** Streaming twin of q130's segment-level dedup
@@ -341,14 +313,7 @@ object StreamingIngest {
                         targetPath: String, checkpoint: String): StreamingQuery = {
     val bloomRef = new java.util.concurrent.atomic.AtomicReference(
       initSegmentBloom(history, targetPath))
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        scrubOneBatch(batch, batchId, history, targetPath, bloomRef)
-      }
-      .start()
+    eachBatch(stream, checkpoint)(scrubOneBatch(_, _, history, targetPath, bloomRef))
   }
 
   private[graft] def segStorePath(targetPath: String): String =
@@ -539,15 +504,10 @@ object StreamingIngest {
     * [[DistinctTracker.estimate]]. */
   def trackDistinct(stream: DataFrame, keyCol: String, checkpoint: String,
                     tracker: DistinctTracker): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        tracker.update(batch.agg(call_function("graft_hll", col(keyCol)))
-          .head.getAs[Array[Byte]](0))
-      }
-      .start()
+    eachBatch(stream, checkpoint) { (batch, _) =>
+      tracker.update(batch.agg(call_function("graft_hll", col(keyCol)))
+        .head.getAs[Array[Byte]](0))
+    }
 
   /** Streaming histogram quantiles — q102's constant-state fixed-bin
     * sketch maintained across micro-batches (completing the streaming
@@ -722,45 +682,40 @@ object StreamingIngest {
   def trackValueDrift(stream: DataFrame, keyCol: String, valueCol: String,
                       checkpoint: String, tracker: DriftTracker,
                       binCents: Long = 1000L): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val keys = tracker.refKeys.toSeq
-        val inRef =
-          if (keys.isEmpty) lit(false)
-          else col("k").isin(keys: _*)
-        // `div` truncates toward zero in BOTH engines (Spark div and
-        // DuckDB // — measured: -7 // 2 = -3 in the oracle's duckdb
-        // build), so the bin expression is engine/oracle-stable for
-        // negative values too; no floor rewrite needed.
-        val rows = batch
-          .select(col(keyCol).cast("string").as("k"),
-            expr(s"CAST(round($valueCol * 100, 0) AS BIGINT)" +
-              s" div $binCents").as("bin"))
-          // kind: 0 = reference key (kept per-cell), 1 = novel key,
-          // 2 = null key — novel and null collapse to kind-only rows
-          .groupBy(when(col("k").isNull, lit(2))
-              .when(inRef, lit(0)).otherwise(lit(1)).as("kind"),
-            when(inRef, col("k")).otherwise(lit(null)).as("k"),
-            col("bin"))
-          .agg(count(lit(1)).as("n"))
-          .collect()
-        // a reference-key row with a NULL value has no bin to fold —
-        // it carries no drift signal and is dropped from the live grid
-        // (the gauges still count null/novel KEYS whatever the value);
-        // without this guard a null `value` NPEs the getLong decode
-        // (round-13 advisor)
-        val kept = rows.filter(r => r.getInt(0) == 0 && !r.isNullAt(2))
-        def gauge(kind: Int): Long =
-          rows.filter(_.getInt(0) == kind).map(_.getLong(3)).sum
-        tracker.update(batchId,
-          kept.map(r => ((r.getString(1), r.getLong(2)), r.getLong(3))).toSeq,
-          novelRows = gauge(1), nullRows = gauge(2),
-          streamId = Some(checkpoint))
-      }
-      .start()
+    eachBatch(stream, checkpoint) { (batch, batchId) =>
+      val keys = tracker.refKeys.toSeq
+      val inRef =
+        if (keys.isEmpty) lit(false)
+        else col("k").isin(keys: _*)
+      // `div` truncates toward zero in BOTH engines (Spark div and
+      // DuckDB // — measured: -7 // 2 = -3 in the oracle's duckdb
+      // build), so the bin expression is engine/oracle-stable for
+      // negative values too; no floor rewrite needed.
+      val rows = batch
+        .select(col(keyCol).cast("string").as("k"),
+          expr(s"CAST(round($valueCol * 100, 0) AS BIGINT)" +
+            s" div $binCents").as("bin"))
+        // kind: 0 = reference key (kept per-cell), 1 = novel key,
+        // 2 = null key — novel and null collapse to kind-only rows
+        .groupBy(when(col("k").isNull, lit(2))
+            .when(inRef, lit(0)).otherwise(lit(1)).as("kind"),
+          when(inRef, col("k")).otherwise(lit(null)).as("k"),
+          col("bin"))
+        .agg(count(lit(1)).as("n"))
+        .collect()
+      // a reference-key row with a NULL value has no bin to fold —
+      // it carries no drift signal and is dropped from the live grid
+      // (the gauges still count null/novel KEYS whatever the value);
+      // without this guard a null `value` NPEs the getLong decode
+      // (round-13 advisor)
+      val kept = rows.filter(r => r.getInt(0) == 0 && !r.isNullAt(2))
+      def gauge(kind: Int): Long =
+        rows.filter(_.getInt(0) == kind).map(_.getLong(3)).sum
+      tracker.update(batchId,
+        kept.map(r => ((r.getString(1), r.getLong(2)), r.getLong(3))).toSeq,
+        novelRows = gauge(1), nullRows = gauge(2),
+        streamId = Some(checkpoint))
+    }
 
   /** Folds `stream(valueCol)` (any numeric; quantized as
     * floor(value·100) — q102's cents contract) into `tracker` across
@@ -768,79 +723,69 @@ object StreamingIngest {
   def trackQuantiles(stream: DataFrame, valueCol: String,
                      checkpoint: String,
                      tracker: QuantileTracker): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val (lo, hi, b) = (tracker.lo, tracker.hi, tracker.bins)
-        val binned = batch
-          .select(floor(col(valueCol) * 100).cast("long").as("c"))
-          .where(col("c").isNotNull)
-          .select(least(lit(b - 1L), greatest(lit(0L),
-            expr(s"((c - $lo) * $b) div (${hi - lo + 1})"))).as("bin"))
-          .groupBy("bin").agg(count(lit(1)).as("n"))
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-        tracker.update(binned)
-      }
-      .start()
+    eachBatch(stream, checkpoint) { (batch, _) =>
+      val (lo, hi, b) = (tracker.lo, tracker.hi, tracker.bins)
+      val binned = batch
+        .select(floor(col(valueCol) * 100).cast("long").as("c"))
+        .where(col("c").isNotNull)
+        .select(least(lit(b - 1L), greatest(lit(0L),
+          expr(s"((c - $lo) * $b) div (${hi - lo + 1})"))).as("bin"))
+        .groupBy("bin").agg(count(lit(1)).as("n"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      tracker.update(binned)
+    }
 
   /** Tracks the top-`k` tokens of `stream(textCol)` across triggers;
     * read the live answer from the returned tracker's `top`. */
   def trackHeavyHitters(stream: DataFrame, textCol: String, k: Int,
                         checkpoint: String,
                         tracker: HeavyHitterTracker): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val toks = batch
-          .select(explode(graft.functions.TextAnalysis.tokens(col(textCol))).as("t"))
-          .persist()
-        val sketch = toks.agg(call_function("graft_cms", col("t")))
-          .head.getAs[Array[Byte]](0)
-        val candidates = toks.groupBy("t").agg(count(lit(1)).as("n"))
-          .orderBy(col("n").desc, col("t").asc).limit(tracker.pool)
-          .select("t").collect().map(_.getString(0))
-        toks.unpersist(blocking = false)
-        tracker.update(sketch, candidates)
-      }
-      .start()
+    eachBatch(stream, checkpoint) { (batch, _) =>
+      val toks = batch
+        .select(explode(graft.functions.TextAnalysis.tokens(col(textCol))).as("t"))
+        .persist()
+      val sketch = toks.agg(call_function("graft_cms", col("t")))
+        .head.getAs[Array[Byte]](0)
+      val candidates = toks.groupBy("t").agg(count(lit(1)).as("n"))
+        .orderBy(col("n").desc, col("t").asc).limit(tracker.pool)
+        .select("t").collect().map(_.getString(0))
+      toks.unpersist(blocking = false)
+      tracker.update(sketch, candidates)
+    }
 
+  /** Streaming semantic admission — q90's incremental embedding dedup
+    * as a foreachBatch sink: each micro-batch of `(vec_id, embedding)`
+    * rows is probed by [[graft.operators.Similarity.historyMatches]]
+    * against a STATIC capped history index, and only rows with no exact-cosine
+    * near-dup ≥ `minCosine` in history are appended to `targetPath`
+    * (admit); near-dups of existing content are dropped. The index is
+    * bucketed, capped and cached ONCE at stream start, so per-batch
+    * cost tracks the batch — the 100 TB history is scanned exactly
+    * once, never per trigger. Admission is vs HISTORY by contract:
+    * intra-stream duplicates compose with `dropDuplicates`/a periodic
+    * index refresh, exactly as a two-phase production ingest does. */
   def admitNovelEmbeddings(stream: DataFrame, history: DataFrame,
                            targetPath: String, checkpoint: String,
                            minCosine: Double = 0.4): StreamingQuery = {
-    import graft.operators.{Dedup, Similarity}
-    val index = Dedup.capBuckets(
-        history.select(col("vec_id"), col("embedding"))
-          .withColumn("nrm", Dedup.norm(col("embedding")))
-          .withColumn("bucket", Similarity.bucket(col("embedding"))),
-        Seq("bucket"), "vec_id")
-      .select(col("vec_id").as("h_id"), col("embedding").as("h_emb"),
-        col("nrm").as("h_nrm"), col("bucket").as("h_bucket"))
-      .cache()
+    import graft.operators.Similarity
+    val index = Similarity.historyIndex(history).cache()
+    eachBatch(stream, checkpoint) { (batch, _) =>
+      batch.join(Similarity.historyMatches(index, batch, minCosine).select("vec_id"),
+          Seq("vec_id"), "left_anti")
+        .write.mode("append").parquet(targetPath)
+    }
+  }
+
+  /** Runs `f` on each micro-batch of `stream` in one AvailableNow query
+    * on `checkpoint`: it drains what is available, then stops. Append
+    * mode: every input here is a stateless stream (a file or memory
+    * source, no aggregation), so each row reaches exactly one batch. */
+  private def eachBatch(stream: DataFrame, checkpoint: String)
+      (f: (DataFrame, Long) => Unit): StreamingQuery =
     stream.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = batch.select(col("vec_id"), col("embedding"))
-          .withColumn("nrm", Dedup.norm(col("embedding")))
-          .withColumn("bucket", Similarity.bucket(col("embedding")))
-        val probeKeys = Seq(col("bucket")) ++ (0 until Similarity.NumPlanes)
-          .map(i => col("bucket").bitwiseXOR(lit(1 << i)))
-        val dup = b
-          .select(col("vec_id"), col("embedding"), col("nrm"),
-            explode(array(probeKeys: _*)).as("probe"))
-          .join(index, col("probe") === col("h_bucket"))
-          .where(Dedup.dotProduct(col("embedding"), col("h_emb")) /
-            (col("nrm") * col("h_nrm")) >= minCosine)
-          .select("vec_id").distinct()
-        batch.join(dup, Seq("vec_id"), "left_anti")
-          .write.mode("append").parquet(targetPath)
-        ()
-      }
+      .foreachBatch(f)
       .start()
-  }
 }

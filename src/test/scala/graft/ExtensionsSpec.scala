@@ -134,6 +134,29 @@ class ExtensionsSpec extends SparkSpec {
     }
   }
 
+  test("SQL functions reject a non-literal n, a Long n outside Int range and a wrong arity") {
+    Seq((Array("a", "b", "c"), 2)).toDF("toks", "n").createOrReplaceTempView("ext_args")
+    // the builders throw during analysis; whatever wraps it, the
+    // builder's message is somewhere on the cause chain
+    def rejects(sql: String, msg: String): Unit = {
+      val e = intercept[Exception](spark.sql(sql).collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).toList
+      assert(msgs.exists(_.contains(msg)), s"'$msg' not in: ${msgs.mkString(" | ")}")
+    }
+    rejects("SELECT graft_shingles(toks, n) FROM ext_args",
+      "graft_shingles n must be a literal")
+    rejects("SELECT graft_shingles(toks, 3000000000) FROM ext_args",
+      "graft_shingles n out of Int range: 3000000000")
+    rejects("SELECT graft_dot(toks) FROM ext_args",
+      "graft_dot(arr1, arr2): wrong number of arguments (1)")
+    rejects("SELECT graft_bloom(toks[0], 64) FROM ext_args",
+      "graft_bloom(key[, m, k]): wrong number of arguments (2)")
+    // an in-range Long literal is accepted as the Int it holds
+    assert(spark.sql("SELECT graft_shingles(toks, CAST(2 AS BIGINT)) FROM ext_args")
+      .head.getSeq[String](0) == Seq("a b", "b c"))
+  }
+
   test("q85 weighted sample skews toward heavier documents (inclusion ∝ weight)") {
     // sequential Poisson sampling: priority u/w falls with weight, so
     // the sampled mean weight must exceed the corpus mean — a

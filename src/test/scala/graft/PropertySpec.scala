@@ -183,9 +183,9 @@ class PropertySpec extends SparkSpec {
           x.indices.foldLeft(0.0)((s, i) => s + x(i).toDouble * y(i).toDouble)
         d(a, b) / math.sqrt(d(a, a) * d(b, b))
       }
-      val single = Similarity.nearDupPairs(spark, df, 0.4)
+      val single = Similarity.nearDupPairs(df, 0.4)
         .select("vec_a", "vec_b").as[(Long, Long)].collect().toSet
-      val multi = Similarity.multiTableNearDupPairs(spark, df, 0.4, numTables = 3)
+      val multi = Similarity.nearDupPairs(df, 0.4, numTables = 3)
         .select("vec_a", "vec_b").as[(Long, Long)].collect().toSet
       (single ++ multi).foreach { case (a, b) =>
         assert(cos(byId(a), byId(b)) >= 0.4 - 1e-9,

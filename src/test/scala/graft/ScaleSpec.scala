@@ -152,7 +152,7 @@ class ScaleSpec extends SparkSpec {
       val emb = spark.range(n).select(col("id").as("vec_id"),
         array((0 until Similarity.Dim).map(i => lit(0.1f * ((i % 7) + 1))): _*)
           .as("embedding"))
-      Similarity.nearDupPairs(spark, emb, 0.4, cap = cap).count()
+      Similarity.nearDupPairs(emb, 0.4, cap = cap).count()
     }
     val atCap = cap.toLong * (cap - 1) / 2
     assert(pairs(500) == atCap)
@@ -162,7 +162,7 @@ class ScaleSpec extends SparkSpec {
     val emb = spark.range(60).select(col("id").as("vec_id"),
       array((0 until Similarity.Dim).map(i => lit(0.1f * ((i % 7) + 1))): _*)
         .as("embedding"))
-    assert(Similarity.nearDupPairs(spark, emb, 0.4, numPlanes = 12).count() == 60L * 59 / 2)
+    assert(Similarity.nearDupPairs(emb, 0.4, numPlanes = 12).count() == 60L * 59 / 2)
   }
 
   test("q88's multi-table candidates contain q54's: table 0 is q54's table") {

@@ -30,7 +30,12 @@ class SinkSpec extends SparkSpec {
     val batch = Seq(
       ("p2", ts("2024-01-02 10:00:00"), "v2"),
       ("p4", ts("2024-01-02 18:00:00"), "v1")).toDF("post_id", "ts", "v")
+    val modeKey = "spark.sql.sources.partitionOverwriteMode"
+    val modeBefore = spark.conf.getOption(modeKey)
     Sink.upsertTimePartitioned(spark, base, batch, Seq("post_id"), "ts")
+    // dynamic overwrite is the write's own option: the session setting
+    // is never touched
+    assert(spark.conf.getOption(modeKey) == modeBefore)
 
     assert(filesOf("2024-01-01") == day1Before) // untouched partition: same files
     assert(filesOf("2024-01-02") != day2Before) // touched partition rewritten
