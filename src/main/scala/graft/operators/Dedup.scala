@@ -11,13 +11,15 @@ import graft.functions.TextAnalysis
   * Column expressions with DuckDB renderings from the same constants.
   *
   * Scale shape (the point of MinHash+LSH): candidate generation is
-  * explode(bands) → groupBy(band,key) — one shuffle keyed on the band
-  * signature, never an all-pairs cross join. Only rows sharing a band
-  * bucket meet; the exact-Jaccard verify runs on candidates only. At
-  * 100 TB the hot buckets (boilerplate docs) are the skew risk —
-  * bounded by [[capBuckets]]/[[MaxBucket]] on every candidate path
-  * (q51 bands, q53 blocks, q75 ER blocks); AQE skew-join handles the
-  * verify join.
+  * explode(bands) → a key equi-join on (band, key), never an all-pairs
+  * cross join. Only rows sharing a band bucket meet; the exact-Jaccard
+  * verify runs on candidates only. At 100 TB the hot buckets
+  * (boilerplate docs) are the skew risk — bounded by [[MaxBucket]] on
+  * every capped pair path, all of which run on [[Blocking]]: the
+  * MinHash title chain (q51, q70, q87, q225, q239), q53's char-gram
+  * blocks, q213's dHash bands, the k-means cluster blocks (q111, q151,
+  * q162) and the embedding buckets ([[Similarity]]); q75's ER blocks
+  * take the same cap through [[Blocking.cap]].
   *
   * Portability: minhash = lexicographic MIN over hex md5 strings (same
   * byte-wise ordering in both engines); all set sizes are exact ints;
@@ -34,7 +36,8 @@ object Dedup {
     * bucket of B members emits O(B²) candidate pairs, so one
     * pathological bucket — a boilerplate title pattern shared by 10⁶
     * near-identical variants — turns the candidate join quadratic. The
-    * guard keeps the first MaxBucket members per bucket (deterministic:
+    * guard ([[Blocking.cap]]) keeps the first MaxBucket members per
+    * bucket (deterministic:
     * ordered by the unique representative id), bounding any bucket's
     * contribution to MaxBucket² regardless of corpus size — the
     * standard recall-for-boundedness trade in production LSH dedup.
@@ -44,16 +47,6 @@ object Dedup {
     * is capped on both sides, not just where the fixture happens not to
     * notice. */
   val MaxBucket = 1000
-
-  /** Keep the first `cap` members of every bucket, ordered by `ordCol`
-    * (must be unique within a bucket for determinism — callers use the
-    * representative doc id). One window pass: shuffles on the bucket
-    * key, which the candidate self-join shuffles on anyway. */
-  def capBuckets(df: DataFrame, bucketCols: Seq[String], ordCol: String,
-                 cap: Int = MaxBucket): DataFrame =
-    df.withColumn("__rk", row_number().over(
-        Window.partitionBy(bucketCols.map(col): _*).orderBy(col(ordCol))))
-      .where(col("__rk") <= cap).drop("__rk")
 
   // ---- word shingles (3-grams over the token sequence) ----
 

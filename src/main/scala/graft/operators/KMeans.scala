@@ -106,13 +106,14 @@ object KMeans {
     * quantized space — engine-identical, no float compare), and the
     * surviving representative `keep = min(self ∪ neighbors)`.
     *
-    * Scale shape: one shuffle on the cluster key for the capped
-    * self-join ([[Dedup.capBuckets]] bounds any pathological cluster's
-    * contribution to cap² — same guard as every other candidate path),
-    * one linear left-join back to attach the result to every vector;
-    * at 100 TB, k grows with the corpus (k ≈ N / target-cluster-size,
-    * the paper regime) so per-cluster work stays constant while the
-    * assignment scan stays shuffle-free (centroids ride as literals).
+    * Scale shape: a [[Blocking]] self-join on the cluster key (capped,
+    * so a pathological cluster contributes at most cap² pairs — the
+    * guard every blocked path shares), each unordered pair verified
+    * once and then mirrored for the per-vector rollup, one linear
+    * left-join back to attach the result to every vector; at 100 TB,
+    * k grows with the corpus (k ≈ N / target-cluster-size, the paper
+    * regime) so per-cluster work stays constant while the assignment
+    * scan stays shuffle-free (centroids ride as literals).
     */
   def nearDup(df: DataFrame, idCol: String, embCol: String, k: Int,
               iters: Int, theta: Long, cap: Int = Dedup.MaxBucket,
@@ -122,25 +123,15 @@ object KMeans {
     val cents = centsOpt.getOrElse(fitCentroids(df, idCol, embCol, k, iters))
     val asg = transform(df, idCol, embCol, cents)
       .select(col(idCol), col("cluster").cast("long").as("cluster"))
-    val q = df.select(col(idCol), quantize(col(embCol)).as("qv"))
-    // Width pin (r15, the q53 pattern): the cluster-blocked self-join +
-    // exact sqDist verify is compute-dense but byte-light — the planner
-    // broadcasts one side and AQE coalesced the probe side (the
-    // capBuckets window output) to ONE task (~300 ms at sf0.1 inside
-    // q162). REPARTITION_BY_NUM on the row-unique id spreads the probe
-    // evenly at an env-derived width; results are join-key-invariant.
-    val m = Dedup.capBuckets(asg.join(q, Seq(idCol)), Seq("cluster"), idCol, cap)
-      .repartition(
-        math.max(2, df.sparkSession.sparkContext.defaultParallelism / 4),
-        col(idCol))
-    val nbr = m.select(col("cluster"), col(idCol).as("va"), col("qv").as("qa"))
-      .join(m.select(col("cluster"), col(idCol).as("vb"), col("qv").as("qb")),
-        Seq("cluster"))
-      .where(col("va") =!= col("vb") &&
-        sqDist(col("qa"), col("qb")) <= lit(theta))
-      .groupBy(col("va"))
-      .agg(count(lit(1)).as("n_near"), min(col("vb")).as("mn"))
-      .withColumnRenamed("va", idCol)
+    val (a, b) = (s"${idCol}_a", s"${idCol}_b")
+    val near = Blocking(asg.join(df.select(col(idCol), quantize(col(embCol)).as("qv")),
+        Seq(idCol)), Seq("cluster"), idCol, cap)
+      .selfPairs(Blocking.Lt, multiKey = false)
+      .where(sqDist(col("qv_a"), col("qv_b")) <= lit(theta))
+      .select(a, b)
+    val nbr = Blocking.mirror(near, a, b)
+      .groupBy(col(a).as(idCol))
+      .agg(count(lit(1)).as("n_near"), min(col(b)).as("mn"))
     asg.join(nbr, Seq(idCol), "left")
       .select(col(idCol), col("cluster"),
         coalesce(col("n_near"), lit(0L)).as("n_near"),

@@ -10,11 +10,12 @@ import org.apache.spark.sql.functions._
   * one hash shuffle on the bucket key.
   *
   * The embedding near-dup family runs on two operators that share one
-  * bucketing (one (vec_id, t, bucket) row per plane table) and one
-  * probe list ([[hammingProbes]]), and verify every candidate by exact
-  * cosine: [[nearDupPairs]] within one set (q54, q88, q89), and
-  * [[historyMatches]] of a batch against a capped [[historyIndex]]
-  * (q90, q92, the streamed admission behind q249). Their scale levers
+  * bucketing (one row per vector and plane table), one probe list
+  * ([[hammingProbes]]) and one capped [[Blocking]] probe join, and
+  * verify every candidate by exact cosine: [[nearDupPairs]] within one
+  * set (q54, q88, q89), and [[historyMatches]] of a batch against a
+  * [[historyIndex]] (q90, q92, the streamed admission behind q249).
+  * Their scale levers
   * are parameters, not constants: `numPlanes` grows the bucket space
   * with the corpus (b planes → 2^b buckets), `numTables` independent
   * plane tables (distinct seeds, see [[tableSeed]]) trade cost for
@@ -136,39 +137,39 @@ object Similarity {
   def hammingProbes(bucket: Column, numPlanes: Int = NumPlanes): Column =
     array(bucket +: (0 until numPlanes).map(i => bucket.bitwiseXOR(lit(1 << i))): _*)
 
-  /** (vec_id, embedding, nrm): the rows the exact verify fetches by
-    * vec_id. */
-  private def normed(emb: DataFrame): DataFrame =
-    emb.select(col("vec_id"), col("embedding"),
-      Dedup.norm(col("embedding")).as("nrm"))
-
-  /** One (vec_id, t, bucket) row per vector and table; table t buckets
-    * over planesFor(numPlanes, tableSeed(t)), so table 0 is the
-    * default-seed table. */
-  private def tableBuckets(vecs: DataFrame, numTables: Int,
+  /** One (vec_id, embedding, nrm, t, bucket) row per vector and table;
+    * table t buckets over planesFor(numPlanes, tableSeed(t)), so table 0
+    * is the default-seed table. The vector and its norm ride the row,
+    * so the verify after the probe join fetches nothing. */
+  private def tableBuckets(emb: DataFrame, numTables: Int,
                            numPlanes: Int): DataFrame =
-    vecs.select(col("vec_id"), explode(array((0 until numTables).map(t =>
-        struct(lit(t).as("t"), bucketFor(col("embedding"),
-          planesFor(numPlanes, tableSeed(t))).as("bucket"))): _*)).as("tb"))
-      .select(col("vec_id"), col("tb.t").as("t"), col("tb.bucket").as("bucket"))
+    emb.select(col("vec_id"), col("embedding"),
+        Dedup.norm(col("embedding")).as("nrm"),
+        explode(array((0 until numTables).map(t => struct(lit(t).as("t"),
+          bucketFor(col("embedding"), planesFor(numPlanes, tableSeed(t))).as("bucket"))): _*))
+          .as("tb"))
+      .select(col("vec_id"), col("embedding"), col("nrm"), col("tb.t").as("t"),
+        col("tb.bucket").as("bucket"))
 
-  /** (vec_id, t, probe): every bucket's [[hammingProbes]] keys. */
+  /** Every bucket row once per [[hammingProbes]] key, the key in
+    * `bucket`: the probe side of the join against capped buckets. */
   private def probes(buckets: DataFrame, numPlanes: Int): DataFrame =
-    buckets.select(col("vec_id"), col("t"),
-      explode(hammingProbes(col("bucket"), numPlanes)).as("probe"))
+    buckets.withColumn("bucket", explode(hammingProbes(col("bucket"), numPlanes)))
 
-  /** Exact-cosine verify of the candidate id pairs `cand(a, b)`: a's
-    * vector is fetched by vec_id from `va`, b's from `vb`, so the
-    * probe join before it shuffled ids only, never vectors. a's vector
-    * is the first operand, as in the oracle renderings. When `va` and
-    * `vb` are one frame, both fetches plan the same exchange, which
-    * Spark then runs once. */
-  private def verify(cand: DataFrame, a: String, va: DataFrame,
-                     b: String, vb: DataFrame, minCosine: Double): DataFrame =
-    cand.join(va.as("va"), col(a) === col("va.vec_id"))
-      .join(vb.as("vb"), col(b) === col("vb.vec_id"))
-      .select(col(a), col(b), cosine(col("va.embedding"), col("vb.embedding"),
-        col("va.nrm"), col("vb.nrm")).as("cosine"))
+  /** Bucket rows capped per (t, bucket): the build side of the probe
+    * join. */
+  private def blocks(buckets: DataFrame, cap: Int): Blocking.Blocks =
+    Blocking(buckets, Seq("t", "bucket"), "vec_id", cap)
+
+  /** `probe` joined to the capped `blocks` under `order`, verified by
+    * exact cosine (a's vector first, as in the oracle renderings):
+    * (vec_id_a, vec_id_b, cosine). A pair meets once per table at most,
+    * so only a multi-table join needs the DISTINCT. */
+  private def matches(blocks: Blocking.Blocks, probe: DataFrame, order: Blocking.Order,
+                      numTables: Int, minCosine: Double): DataFrame =
+    blocks.pairs(probe, order, multiKey = numTables > 1)
+      .select(col("vec_id_a"), col("vec_id_b"), cosine(col("embedding_a"),
+        col("embedding_b"), col("nrm_a"), col("nrm_b")).as("cosine"))
       .where(col("cosine") >= minCosine)
 
   /** Embedding near-dup pairs within one set (q54, q88, q89):
@@ -179,15 +180,13 @@ object Similarity {
     * oracle's left-to-right fold). Output (vec_a, vec_b, cosine) with
     * vec_a < vec_b, unordered — callers sort.
     *
-    * Scale shape: the probe join shuffles ids on (t, bucket), and the
-    * BUILD side is capped per (t, bucket) by `cap` (Dedup.capBuckets,
-    * smallest vec_ids kept; a probe-side cap would also bound it but
-    * loses pairs the build cap keeps), so candidate volume is
-    * ≤ numTables · (numPlanes+1) · cap · n — LINEAR in corpus size
-    * even when every vector collides in one bucket (ScaleSpec pins
-    * C(cap,2) output on an identical-vector corpus, invariant in n).
-    * One DISTINCT collapses pairs that meet in several tables; at
-    * numTables = 1 a Hamming-≤1 pair meets exactly once.
+    * Scale shape: a [[Blocking]] probe join keyed on (t, bucket), the
+    * build side capped per key by `cap` (smallest vec_ids kept; a
+    * probe-side cap would also bound it but loses pairs the build cap
+    * keeps), so candidate volume is ≤ numTables · (numPlanes+1) · cap · n
+    * — LINEAR in corpus size even when every vector collides in one
+    * bucket (ScaleSpec pins C(cap,2) output on an identical-vector
+    * corpus, invariant in n).
     *
     * Recall < 1 by design — the contract (and the oracle) is "pairs
     * whose buckets collide within Hamming 1 in some table, capped".
@@ -202,36 +201,28 @@ object Similarity {
   def nearDupPairs(emb: DataFrame, minCosine: Double, numTables: Int = 1,
                    numPlanes: Int = NumPlanes,
                    cap: Int = Dedup.MaxBucket): DataFrame = {
-    val vecs = normed(emb)
-    val buckets = tableBuckets(vecs, numTables, numPlanes)
-    val build = Dedup.capBuckets(buckets, Seq("t", "bucket"), "vec_id", cap)
-    val cand = probes(buckets, numPlanes).as("a").join(build.as("b"),
-        col("b.t") === col("a.t") && col("b.bucket") === col("a.probe") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
-      .distinct()
-    verify(cand, "vec_a", vecs, "vec_b", vecs, minCosine)
+    val buckets = tableBuckets(emb, numTables, numPlanes)
+    matches(blocks(buckets, cap), probes(buckets, numPlanes), Blocking.Lt, numTables,
+        minCosine)
+      .select(col("vec_id_a").as("vec_a"), col("vec_id_b").as("vec_b"), col("cosine"))
   }
 
-  /** The persistent side of [[historyMatches]]: history vectors
-    * (`vectors`, fetched by the verify) and their (vec_id, t, bucket)
-    * rows capped per (t, bucket) (`buckets`, the probe join's build
-    * side). [[cache]] pins both for a caller that probes many
-    * batches. */
-  final case class HistoryIndex(vectors: DataFrame, buckets: DataFrame,
-                                numTables: Int, numPlanes: Int) {
-    def cache(): HistoryIndex = { vectors.cache(); buckets.cache(); this }
+  /** The persistent side of [[historyMatches]]: the history's
+    * (vec_id, embedding, nrm, t, bucket) rows capped per (t, bucket),
+    * vectors riding the rows. [[cache]] pins them for a caller that
+    * probes many batches. */
+  final case class HistoryIndex(blocks: Blocking.Blocks, numTables: Int,
+                                numPlanes: Int) {
+    def cache(): HistoryIndex = { blocks.rows.cache(); this }
   }
 
   /** Buckets `history` (vec_id, embedding) once per table and caps each
     * (t, bucket) at `cap` smallest vec_ids. */
   def historyIndex(history: DataFrame, numTables: Int = 1,
                    numPlanes: Int = NumPlanes,
-                   cap: Int = Dedup.MaxBucket): HistoryIndex = {
-    val vecs = normed(history)
-    HistoryIndex(vecs, Dedup.capBuckets(tableBuckets(vecs, numTables, numPlanes),
-      Seq("t", "bucket"), "vec_id", cap), numTables, numPlanes)
-  }
+                   cap: Int = Dedup.MaxBucket): HistoryIndex =
+    HistoryIndex(blocks(tableBuckets(history, numTables, numPlanes), cap),
+      numTables, numPlanes)
 
   /** Incremental embedding dedup (q90, q92, and every trigger of
     * StreamingIngest.admitNovelEmbeddings, q249): a new `batch`
@@ -241,26 +232,19 @@ object Similarity {
     * history size. Output: one row per batch vector with at least one
     * verified history near-dup — (vec_id, dup_of = the earliest such
     * vec_id, n_matches = how many); a batch vector without a row is new
-    * content. Candidates meet once per table at most, and one DISTINCT
-    * collapses them before the verify. A multi-table index only adds
-    * candidates over table 0's, so its decisions only get stricter
-    * (ScaleSpec pins q92 ⊇ q90); the single-table weak-tail decision
-    * recall measured 0.152 at sf0.1 (scripts/recall_check.py).
-    * Intra-batch duplicates are q89's job, by design — admitting then
-    * clustering is the standard two-phase ingest. */
+    * content. A multi-table index only adds candidates over table 0's,
+    * so its decisions only get stricter (ScaleSpec pins q92 ⊇ q90); the
+    * single-table weak-tail decision recall measured 0.152 at sf0.1
+    * (scripts/recall_check.py). Intra-batch duplicates are q89's job,
+    * by design — admitting then clustering is the standard two-phase
+    * ingest. */
   def historyMatches(index: HistoryIndex, batch: DataFrame,
-                     minCosine: Double): DataFrame = {
-    val vecs = normed(batch)
-    val cand = probes(tableBuckets(vecs, index.numTables, index.numPlanes),
-        index.numPlanes).as("a")
-      .join(index.buckets.as("h"),
-        col("h.t") === col("a.t") && col("h.bucket") === col("a.probe"))
-      .select(col("a.vec_id").as("bv"), col("h.vec_id").as("hv"))
-      .distinct()
-    verify(cand, "bv", vecs, "hv", index.vectors, minCosine)
-      .groupBy(col("bv").as("vec_id"))
-      .agg(min("hv").as("dup_of"), count(lit(1)).as("n_matches"))
-  }
+                     minCosine: Double): DataFrame =
+    matches(index.blocks,
+        probes(tableBuckets(batch, index.numTables, index.numPlanes), index.numPlanes),
+        Blocking.Unordered, index.numTables, minCosine)
+      .groupBy(col("vec_id_a").as("vec_id"))
+      .agg(min("vec_id_b").as("dup_of"), count(lit(1)).as("n_matches"))
 
   /** DuckDB rendering of q92's [[historyMatches]] over a
     * [[historyIndex]] of the vectors below `splitId`, one row per batch

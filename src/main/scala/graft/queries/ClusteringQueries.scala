@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, KMeans, TopK}
+import graft.operators.{Blocking, Dedup, KMeans, TopK}
 import graft.sources.{Memo, Tables}
 
 /** Embedding-clustering extension queries (q98, q100): deterministic
@@ -510,8 +510,9 @@ object ClusteringQueries {
     // informative band). Anchors whose capped cluster has fewer than
     // NegRank non-self members emit nothing (no triplet to mine).
     // Reuses the SemDeDup blocking machinery verbatim: q98's
-    // exact-integer Lloyd assignment, Dedup.capBuckets bounding any
-    // cluster's pair expansion to cap², the codegen'd exact-int64
+    // exact-integer Lloyd assignment, the Blocking self-join capping any
+    // cluster's pair expansion to cap² (each unordered pair's distance
+    // computed once, then mirrored), the codegen'd exact-int64
     // sqdist kernel, and the custom TopKPerKey operator (an O(NegRank)
     // heap per anchor instead of a full per-anchor sort). Scale shape:
     // one shuffle on the cluster key for the capped self-join, one on
@@ -523,14 +524,11 @@ object ClusteringQueries {
       val asg = KMeans.transform(emb, "vec_id", "embedding", coarseCents(s, dir))
         .select(col("vec_id"), col("cluster").cast("long").as("cluster"))
       val q = emb.select(col("vec_id"), KMeans.quantize(col("embedding")).as("qv"))
-      val m = Dedup.capBuckets(asg.join(q, Seq("vec_id")), Seq("cluster"), "vec_id")
-      val pairs = m.select(col("cluster"), col("vec_id").as("anchor"), col("qv").as("qa"))
-        .join(m.select(col("cluster"), col("vec_id").as("cand"), col("qv").as("qb")),
-          Seq("cluster"))
-        .where(col("anchor") =!= col("cand"))
-        .select(col("anchor"), col("cand"),
-          KMeans.sqDist(col("qa"), col("qb")).as("d"))
-      TopK.perKey(pairs, Seq("anchor"),
+      val pairs = Blocking(asg.join(q, Seq("vec_id")), Seq("cluster"), "vec_id")
+        .selfPairs(Blocking.Lt, multiKey = false)
+        .select(col("vec_id_a").as("anchor"), col("vec_id_b").as("cand"),
+          KMeans.sqDist(col("qv_a"), col("qv_b")).as("d"))
+      TopK.perKey(Blocking.mirror(pairs, "anchor", "cand"), Seq("anchor"),
           Seq("d" -> true, "cand" -> true), k = NegRank)
         .where(col("rank") === 1 || col("rank") === NegRank)
         .groupBy("anchor")
@@ -987,7 +985,7 @@ object ClusteringQueries {
          |ORDER BY cluster, rank""".stripMargin,
 
     // q111: the Lloyd chain's final assignment, capped per cluster
-    // exactly as Dedup.capBuckets does (row_number over vec_id), then
+    // exactly as Blocking.cap does (row_number over vec_id), then
     // the within-cluster pair filter under the identical exact-int64
     // squared-L2 — the cap and the distance are both mirrored, so the
     // contract is two-sided. mcap is AS MATERIALIZED: it feeds both

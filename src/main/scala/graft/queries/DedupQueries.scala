@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{Bloom, TextAnalysis}
-import graft.operators.{Components, Dedup, Similarity}
+import graft.operators.{Blocking, Components, Dedup, Similarity}
 import graft.sources.{Memo, Tables}
 
 /** Deduplication extension queries (q50–q54, q67, q70, q87–q90): exact
@@ -16,11 +16,8 @@ import graft.sources.{Memo, Tables}
   * q51–q53 run over the PostsProxy corpus,
   * which contains exact and near duplicates by construction (same title
   * templates with varying parameters); q50 runs over raw `documents`
-  * (real duplicate texts at sf0.1); q54 over `embeddings`.
-  *
-  * Pair-generation steps go through temp views + spark.sql — Spark's
-  * ambiguous-self-join check rejects DataFrame-API self joins on shared
-  * lineage, while SQL-over-view self joins resolve cleanly.
+  * (real duplicate texts at sf0.1); q54 over `embeddings`. Every
+  * blocked pair join runs on [[Blocking]].
   */
 object DedupQueries {
 
@@ -70,107 +67,71 @@ object DedupQueries {
       .orderBy("vec_id")
   }
 
-  /** Title-level near-dup pairs — the MinHash+LSH candidate pipeline up
-    * to (but not including) the member expansion: registers the
-    * `mh_members` (doc_id, title) and `mh_sh` (title, rep, n_docs, sh)
-    * temp views and returns (title_a, title_b, rep_a, rep_b, jaccard)
-    * for every title pair sharing an LSH band bucket with verified
-    * Jaccard ≥ 0.5 (self-pairs title_a = title_b included — identical
-    * titles are trivially Jaccard 1). `rep` = min member doc_id.
-    * Shared by q51 (expands to doc pairs) and q70 (runs components on
-    * the title graph directly). */
-  /** Held in [[Memo]]: five declared queries (q51, q70, q87, the
-    * q219-family's cm_pairs user, q225) share this chain, as a
-    * production near-dup pipeline computes the title graph once and
-    * serves every downstream consumer from it. The signature frame,
-    * the capped band table, and the verified pair list are lazily
-    * localCheckpoint-backed (all title-bounded, a few hundred rows at
-    * any SF — titles are the distinct-title universe, not the
-    * corpus), so the `mh_sh`/`mh_bands` views read materialized
-    * blocks instead of re-running the minhash from the posts proxy. */
+  /** The MinHash+LSH title chain up to the member expansion, held in
+    * [[Memo]] for q51, q70, q87, q225 and q239: `members` (doc_id,
+    * title); `sh` (title, rep = min doc_id, n_docs, sh) per distinct
+    * title; `bands`, the (title, rep, band, bkey) rows blocked on
+    * (band, bkey) and checkpointed; and `pairs` (title_a, rep_a, title_b, rep_b,
+    * jaccard), every title pair sharing a band bucket (rep_a ≤ rep_b,
+    * so a title that kept a bucket pairs with itself at Jaccard 1) with
+    * verified Jaccard ≥ 0.5. Signatures and pairs are title-bounded and
+    * lazily localCheckpoint-backed, so consumers never re-run the
+    * minhash. */
   private case class TitleChain(members: DataFrame, sh: DataFrame,
-                                bands: DataFrame, pairs: DataFrame)
+                                bands: Blocking.Blocks, pairs: DataFrame)
 
-  /** Memoized chain + view refresh. The memo holds the FRAMES; the
-    * `mh_members`/`mh_sh`/`mh_bands` temp views are re-registered from
-    * them on EVERY call (not just on the build), so a session running
-    * queries against two fixture dirs never reads one dir's views
-    * against the other's cached pairs. */
-  private def titleChain(s: SparkSession, dir: String): TitleChain = {
-    val c = Memo(s, dir, "titleChain") {
+  private def titleChain(s: SparkSession, dir: String): TitleChain =
+    Memo(s, dir, "titleChain") {
       val members = proxyTitles(s, dir)
-      members.createOrReplaceTempView("mh_members")
-      val tit = members.groupBy("title")
+      val sig = members.groupBy("title")
         .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("n_docs"))
         .withColumn("sh", Dedup.shingles(TextAnalysis.tokens(col("title"))))
-      val sig = tit.withColumn("sig", Dedup.minhashSignature(col("sh")))
+        .withColumn("sig", Dedup.minhashSignature(col("sh")))
         .localCheckpoint(false)
       val sh = sig.select("title", "rep", "n_docs", "sh")
-      sh.createOrReplaceTempView("mh_sh")
-      val banded = sig.select(col("title"), col("rep"), explode(array((0 until Dedup.Bands).map(b =>
-          struct(lit(b).as("band"), Dedup.bandKey(col("sig"), b).as("bkey"))): _*)).as("bk"))
-        .select(col("title"), col("rep"), col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-      // skew guard: bound every band bucket to MaxBucket members (see
-      // Dedup.capBuckets — a boilerplate bucket otherwise joins quadratic)
-      // Width pin before the checkpoint (r15, same rationale as q53's
-      // cg_titles repartition): the band self-join + exact-Jaccard verify
-      // below probes these checkpointed blocks, and the checkpoint freezes
-      // whatever width AQE left — one narrow task carrying all the
-      // array_intersect work. REPARTITION_BY_NUM on the row-unique
-      // (title, band) spreads the probe evenly (broadcast build side needs
-      // no key alignment); q225's band audit re-joins the same view and
-      // inherits the width from the checkpointed layout.
-      val bands = Dedup.capBuckets(banded, Seq("band", "bkey"), "rep")
-        .repartition(math.max(2, s.sparkContext.defaultParallelism / 4),
-          col("title"), col("band"))
-        .localCheckpoint(false)
-      bands.createOrReplaceTempView("mh_bands")
-      val pairs = s.sql("""
-        |WITH cand AS (
-        |  SELECT DISTINCT a.title AS title_a, b.title AS title_b,
-        |                  a.rep AS rep_a, b.rep AS rep_b
-        |  FROM mh_bands a JOIN mh_bands b
-        |    ON a.band = b.band AND a.bkey = b.bkey AND a.rep <= b.rep),
-        |tj AS (
-        |  SELECT title_a, title_b, rep_a, rep_b,
-        |    CAST(size(array_intersect(sa.sh, sb.sh)) AS DOUBLE) /
-        |      (size(sa.sh) + size(sb.sh) - size(array_intersect(sa.sh, sb.sh))) AS jaccard
-        |  FROM cand
-        |  JOIN mh_sh sa ON sa.title = title_a
-        |  JOIN mh_sh sb ON sb.title = title_b)
-        |SELECT * FROM tj WHERE jaccard >= 0.5""".stripMargin)
+      val bands = Blocking(sig.select(col("title"), col("rep"),
+          explode(array((0 until Dedup.Bands).map(b => struct(lit(b).as("band"),
+            Dedup.bandKey(col("sig"), b).as("bkey"))): _*)).as("bk"))
+        .select(col("title"), col("rep"), col("bk.band").as("band"),
+          col("bk.bkey").as("bkey")), Seq("band", "bkey"), "rep").checkpointed
+      val pairs = withJaccard(bands.pairs(bands.rows, Blocking.Le, multiKey = true), sh)
+        .where(col("jaccard") >= 0.5)
         .localCheckpoint(false)
       TitleChain(members, sh, bands, pairs)
     }
-    c.members.createOrReplaceTempView("mh_members")
-    c.sh.createOrReplaceTempView("mh_sh")
-    c.bands.createOrReplaceTempView("mh_bands")
-    c
-  }
 
-  private def titlePairs(s: SparkSession, dir: String): DataFrame =
-    titleChain(s, dir).pairs
+  /** `cand` with the exact shingle Jaccard of its (title_a, title_b). */
+  private def withJaccard(cand: DataFrame, sh: DataFrame): DataFrame =
+    cand.join(sh.as("sa"), col("title_a") === col("sa.title"))
+      .join(sh.as("sb"), col("title_b") === col("sb.title"))
+      .select(cand.columns.toSeq.map(col) :+
+        Dedup.jaccard(col("sa.sh"), col("sb.sh")).as("jaccard"): _*)
 
   /** The title-level duplicate graph q70/q87 run components over:
     * cross edges between distinct-title near-dup pairs, plus self-edges
-    * for multi-doc titles that survived the band-bucket cap (docs
-    * sharing a title are exact duplicates — always pairwise connected —
-    * so doc-level components are exactly title-level components
-    * expanded to members, and the iterative loop sees |titles| nodes
-    * instead of the O(cluster²) doc-pair expansion). Singleton titles
-    * with no cross edge contribute no doc pairs — excluded, matching
-    * the pair-list oracle; a title capped out of every bucket produces
-    * no self candidate in the oracle either, so reading uncapped mh_sh
-    * here would diverge exactly when the MaxBucket guard binds. */
-  private def titleEdges(s: SparkSession, dir: String): DataFrame = {
-    val tp = titlePairs(s, dir)
-    val cross = tp.where(col("rep_a") =!= col("rep_b"))
+    * for multi-doc titles that kept a band bucket (docs sharing a title
+    * are exact duplicates — always pairwise connected — so doc-level
+    * components are exactly title-level components expanded to
+    * members, and the iterative loop sees |titles| nodes instead of the
+    * O(cluster²) doc-pair expansion). Singleton titles with no cross
+    * edge contribute no doc pairs — excluded, matching the pair-list
+    * oracle; a title capped out of every bucket has no self pair in the
+    * oracle either, so every self edge comes from the pair list. */
+  private def titleEdges(c: TitleChain): DataFrame = {
+    val cross = c.pairs.where(col("rep_a") =!= col("rep_b"))
       .select(col("rep_a").as("src"), col("rep_b").as("dst"))
-    val selfEdges = s.table("mh_sh").where(col("n_docs") >= 2)
-      .join(s.table("mh_bands").select("title").distinct(), Seq("title"))
+    val selfEdges = c.pairs.where(col("rep_a") === col("rep_b"))
+      .join(c.sh.where(col("n_docs") >= 2), col("rep_a") === col("rep"))
       .select(col("rep").as("src"), col("rep").as("dst"))
     cross.unionByName(selfEdges)
   }
+
+  /** q51/q53's doc pairs: verified (title_a, title_b, jaccard) title
+    * pairs expanded to their member docs by [[Blocking.expand]]. */
+  private def memberPairs(sel: DataFrame, members: DataFrame): DataFrame =
+    Blocking.expand(sel, members.select("doc_id", "title"), "title", "doc_id")
+      .select(col("doc_id_a").as("doc_a"), col("doc_id_b").as("doc_b"), col("jaccard"))
+      .orderBy("doc_a", "doc_b")
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -224,31 +185,19 @@ object DedupQueries {
     // MaxBucket skew guard bounds every bucket's pair count), one
     // rollup per band, |Bands| output rows.
     "q225_lsh_band_audit" -> ((s, dir) => {
-      titlePairs(s, dir) // registers the mh_sh / mh_bands temp views
-      s.sql("""
-        |WITH cand AS (
-        |  SELECT a.band, a.title AS ta, b.title AS tb
-        |  FROM mh_bands a JOIN mh_bands b
-        |    ON a.band = b.band AND a.bkey = b.bkey AND a.rep < b.rep),
-        |ver AS (
-        |  SELECT c.band,
-        |    CAST(size(array_intersect(sa.sh, sb.sh)) AS DOUBLE) /
-        |      (size(sa.sh) + size(sb.sh) - size(array_intersect(sa.sh, sb.sh)))
-        |      AS j
-        |  FROM cand c
-        |  JOIN mh_sh sa ON sa.title = c.ta
-        |  JOIN mh_sh sb ON sb.title = c.tb),
-        |per_band AS (SELECT band, CAST(count(*) AS BIGINT) AS n_candidates,
-        |    CAST(sum(CASE WHEN j >= 0.5 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_verified
-        |  FROM ver GROUP BY band),
-        |uniq AS (SELECT CAST(count(*) AS BIGINT) AS distinct_pairs
-        |  FROM (SELECT DISTINCT ta, tb FROM cand))
-        |SELECT CAST(band AS BIGINT) AS band, n_candidates, n_verified,
-        |  (CAST(1000000 AS BIGINT) * n_verified) div n_candidates
-        |    AS precision_ppm,
-        |  distinct_pairs
-        |FROM per_band CROSS JOIN uniq ORDER BY band""".stripMargin)
+      val c = titleChain(s, dir)
+      val cand = c.bands.candidates(c.bands.rows, Blocking.Lt)
+      withJaccard(cand, c.sh).groupBy("band")
+        .agg(count(lit(1)).as("n_candidates"),
+          sum(when(col("jaccard") >= 0.5, 1).otherwise(0)).cast("long").as("n_verified"))
+        .select(col("band").cast("long").as("band"), col("n_candidates"),
+          col("n_verified"),
+          expr("(CAST(1000000 AS BIGINT) * n_verified) div n_candidates")
+            .as("precision_ppm"),
+          // a global count is one row, so the subquery is never NULL
+          coalesce(cand.select("title_a", "title_b").distinct().agg(count(lit(1)))
+            .scalar(), lit(0L)).as("distinct_pairs"))
+        .orderBy("band")
     }),
 
     // CROSS-SOURCE CONTAMINATION MATRIX (q239): which sources host
@@ -272,29 +221,25 @@ object DedupQueries {
     // list regrouped by source pair. Exact int64 throughout; div on
     // non-negative operands only.
     "q239_contamination_matrix" -> ((s, dir) => {
-      titlePairs(s, dir).createOrReplaceTempView("cm_pairs")
-      PostsProxy.df(s, dir).where(col("title") =!= "")
-        .groupBy("title", "subreddit")
-        .agg(count(lit(1)).as("n"))
-        .select(col("title"), col("subreddit").as("src"), col("n"))
-        .createOrReplaceTempView("cm_titles")
-      s.sql("""
-        |WITH px AS (
-        |  SELECT least(ta.src, tb.src) AS src_a,
-        |    greatest(ta.src, tb.src) AS src_b,
-        |    CASE WHEN p.title_a = p.title_b AND ta.src = tb.src
-        |         THEN (ta.n * (ta.n - 1)) div 2
-        |         ELSE ta.n * tb.n END AS n_doc_pairs,
-        |    CASE WHEN p.title_a = p.title_b THEN 0 ELSE 1 END AS cross_title
-        |  FROM cm_pairs p
-        |  JOIN cm_titles ta ON ta.title = p.title_a
-        |  JOIN cm_titles tb ON tb.title = p.title_b
-        |  WHERE p.title_a <> p.title_b OR ta.src <= tb.src)
-        |SELECT src_a, src_b,
-        |  CAST(count(*) AS BIGINT) AS n_groups,
-        |  CAST(sum(cross_title) AS BIGINT) AS n_cross_groups,
-        |  CAST(sum(n_doc_pairs) AS BIGINT) AS n_doc_pairs
-        |FROM px GROUP BY src_a, src_b ORDER BY src_a, src_b""".stripMargin)
+      val ts = PostsProxy.df(s, dir).where(col("title") =!= "")
+        .groupBy("title", "subreddit").agg(count(lit(1)).as("n"))
+      def side(x: String): DataFrame = ts.select(col("title").as(s"title_$x"),
+        col("subreddit").as(s"src_$x"), col("n").as(s"n_$x"))
+      val sameTitle = col("title_a") === col("title_b")
+      titleChain(s, dir).pairs
+        .join(side("a"), "title_a").join(side("b"), "title_b")
+        .where(!sameTitle || col("src_a") <= col("src_b"))
+        .select(least(col("src_a"), col("src_b")).as("src_a"),
+          greatest(col("src_a"), col("src_b")).as("src_b"),
+          when(sameTitle && col("src_a") === col("src_b"),
+            expr("(n_a * (n_a - 1)) div 2")).otherwise(col("n_a") * col("n_b"))
+            .as("n_doc_pairs"),
+          when(sameTitle, 0).otherwise(1).as("cross_title"))
+        .groupBy("src_a", "src_b")
+        .agg(count(lit(1)).as("n_groups"),
+          sum("cross_title").cast("long").as("n_cross_groups"),
+          sum("n_doc_pairs").cast("long").as("n_doc_pairs"))
+        .orderBy("src_a", "src_b")
     }),
 
     // Exact dedup: hash-groupBy — ONE shuffle on the 128-bit text hash,
@@ -310,40 +255,13 @@ object DedupQueries {
     // Signatures are computed per DISTINCT title and candidate pairs
     // expanded back to doc pairs afterwards (the q53 trick: 400 distinct
     // titles vs 5000 docs at sf0.1 — 12× fewer md5 folds and a far
-    // smaller band join).
+    // smaller band join). Blocking.expand emits each doc pair once,
+    // with no aggregation over the quadratic doc-pair output (the
+    // oracle keeps its GROUP BY form and certifies the shape by the
+    // row hash).
     "q51_minhash_lsh" -> ((s, dir) => {
-      titlePairs(s, dir).createOrReplaceTempView("mh_sel")
-      // r15 restructure (guide §2.4): the old shape ran a
-      // GROUP BY (least, greatest) + max(jaccard) over the FULL
-      // quadratic doc-pair expansion — a second output-sized shuffle
-      // before the declared ORDER BY. But every doc has exactly ONE
-      // title (mh_members is keyed by doc), so an unordered doc pair
-      // is produced exactly once: by its unique unordered title pair
-      // when the titles differ, and by the title's self-pair when they
-      // match — where (d1, d2)/(d2, d1) both appear and the i < j
-      // predicate keeps one. The two branches are disjoint and
-      // duplicate-free, so the aggregation was a no-op dedup: a UNION
-      // ALL of a plain projection (cross) and an i < j expansion
-      // (self) is value-identical — the oracle (unchanged, still the
-      // GROUP BY form) certifies it via the row hash. Removes the
-      // biggest non-output shuffle of the engine's largest sf1 query.
-      s.sql("""
-        |SELECT doc_a, doc_b, jaccard FROM (
-        |  SELECT least(ma.doc_id, mb.doc_id) AS doc_a,
-        |         greatest(ma.doc_id, mb.doc_id) AS doc_b,
-        |         jaccard
-        |  FROM mh_sel
-        |  JOIN mh_members ma ON ma.title = mh_sel.title_a
-        |  JOIN mh_members mb ON mb.title = mh_sel.title_b
-        |  WHERE mh_sel.title_a <> mh_sel.title_b
-        |  UNION ALL
-        |  SELECT ma.doc_id AS doc_a, mb.doc_id AS doc_b, jaccard
-        |  FROM mh_sel
-        |  JOIN mh_members ma ON ma.title = mh_sel.title_a
-        |  JOIN mh_members mb ON mb.title = mh_sel.title_b
-        |  WHERE mh_sel.title_a = mh_sel.title_b
-        |    AND ma.doc_id < mb.doc_id)
-        |ORDER BY doc_a, doc_b""".stripMargin)
+      val c = titleChain(s, dir)
+      memberPairs(c.pairs.select("title_a", "title_b", "jaccard"), c.members)
     }),
 
     // SimHash: 16-bit signature per doc + bucket size (identical
@@ -366,53 +284,26 @@ object DedupQueries {
     //      O(docs²) n-gram intersections into O(titles²).
     //  (2) the intersection size is materialized once per pair, not
     //      re-evaluated inside the Jaccard formula.
+    // A title has one block, so each unordered title pair is verified
+    // once and Blocking.expand emits each doc pair once, as in q51:
+    // no GROUP BY over the 1.23 M-row doc-pair expansion at sf0.1 (the
+    // oracle keeps its GROUP BY form and certifies the shape by the
+    // row hash).
     "q53_ngram_jaccard" -> ((s, dir) => {
-      val titles = proxyTitles(s, dir)
-        .withColumn("toks", TextAnalysis.tokens(col("title")))
-        .where(size(col("toks")) > 0)
-      titles.select(col("doc_id"), col("title")).createOrReplaceTempView("cg_members")
-      val blocked = titles.groupBy(col("title")).agg(min(col("doc_id")).as("rep"))
+      val titles = proxyTitles(s, dir).where(size(TextAnalysis.tokens(col("title"))) > 0)
+      val blocks = Blocking(titles.groupBy("title").agg(min(col("doc_id")).as("rep"))
         .select(col("title"), col("rep"),
           concat_ws("#", element_at(TextAnalysis.tokens(col("title")), 1),
             size(TextAnalysis.tokens(col("title"))).cast("string")).as("blk"),
-          Dedup.charGrams(lower(trim(col("title")))).as("cg"))
-      // skew guard: same MaxBucket bound on the block key (Dedup.capBuckets)
-      // Width pin (r15, guide §2.5 narrow compute-dense stages): the
-      // planner broadcasts the b-side of the block self-join, so the
-      // whole pair-generation + exact char-gram verify fuses into the
-      // stage that reads the capBuckets window output — ~290 KB, which
-      // AQE's byte-based coalescer ran as ONE task carrying ~850 ms of
-      // array_intersect CPU at sf0.1. REPARTITION_BY_NUM (env-derived
-      // width, never coalesced by AQE) on the row-unique rep spreads
-      // the probe side evenly — block-size skew cannot hot-spot a
-      // partition because a broadcast probe needs no key alignment.
-      // (repartition(W, blk) does NOT work here: the window already
-      // hash-partitions by blk, so the optimizer drops the identical
-      // repartition and AQE re-coalesces the window exchange.)
-      Dedup.capBuckets(blocked, Seq("blk"), "rep")
-        .repartition(math.max(2, s.sparkContext.defaultParallelism / 4), col("rep"))
-        .createOrReplaceTempView("cg_titles")
-      s.sql("""
-        |WITH tp AS (
-        |  SELECT a.title AS title_a, b.title AS title_b,
-        |    size(array_intersect(a.cg, b.cg)) AS inter,
-        |    size(a.cg) AS sza, size(b.cg) AS szb
-        |  FROM cg_titles a JOIN cg_titles b
-        |    ON a.blk = b.blk AND a.rep <= b.rep),
-        |tj AS (
-        |  SELECT title_a, title_b,
-        |    CAST(inter AS DOUBLE) / (sza + szb - inter) AS jaccard
-        |  FROM tp),
-        |sel AS (SELECT * FROM tj WHERE jaccard >= 0.6)
-        |SELECT least(ma.doc_id, mb.doc_id) AS doc_a,
-        |       greatest(ma.doc_id, mb.doc_id) AS doc_b,
-        |       max(jaccard) AS jaccard
-        |FROM sel
-        |JOIN cg_members ma ON ma.title = sel.title_a
-        |JOIN cg_members mb ON mb.title = sel.title_b
-        |WHERE ma.doc_id <> mb.doc_id
-        |GROUP BY least(ma.doc_id, mb.doc_id), greatest(ma.doc_id, mb.doc_id)
-        |ORDER BY doc_a, doc_b""".stripMargin)
+          Dedup.charGrams(lower(trim(col("title")))).as("cg")), Seq("blk"), "rep")
+      val sel = blocks.selfPairs(Blocking.Le, multiKey = false)
+        .select(col("title_a"), col("title_b"),
+          size(array_intersect(col("cg_a"), col("cg_b"))).as("inter"),
+          size(col("cg_a")).as("sza"), size(col("cg_b")).as("szb"))
+        .select(col("title_a"), col("title_b"), (col("inter").cast("double") /
+          (col("sza") + col("szb") - col("inter"))).as("jaccard"))
+        .where(col("jaccard") >= 0.6)
+      memberPairs(sel, titles)
     }),
 
     // Duplicate-cluster assignment: connected components over the q51
@@ -430,9 +321,10 @@ object DedupQueries {
     // minimal member (see titleEdges). Scale shape: the expansion joins
     // run AFTER the loop, once, keyed on title.
     "q70_dup_clusters" -> ((s, dir) => {
-      Components.connectedComponents(titleEdges(s, dir))
-        .join(s.table("mh_sh").select(col("title"), col("rep").as("node")), Seq("node"))
-        .join(s.table("mh_members"), Seq("title"))
+      val c = titleChain(s, dir)
+      Components.connectedComponents(titleEdges(c))
+        .join(c.sh.select(col("title"), col("rep").as("node")), Seq("node"))
+        .join(c.members, Seq("title"))
         .select(col("doc_id"), col("component").as("cluster"))
         .orderBy("doc_id")
     }),
@@ -449,10 +341,11 @@ object DedupQueries {
     // run on the title graph, then ONE join keyed on title fans the
     // cluster label out to members.
     "q87_dedup_representatives" -> ((s, dir) => {
-      val comps = Components.connectedComponents(titleEdges(s, dir))
-      s.table("mh_sh").select(col("title"), col("rep"))
+      val c = titleChain(s, dir)
+      val comps = Components.connectedComponents(titleEdges(c))
+      c.sh.select(col("title"), col("rep"))
         .join(comps.withColumnRenamed("node", "rep"), Seq("rep"), "left")
-        .join(s.table("mh_members"), Seq("title"))
+        .join(c.members, Seq("title"))
         .select(col("doc_id"),
           coalesce(col("component"), col("rep")).as("keep_doc_id"))
         .orderBy("doc_id")
@@ -477,11 +370,8 @@ object DedupQueries {
     // Embedding-cosine near-dup pairs, LSH-prefiltered — the full
     // engine (Hamming-1 multiprobe + per-bucket cap + parameterized
     // plane count) lives in Similarity.nearDupPairs; this query is the
-    // single-table instance at the deliberately-low 0.4 threshold.
-    // This replaced the round-3 all-pairs `a.vec_id < b.vec_id`
-    // baseline — the one O(n²) construct in the suite — and since
-    // round 6 the build side is ALSO capped per bucket (the last
-    // uncapped candidate path), so candidate volume is linear in n.
+    // single-table instance at the deliberately-low 0.4 threshold; its
+    // capped Blocking probe join keeps candidate volume linear in n.
     //
     // Measured recall on the fixture (numpy cross-check, sf0.1): TRUE
     // duplicates (identical vectors) are retained with recall 1.0 —
@@ -489,13 +379,10 @@ object DedupQueries {
     // this) — while the weak-similarity tail the 0.4 threshold admits
     // (≈66° apart; expected bucket Hamming ≈ 2.9 over 8 planes) is kept
     // at ~15 % for a ~27× candidate reduction. q88's multi-table union
-    // is the recall lever when the tail matters.
-    // Since round 7 the plane count is CORPUS-SIZED, not the fixed
-    // 8-plane default: numPlanes = planesForCorpus(count), so the
-    // bucket space grows with the corpus and the cap only guards
-    // adversarial skew instead of doing all the occupancy work (the
-    // documented 100 TB lever, now actually bound). The oracle computes
-    // the same width in SQL.
+    // is the recall lever when the tail matters. The plane count is
+    // corpus-sized (planesForCorpus(count)), so the bucket space grows
+    // with the corpus and the cap only guards adversarial skew; the
+    // oracle computes the same width in SQL.
     "q54_embedding_dup" -> ((s, dir) =>
       Similarity.nearDupPairs(Tables.load(s, dir, "embeddings"), 0.4,
           numPlanes = adaptivePlanes(s, dir))

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, Multimodal}
+import graft.operators.{Blocking, Multimodal}
 import graft.sources.Tables
 
 /** Multimodal extension queries (q60–q62) over a media table synthesized
@@ -100,7 +100,7 @@ object MultimodalQueries {
     // the oracle stays SQL-expressible — transitive closure is q70/
     // q87's components territory). Scale shape: fingerprints are a
     // per-row projection (no shuffle); candidates come from a
-    // band-bucket equi-join with Dedup.capBuckets bounding any hot
+    // band-bucket Blocking self-join with its cap bounding any hot
     // bucket (quadratic occupancy structurally impossible — ScaleSpec
     // precedent); verification is codegen'd xor+bit_count on two
     // int64s; the rep rollup is one shuffle on media_id. Fixture
@@ -133,18 +133,11 @@ object MultimodalQueries {
             struct(lit(3L).as("band"), expr("w1 % 65536").as("v")))).as("bd"))
         .select(col("media_id"), col("w0"), col("w1"),
           col("bd.band").as("band"), col("bd.v").as("v"))
-      val capped = Dedup.capBuckets(banded, Seq("band", "v"), "media_id", BandCap)
-      val pairs = capped.select(col("band"), col("v"), col("media_id").as("a"),
-          col("w0").as("a0"), col("w1").as("a1"))
-        .join(capped.select(col("band"), col("v"), col("media_id").as("b"),
-          col("w0").as("b0"), col("w1").as("b1")), Seq("band", "v"))
-        .where(col("a") < col("b"))
-        .select("a", "a0", "a1", "b", "b0", "b1").distinct()
-        .where(expr(s"bit_count(a0 ^ b0) + bit_count(a1 ^ b1) <= $HamThresh"))
-        .select(col("a"), col("b"))
-      val sym = pairs.unionByName(
-        pairs.select(col("b").as("a"), col("a").as("b")))
-      val agg = sym.groupBy("a")
+      val pairs = Blocking(banded, Seq("band", "v"), "media_id", BandCap)
+        .selfPairs(Blocking.Lt, multiKey = true)
+        .where(expr(s"bit_count(w0_a ^ w0_b) + bit_count(w1_a ^ w1_b) <= $HamThresh"))
+        .select(col("media_id_a").as("a"), col("media_id_b").as("b"))
+      val agg = Blocking.mirror(pairs, "a", "b").groupBy("a")
         .agg(min("b").as("mn"), count(lit(1)).as("n_near_dups"))
       f.join(agg, f("media_id") === agg("a"), "left")
         .select(col("media_id"),

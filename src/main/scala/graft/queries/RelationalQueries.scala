@@ -776,8 +776,8 @@ object RelationalQueries {
           col("p_name").isNotNull)
         .withColumn("blk", concat_ws("#", col("p_brand"), col("p_type"),
           expr("split_part(p_name, ' ', 1)")))
-      val capped = graft.operators.Dedup
-        .capBuckets(blocked, Seq("blk"), "p_partkey")
+      val capped = graft.operators.Blocking
+        .cap(blocked, Seq("blk"), "p_partkey", graft.operators.Dedup.MaxBucket)
         // struct key ≡ the oracle's triple equality (p_brand contains
         // '#', so joining on the concat string could alias distinct
         // triples; the concat stays ONLY as the cap's grouping key,

@@ -291,4 +291,18 @@ class AuditQueriesSpec extends SparkSpec {
     assert(matrix.filter(_._2 > 0L) == want,
       s"matrix $matrix vs q51 regroup $want")
   }
+
+  test("blocked pair queries leave the caller's temp views alone") {
+    // a caller's own views under the names the title chain (mh_sh) and
+    // q53 (cg_titles) once registered as pair-join scaffolding
+    val mine = spark.range(3).toDF("x")
+    for (v <- Seq("mh_sh", "cg_titles")) mine.createOrReplaceTempView(v)
+    try {
+      for (q <- Seq("q51_minhash_lsh", "q53_ngram_jaccard", "q70_dup_clusters",
+                    "q87_dedup_representatives", "q225_lsh_band_audit"))
+        DedupQueries.queries(q)(spark, dir).collect()
+      for (v <- Seq("mh_sh", "cg_titles"))
+        assert(spark.table(v).collect().map(_.getLong(0)).toSeq == Seq(0L, 1L, 2L), v)
+    } finally Seq("mh_sh", "cg_titles").foreach(spark.catalog.dropTempView)
+  }
 }

@@ -230,7 +230,7 @@ class GraphSpec extends SparkSpec {
 
   /** Replaces `dir/<name>.parquet` with the one parquet file `df` writes. */
   private def put(dir: Path, name: String, df: org.apache.spark.sql.DataFrame): Unit = {
-    val out = Files.createTempDirectory("graphspec-out").resolve("t").toString
+    val out = tempDir("graphspec-out").resolve("t").toString
     df.coalesce(1).write.parquet(out)
     val part = new java.io.File(out).listFiles().filter(_.getName.endsWith(".parquet")).head
     Files.move(part.toPath, dir.resolve(s"$name.parquet"), StandardCopyOption.REPLACE_EXISTING)
@@ -239,7 +239,7 @@ class GraphSpec extends SparkSpec {
   test("q112, q119 and q113 share one purchase CsrGraph; a fixture rewrite rebuilds it") {
     val src = java.nio.file.Paths.get("/root/testdata/sf0.001")
     def fixture(): Path = {
-      val d = Files.createTempDirectory("graphspec")
+      val d = tempDir("graphspec")
       for (t <- Seq("orders", "lineitem", "supplier"))
         Files.copy(src.resolve(s"$t.parquet"), d.resolve(s"$t.parquet"))
       d

@@ -11,8 +11,7 @@ import org.apache.spark.sql.functions.{col, expr, lit}
 class MemoSpec extends SparkSpec {
 
   private def tmpDir(): Path = {
-    val d = Files.createTempDirectory("memospec")
-    d.toFile.deleteOnExit()
+    val d = tempDir("memospec")
     d
   }
 

@@ -89,8 +89,7 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("highWaterMark prunes a date-partitioned sink to the window's days, same value") {
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "hwmsink").toString + "/posts"
+    val base = tempDir("hwmsink").toString + "/posts"
     // 40 days, one post a day at 10:00: 2024-01-01 .. 2024-02-09
     Sink.writeTimePartitioned(spark.range(40).select(
         concat(lit("p"), col("id")).as("post_id"),

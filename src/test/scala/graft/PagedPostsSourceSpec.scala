@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 class PagedPostsSourceSpec extends SparkSpec {
 
   private def writePages(): String = {
-    val dir = Files.createTempDirectory(Paths.get("target"), "pages").toString
+    val dir = tempDir("pages").toString
     def w(name: String, lines: String*): Unit =
       Files.writeString(Paths.get(dir, name), lines.mkString("\n"))
     w("page-0.json",
@@ -45,7 +45,7 @@ class PagedPostsSourceSpec extends SparkSpec {
   }
 
   test("cyclic next-links terminate instead of looping forever") {
-    val dir = Files.createTempDirectory(Paths.get("target"), "cyc").toString
+    val dir = tempDir("cyc").toString
     Files.writeString(Paths.get(dir, "page-0.json"),
       """{"post_id":"p1","title":"t","url":"u","author":"a","created_utc_ms":1,"upvotes":1,"comments_text":"c","subreddit":"r"}
         |{"next":"page-1.json"}""".stripMargin)
@@ -56,7 +56,7 @@ class PagedPostsSourceSpec extends SparkSpec {
   }
 
   test("retry option: absent page appears before retries exhaust → full read") {
-    val dir = Files.createTempDirectory(Paths.get("target"), "retry").toString
+    val dir = tempDir("retry").toString
     Files.writeString(Paths.get(dir, "page-0.json"),
       """{"post_id":"p1","title":"t","url":"u","author":"a","created_utc_ms":1,"upvotes":1,"comments_text":"c","subreddit":"r"}
         |{"next":"page-late.json"}""".stripMargin)
@@ -76,7 +76,7 @@ class PagedPostsSourceSpec extends SparkSpec {
   }
 
   test("retry option: retries exhaust on a permanently absent page → loud failure") {
-    val dir = Files.createTempDirectory(Paths.get("target"), "retryx").toString
+    val dir = tempDir("retryx").toString
     Files.writeString(Paths.get(dir, "page-0.json"),
       """{"post_id":"p1","title":"t","url":"u","author":"a","created_utc_ms":1,"upvotes":1,"comments_text":"c","subreddit":"r"}
         |{"next":"page-gone.json"}""".stripMargin)

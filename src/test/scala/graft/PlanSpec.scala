@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.operators.Sink
 import graft.sources.Tables
@@ -56,11 +55,14 @@ class PlanSpec extends SparkSpec {
     // (q55 is excluded by design: the brute-force kNN baseline
     // deliberately broadcasts the 5-row query side over the corpus.)
     for (q <- Seq("q51_minhash_lsh", "q53_ngram_jaccard", "q54_embedding_dup",
-                  "q56_ann_lsh", "q66_ann_multiprobe", "q75_levenshtein",
+                  "q56_ann_lsh", "q66_ann_multiprobe", "q70_dup_clusters",
+                  "q75_levenshtein", "q87_dedup_representatives",
                   "q88_embedding_dup_multitable",
                   "q90_incremental_embedding_dedup",
                   "q92_incremental_embedding_dedup_multitable",
-                  "q93_dup_passages")) {
+                  "q93_dup_passages", "q111_cluster_semantic_dedup",
+                  "q151_contrastive_triplets", "q162_dedup_cascade",
+                  "q213_media_near_dup", "q225_lsh_band_audit")) {
       val p = plan(q)
       assert(!p.contains("CartesianProduct"), s"$q plans a cartesian product")
       assert(!p.contains("BroadcastNestedLoopJoin"), s"$q plans a nested-loop join")
@@ -449,8 +451,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("time-partitioned sink prunes partitions for high-water-mark reads") {
-    val out = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "sink").toString + "/events"
+    val out = tempDir("sink").toString + "/events"
     Sink.writeTimePartitioned(Tables.load(spark, dir, "events"), out, "ts")
     val read = spark.read.parquet(out)
       .where(col("dt") >= lit("2024-01-10"))

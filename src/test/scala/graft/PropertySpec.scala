@@ -319,8 +319,7 @@ class PropertySpec extends SparkSpec {
     import graft.streaming.VersionedStore
     val rng = new scala.util.Random(77)
     for (round <- 0 until 2) {
-      val root = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get("target"), s"vstore-prop$round").toString + "/s"
+      val root = tempDir(s"vstore-prop$round").toString + "/s"
       val truth = scala.collection.mutable.Map.empty[Long, Long]
       def applyBatch(id: Long, data: Seq[(Long, Long)], crash: Boolean): Unit =
         if (!VersionedStore.committed(root, id)) {

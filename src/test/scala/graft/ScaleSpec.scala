@@ -1,8 +1,7 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, Similarity, SkewJoin}
+import graft.operators.{Blocking, Dedup, Similarity, SkewJoin}
 
 /** Scale-technique specs: salted skew joins and bucketed co-located
   * joins — the explicit 100 TB tools the query inventory leans on. */
@@ -121,22 +120,42 @@ class ScaleSpec extends SparkSpec {
 
   test("capBuckets bounds an adversarial LSH bucket to cap members (no quadratic join)") {
     // 10⁴ distinct near-identical titles landing in ONE candidate bucket
-    // — the pathological corpus the q51/q53 cap guards against. Without
-    // the cap the candidate self-join emits ~5·10⁷ pairs; with it, at
-    // most cap·(cap+1)/2.
+    // — the pathological corpus every blocked pair path guards against.
+    // Without the cap the candidate self-join emits ~5·10⁷ pairs; with
+    // it, at most cap·(cap+1)/2.
     val cap = 100
     val bucket = (1L to 10000L).map(i => ("blk0", s"title variant $i", i))
       .toDF("blk", "title", "rep")
-    val capped = Dedup.capBuckets(bucket, Seq("blk"), "rep", cap)
-    assert(capped.count() == cap)
+    val capped = Blocking(bucket, Seq("blk"), "rep", cap)
+    assert(capped.rows.count() == cap)
     // deterministic: keeps the cap smallest reps
-    assert(capped.agg(max("rep")).head.getLong(0) == cap.toLong)
-    val cappedB = capped.select(col("blk"), col("rep").as("rep_b"))
-    val pairs = capped.join(cappedB, "blk").where(col("rep") <= col("rep_b"))
-    assert(pairs.count() == cap.toLong * (cap + 1) / 2)
+    assert(capped.rows.agg(max("rep")).head.getLong(0) == cap.toLong)
+    assert(capped.selfPairs(Blocking.Le, multiKey = false).count() ==
+      cap.toLong * (cap + 1) / 2)
     // a bucket below the cap passes through untouched
     val small = (1L to 50L).map(i => ("blk1", s"t$i", i)).toDF("blk", "title", "rep")
-    assert(Dedup.capBuckets(small, Seq("blk"), "rep", cap).count() == 50)
+    assert(Blocking.cap(small, Seq("blk"), "rep", cap).count() == 50)
+
+    // Capping only the build side equals capping both sides in a
+    // same-key self-join: a row capped out of its key has a larger id
+    // than every kept row, so it meets no kept row under < or ≤. A
+    // random keyed frame (shuffled ids) with one hot key above the cap:
+    val rng = new scala.util.Random(11)
+    val keyed = rng.shuffle((1L to 1500L).toVector).zipWithIndex
+      .map { case (id, i) => (if (i < 600) "hot" else s"k${rng.nextInt(40)}", id) }
+      .toDF("blk", "rep")
+    val blocks = Blocking(keyed, Seq("blk"), "rep", cap)
+    val kept = keyed.groupBy("blk").count().collect().map(r => math.min(r.getLong(1), cap))
+    def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      df.select("rep_a", "rep_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    for ((order, selfPairs) <- Seq(Blocking.Lt -> 0L, Blocking.Le -> 1L)) {
+      val buildOnly = pairs(blocks.candidates(keyed, order))
+      assert(buildOnly == pairs(blocks.candidates(blocks.rows, order)), order)
+      assert(buildOnly == pairs(blocks.selfPairs(order, multiKey = false)), order)
+      // bounded as above: a key contributes C(kept, 2) pairs, plus one
+      // self pair per kept row under ≤ — the hot key C(cap, 2) (+ cap)
+      assert(buildOnly.size == kept.map(m => m * (m - 1) / 2 + selfPairs * m).sum, order)
+    }
   }
 
   test("q54's capped LSH build side: identical-vector corpus emits C(cap,2) pairs, invariant in n") {
@@ -395,8 +414,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("bucketed tables co-locate the join: no shuffle exchange in the plan") {
-    val wh = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "warehouse").toString
+    val wh = tempDir("warehouse").toString
     spark.sql("DROP TABLE IF EXISTS b_orders")
     spark.sql("DROP TABLE IF EXISTS b_items")
     (1L to 100L).map(i => (i, s"o$i")).toDF("order_id", "o")

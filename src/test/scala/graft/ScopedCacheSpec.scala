@@ -8,12 +8,11 @@ import graft.operators.ScopedCache
 class ScopedCacheSpec extends SparkSpec {
 
   test("a fixture rewritten at the same path is persisted afresh, not served stale") {
-    val d = Files.createTempDirectory("scopedcache")
-    d.toFile.deleteOnExit()
+    val d = tempDir("scopedcache")
     // one flat fixture file, rewritten in place as a fixture generator
     // would (outside Spark's own write path, which refreshes caches)
     def put(lo: Long, hi: Long): Unit = {
-      val out = Files.createTempDirectory("scopedcache-out").resolve("o").toString
+      val out = tempDir("scopedcache-out").resolve("o").toString
       spark.range(lo, hi).toDF("x").coalesce(1).write.parquet(out)
       val part = new java.io.File(out).listFiles()
         .filter(_.getName.endsWith(".parquet")).head.toPath

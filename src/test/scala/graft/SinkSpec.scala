@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 import graft.operators.{Quarantine, Sink}
@@ -12,8 +11,7 @@ class SinkSpec extends SparkSpec {
   private def ts(s: String) = Timestamp.valueOf(s)
 
   test("upsertTimePartitioned rewrites only touched partitions") {
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "psink").toString + "/posts"
+    val base = tempDir("psink").toString + "/posts"
     val seed = Seq(
       ("p1", ts("2024-01-01 10:00:00"), "v1"),
       ("p2", ts("2024-01-02 10:00:00"), "v1"),
@@ -45,8 +43,7 @@ class SinkSpec extends SparkSpec {
   }
 
   test("upsert's existing-side read is statically partition-pruned to touched days") {
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "prunesink").toString + "/posts"
+    val base = tempDir("prunesink").toString + "/posts"
     val seed = (1 to 10).map(d => (s"p$d", ts(f"2024-01-$d%02d 10:00:00"), "v1"))
       .toDF("post_id", "ts", "v")
     Sink.writeTimePartitioned(seed, base, "ts")
@@ -61,8 +58,7 @@ class SinkSpec extends SparkSpec {
   }
 
   test("writeShardPartitioned: shard=N layout, in-file global order, lossless") {
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "shardsink").toString + "/shards"
+    val base = tempDir("shardsink").toString + "/shards"
     val manifest = graft.queries.CorpusQueries.shardManifest(
       spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
         .select(col("doc_id"),

@@ -10,8 +10,7 @@ import graft.sources.Tables
 class SourceFormatsSpec extends SparkSpec {
 
   test("events round-trips identically through csv, json, parquet, orc, and xml") {
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "formats").toString
+    val dir = tempDir("formats").toString
     val events = Tables.load(spark, "/root/testdata/sf0.001", "events")
       // normalize ts to string for CSV-safe round-trip comparison domain
       .withColumn("ts", date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS"))
@@ -43,8 +42,7 @@ class SourceFormatsSpec extends SparkSpec {
   }
 
   test("PERMISSIVE json read quarantines corrupt records (SRC2 semantics)") {
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "badjson").toString
+    val dir = tempDir("badjson").toString
     Files.writeString(java.nio.file.Paths.get(dir, "data.json"),
       """{"id": 1, "v": "ok"}
         |{"id": broken

@@ -1,7 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import org.scalatest.{BeforeAndAfterAll, Outcome}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for specs (one JVM-wide session; scalatest
@@ -10,6 +12,23 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   override def afterAll(): Unit = () // keep the shared session alive
+
+  private val tempDirs = scala.collection.mutable.ListBuffer.empty[Path]
+
+  /** A fresh directory under target/ named after `prefix`, deleted when
+    * the test that made it ends, also when the test fails. */
+  def tempDir(prefix: String): Path = {
+    val d = Files.createTempDirectory(Paths.get("target"), prefix)
+    tempDirs += d
+    d
+  }
+
+  override def withFixture(test: NoArgTest): Outcome =
+    try super.withFixture(test)
+    finally {
+      tempDirs.foreach(d => FileUtils.deleteQuietly(d.toFile))
+      tempDirs.clear()
+    }
 }
 
 object SparkSpec {

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.operators.Sink
 
@@ -10,8 +9,7 @@ class StorageSpec extends SparkSpec {
   import spark.implicits._
 
   test("compact collapses many small files without changing the data") {
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "compact").toString + "/t"
+    val dir = tempDir("compact").toString + "/t"
     val df = (1L to 1000L).map(i => (i, s"row$i")).toDF("id", "v")
     df.repartition(50).write.parquet(dir) // simulate micro-batch debris
     def parquetFiles = new java.io.File(dir).listFiles()
@@ -24,8 +22,7 @@ class StorageSpec extends SparkSpec {
   }
 
   test("mergeSchema unifies evolved schemas across file generations") {
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "evolve").toString + "/t"
+    val dir = tempDir("evolve").toString + "/t"
     Seq((1L, "a")).toDF("id", "v").write.parquet(s"$dir/gen=1")
     Seq((2L, "b", 3.5)).toDF("id", "v", "score").write.parquet(s"$dir/gen=2")
     val df = spark.read.option("mergeSchema", "true").parquet(dir)

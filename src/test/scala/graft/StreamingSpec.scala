@@ -93,7 +93,7 @@ class StreamingSpec extends SparkSpec {
     val batches = Seq.fill(3)(Seq.fill(40)(Seq.fill(12)(draw()).mkString(" ")))
     val tracker = new StreamingIngest.HeavyHitterTracker(k = 5)
     val input = MemoryStream[String]
-    val ckpt = java.nio.file.Files.createTempDirectory("hh_ckpt").toString
+    val ckpt = tempDir("hh_ckpt").toString
     // one AvailableNow run per batch against the same checkpoint: each
     // restart drains only the new data, so the tracker also proves
     // restart-safety of the driver-held grid
@@ -119,7 +119,7 @@ class StreamingSpec extends SparkSpec {
     val batches = Seq.fill(3)(Seq.fill(800)(rng.nextInt(1500).toLong))
     val tracker = new StreamingIngest.DistinctTracker
     val input = MemoryStream[Long]
-    val ckpt = java.nio.file.Files.createTempDirectory("hll_ckpt").toString
+    val ckpt = tempDir("hll_ckpt").toString
     batches.foreach { b =>
       input.addData(b: _*)
       val q = StreamingIngest.trackDistinct(
@@ -144,7 +144,7 @@ class StreamingSpec extends SparkSpec {
     val batches = Seq.fill(3)(Seq.fill(500)(rng.nextDouble() * 100))
     val tracker = new StreamingIngest.QuantileTracker(lo = 0L, hi = 9999L)
     val input = MemoryStream[Double]
-    val ckpt = java.nio.file.Files.createTempDirectory("qt_ckpt").toString
+    val ckpt = tempDir("qt_ckpt").toString
     batches.foreach { b =>
       input.addData(b: _*)
       val q = StreamingIngest.trackQuantiles(
@@ -190,7 +190,7 @@ class StreamingSpec extends SparkSpec {
     val rows = ev.where(col("t") * 2 >= lit(t0 + t1))
       .select("event_type", "value").as[(String, Double)].collect().toSeq
     val input = MemoryStream[(String, Double)]
-    val ckpt = Files.createTempDirectory("drift_ckpt").toString
+    val ckpt = tempDir("drift_ckpt").toString
     rows.grouped(math.max(1, rows.length / 3 + 1)).foreach { chunk =>
       input.addData(chunk: _*)
       val q = StreamingIngest.trackValueDrift(
@@ -225,7 +225,7 @@ class StreamingSpec extends SparkSpec {
       Seq(("a", 0.5), ("a", 12.0), ("b", 3.0))
     val input = MemoryStream[(String, Double)]
     input.addData(rows: _*)
-    val ckpt = Files.createTempDirectory("drift_bound_ckpt").toString
+    val ckpt = tempDir("drift_bound_ckpt").toString
     val q = StreamingIngest.trackValueDrift(
       input.toDF().toDF("k", "value"), "k", "value", ckpt, tracker)
     try { q.processAllAvailable() } finally q.stop()
@@ -258,7 +258,7 @@ class StreamingSpec extends SparkSpec {
     in1.addData(Seq(
       (Some("a"), 0.5), (Some("b"), 1.0), (Some("zz"), 2.0),
       (None, 3.0), (None, 4.0)): _*)
-    val ck1 = Files.createTempDirectory("drift_s1").toString
+    val ck1 = tempDir("drift_s1").toString
     val q1 = StreamingIngest.trackValueDrift(
       in1.toDF().toDF("k", "value"), "k", "value", ck1, tracker)
     try { q1.processAllAvailable() } finally q1.stop()
@@ -270,7 +270,7 @@ class StreamingSpec extends SparkSpec {
     // such batch as a "replay"; per-checkpoint marks must fold it.
     val in2 = MemoryStream[(Option[String], Double)]
     in2.addData(Seq((Some("a"), 0.5), (Some("a"), 0.7)): _*)
-    val ck2 = Files.createTempDirectory("drift_s2").toString
+    val ck2 = tempDir("drift_s2").toString
     val q2 = StreamingIngest.trackValueDrift(
       in2.toDF().toDF("k", "value"), "k", "value", ck2, tracker)
     try { q2.processAllAvailable() } finally q2.stop()
@@ -333,8 +333,7 @@ class StreamingSpec extends SparkSpec {
   test("trackSharedPrefixes: streamed store equals the batch q157 rollup") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "stream-pfx").toString
+    val dir = tempDir("stream-pfx").toString
     val fixture = "/root/testdata/sf0.001"
     val docs = spark.read.parquet(s"$fixture/documents.parquet")
       .select("doc_id", "text").as[(Long, String)].collect()
@@ -372,8 +371,7 @@ class StreamingSpec extends SparkSpec {
   test("upsertEachBatch: effectively-once keyed upsert across micro-batches") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "stream-upsert").toString
+    val dir = tempDir("stream-upsert").toString
     val input = MemoryStream[(Long, String, Long)]
     // Trigger.AvailableNow = one bounded run per invocation (the
     // streaming mirror of the reference's daily DAG run): enqueue, run
@@ -410,8 +408,7 @@ class StreamingSpec extends SparkSpec {
     val vNear = vec(i => if (i == 0) 1.1f else 1f)    // cos≈1 vs vOne
     val history = Seq((0L, vOne), (1L, vec(i => (i % 5) - 2f)))
       .toDF("vec_id", "embedding")
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "stream-admit").toString
+    val dir = tempDir("stream-admit").toString
     val input = MemoryStream[(Long, Array[Float])]
     def runOnce(): Unit = {
       val q = StreamingIngest.admitNovelEmbeddings(
@@ -436,8 +433,7 @@ class StreamingSpec extends SparkSpec {
     implicit val ctx = spark.sqlContext
     val history = Seq((0L, "alpha document text"), (1L, "beta document text"))
       .toDF("doc_id", "text")
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "stream-bloom").toString
+    val dir = tempDir("stream-bloom").toString
     val input = MemoryStream[(Long, String)]
     def runOnce(): Unit = {
       // each call is a fresh query ⇒ also exercises the restart path
@@ -477,8 +473,7 @@ class StreamingSpec extends SparkSpec {
     val rows = spark.read.parquet(dir0 + "/documents.parquet")
       .select("doc_id", "text").as[(Long, String)].collect().sortBy(_._1).toSeq
     val history = rows.filter(_._1 < 200).toDF("doc_id", "text")
-    val out = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "segscrub").toString
+    val out = tempDir("segscrub").toString
     val input = MemoryStream[(Long, String)]
     def runOnce(): Unit = {
       // fresh query per call ⇒ the second batch also exercises restart
@@ -526,8 +521,7 @@ class StreamingSpec extends SparkSpec {
   test("foreachBatch upsert sink is idempotent across replays") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "stream-upsert").toString
+    val base = tempDir("stream-upsert").toString
     val target = s"$base/posts"
     def runBatch(rows: (String, String)*): Unit = {
       val input = MemoryStream[(String, String)]
@@ -548,8 +542,7 @@ class StreamingSpec extends SparkSpec {
   test("VersionedStore: partial writes are invisible until the pointer flips; committed() gates replays") {
     import graft.streaming.VersionedStore
     import spark.implicits._
-    val root = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "vstore").toString + "/store"
+    val root = tempDir("vstore").toString + "/store"
     assert(VersionedStore.current(root).isEmpty)
     assert(!VersionedStore.committed(root, 0L))
     // a crashed attempt: version dir written, pointer NEVER flipped
@@ -576,8 +569,7 @@ class StreamingSpec extends SparkSpec {
   test("VersionedStore: crash windows (mid-staging, post-flip pre-checkpoint) lose and double nothing") {
     import graft.streaming.VersionedStore
     import spark.implicits._
-    val root = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "vstore-crash").toString + "/store"
+    val root = tempDir("vstore-crash").toString + "/store"
     // the model sink: a NON-idempotent re-aggregating merge (store =
     // cumulative per-key counts) — the exact shape the committed()
     // gate exists for
@@ -636,8 +628,7 @@ class StreamingSpec extends SparkSpec {
 
   test("mergePrefixBatch: a replayed batchId is skipped — counts never double") {
     import spark.implicits._
-    val store = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "pfx-replay").toString + "/pfx"
+    val store = tempDir("pfx-replay").toString + "/pfx"
     val docs = Seq(
       (1L, "shared prefix tokens one two three four five six seven eight alpha"),
       (2L, "shared prefix tokens one two three four five six seven eight beta"))
@@ -661,8 +652,7 @@ class StreamingSpec extends SparkSpec {
 
   test("scrubOneBatch: replays (complete and partial) rewrite, never duplicate") {
     import spark.implicits._
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "scrub-replay").toString
+    val base = tempDir("scrub-replay").toString
     val target = s"$base/clean"
     val history = Seq((1L, "h one two three four five six seven eight nine ten"))
       .toDF("doc_id", "text")

@@ -1,10 +1,8 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Verify rejects a botched call before it starts Spark: a filter that
   * slid into the outDir slot, or a filter name that is not a query. */
-class VerifySpec extends AnyFunSuite {
+class VerifySpec extends SparkSpec {
 
   test("argError: comma in outDir, unknown filter names, bad arity") {
     assert(Verify.argError(Array("sf", "out")).isEmpty)
@@ -16,7 +14,7 @@ class VerifySpec extends AnyFunSuite {
   }
 
   test("main exits non-zero and writes nothing on a comma outDir or unknown query") {
-    val tmp = java.nio.file.Files.createTempDirectory("verifyspec")
+    val tmp = tempDir("verifyspec")
     for (args <- Seq(Seq("/nonexistent", s"$tmp/a,b"),
                      Seq("/nonexistent", s"$tmp/out", "q0_nope"))) {
       val java = s"${System.getProperty("java.home")}/bin/java"

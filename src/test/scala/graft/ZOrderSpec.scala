@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.operators.Sink
 
@@ -38,8 +37,7 @@ class ZOrderSpec extends SparkSpec {
   }
 
   test("z-ordered layout prunes files on both dimensions; doc_id order prunes neither") {
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "zorder").toString
+    val base = tempDir("zorder").toString
     val keyed = grid.withColumn("zkey", expr(interleave))
       .withColumn("zfile", expr("zkey div 32"))
     Sink.writeZOrdered(keyed, s"$base/z")
@@ -67,8 +65,7 @@ class ZOrderSpec extends SparkSpec {
   }
 
   test("physical in-file order is (zkey, doc_id) — the stats' precondition") {
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "zorderord").toString
+    val base = tempDir("zorderord").toString
     Sink.writeZOrdered(grid.withColumn("zkey", expr(interleave))
       .withColumn("zfile", expr("zkey div 32")), base)
     val bad = spark.read.parquet(base)
