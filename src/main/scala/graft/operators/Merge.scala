@@ -16,8 +16,9 @@ import org.apache.spark.sql.functions._
   * is a micro-batch (the reference's O(100) rows/day against a years-deep
   * target), Catalyst/AQE broadcasts it and the target is never shuffled —
   * the plan degenerates to a scan + broadcast-anti-join + union, which is
-  * the right 100 TB shape. A ts-partitioned target would further prune the
-  * rewrite to touched partitions.
+  * the right 100 TB shape. [[Sink.upsertTimePartitioned]] bounds the
+  * target side too: it hands in only the touched days of a
+  * date-partitioned store and rewrites only those days.
   */
 object Merge {
 

@@ -150,7 +150,10 @@ object StreamingIngest {
     * IDEMPOTENT (upsert by key), so a replay converges by re-merging,
     * and skipping by batchId would wrongly drop batch 0 of a fresh
     * checkpoint lineage over an existing store. The [[VersionedStore]]
-    * pointer flip closes the store-missing swap window. */
+    * pointer flip closes the store-missing swap window. The merge is
+    * written straight into the new version directory: the live version
+    * it reads is a different directory, untouched until the flip, so
+    * nothing is materialized first. */
   private[graft] def upsertOneBatch(batch: DataFrame, batchId: Long,
                                         targetPath: String,
                                         keys: Seq[String]): Unit = {
@@ -158,15 +161,12 @@ object StreamingIngest {
     val deduped = Transform.dedupFirst(batch, keys, keys)
     val merged = VersionedStore.read(spark, targetPath) match {
       case Some(target) =>
-        Merge.upsert(target.select(batch.columns.map(col).toSeq: _*),
-          deduped, keys).persist()
-      case None => deduped.persist()
+        Merge.upsert(target.select(batch.columns.map(col).toSeq: _*), deduped, keys)
+      case None => deduped
     }
-    merged.count() // materialize before reading+rewriting the store
     VersionedStore.commit(targetPath, batchId) { dir =>
       merged.write.mode("overwrite").parquet(dir)
     }
-    merged.unpersist()
   }
 
   /** foreachBatch upsert into a versioned parquet target: each
