@@ -60,9 +60,7 @@ object Components {
     // each round is several stages, and on a small edge list 32-partition
     // shuffles are pure scheduling overhead. ~500k edges per partition,
     // capped at the session parallelism for genuinely large graphs.
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val parts = math.min(sessionParts,
-      math.max(1, (edgeCount / 500000L).toInt + 1))
+    val parts = LoopSizing.partitions(spark, edgeCount, 500000L)
     val sym = symRaw.repartition(parts, col("src")).localCheckpoint()
 
     var labels = sym.select(col("src").as("node")).distinct()

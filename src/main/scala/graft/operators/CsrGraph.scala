@@ -9,43 +9,57 @@ import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
 import scala.collection.mutable.ArrayBuilder
 
-/** A prepared UNDIRECTED graph for the synchronous message-passing
-  * loops ([[PageRank.run]], [[PageRank.runTrust]], [[Bfs.run]]): the
-  * Pregel layout, built once and reused by every call and every round.
+/** A prepared graph for the synchronous message-passing loops of the
+  * link-analysis family ([[PageRank]], [[Bfs]]): the Pregel layout,
+  * built once and reused by every call and every round.
   *
   * Layout. The edge list is symmetrized once and hash-partitioned by
   * node into `parts` partitions (Spark's own `hashpartitioning` of a
   * long column: Murmur3 with seed 42, pmod parts). Each partition is one
   * [[CsrGraph.Block]] in compressed-sparse-row form: its sorted node
-  * ids, an offsets array, and one primitive neighbour array. A
-  * neighbour is not stored by id but by its SLOT in the partition's
-  * outbox: the outbox for destination partition d holds one cell per
-  * distinct neighbour living in d, in id order. Because the adjacency
-  * is symmetric, partition d can list the same cells itself (its own
-  * nodes that have a neighbour in the sender's partition, in id order),
-  * so slots resolve to local indices on both sides without a routing
-  * shuffle (GraphX's routing table, derived instead of exchanged).
+  * ids, an offsets array, and one primitive neighbour array. Edge
+  * (u, v) is two adjacency rows: an OUT-row of u towards v and an
+  * IN-row of v from u; a node's out-rows come first, so one split
+  * index per node is the rows' direction bit. An edge frame with a
+  * `w` column gives each row that integer weight (one weight array
+  * beside the neighbours); without one the graph carries no weight
+  * array and every row weighs 1. A neighbour is not stored by id but
+  * by its SLOT in the partition's outbox: the outbox for destination
+  * partition d holds one cell per distinct neighbour living in d, in
+  * id order. Because every row has its reverse row at the neighbour,
+  * partition d can list the same cells itself (its own nodes that have
+  * a neighbour in the sender's partition, in id order), so slots
+  * resolve to local indices on both sides without a routing shuffle
+  * (GraphX's routing table, derived instead of exchanged).
   *
-  * One round ([[propagate]]): every node sends one value to all its
-  * neighbours; the sender combines them per cell map-side (sum or min)
-  * and ships one primitive array per destination partition — at most
-  * |nodes of d| values, no keys — in ONE shuffle; the receiver folds the
-  * arrays into its nodes and computes the next state. The node state
-  * lives in one primitive array per partition, co-partitioned with the
-  * blocks; nothing is broadcast, nothing is sorted per round, and a
-  * round's traffic is bounded by |nodes| per partition.
+  * One round ([[propagate]]) sends along the rows an algorithm picks
+  * ([[CsrGraph.Along]]): all of them (undirected), out-rows only (u → v:
+  * directed PageRank, HITS's hub → authority step) or in-rows only
+  * (v → u: HITS's authority → hub step). Every sending node ships one
+  * value per row; the sender combines them per cell map-side (sum or
+  * min) and ships one primitive array per destination partition — at
+  * most |nodes of d| values, no keys — in ONE shuffle; a cell no row of
+  * the round reaches carries the combiner's identity, so every
+  * direction uses the same cells. The receiver folds the arrays into
+  * its nodes and computes the next state. The node state lives in one
+  * primitive array per partition, co-partitioned with the blocks;
+  * nothing is broadcast, nothing is sorted per round, and a round's
+  * traffic is bounded by |nodes| per partition.
   *
   * Exactness: the combiners are sums and mins of non-negative Longs, so
   * a result cannot depend on the partition count or message order.
-  * Parallel edges and self-loops count like rows of the symmetrized
-  * edge list (degree = adjacency rows); rows with a null endpoint are
-  * dropped.
+  * Parallel edges and self-loops count like rows of the edge list
+  * (degree = Σ weight over the rows taken); rows with a null endpoint
+  * or weight are dropped.
   *
   * Lifetime: the blocks are persisted (MEMORY_AND_DISK, lineage kept,
   * so a lost block is recomputed) and survive
   * `spark.catalog.clearCache()`. The owner releases them: a graph held
   * in [[graft.sources.Memo]] is released by the memo on replacement;
-  * [[once]] releases its throwaway graph itself.
+  * [[once]] releases its throwaway graph itself. Rounds persist
+  * nothing: a loop that reads a driver scalar between rounds runs one
+  * job per round, and each job reads the previous round's messages
+  * from their shuffle output instead of recomputing them.
   */
 final case class CsrGraph(spark: SparkSession, blocks: RDD[CsrGraph.Block],
                           nodes: Long) {
@@ -56,15 +70,18 @@ final case class CsrGraph(spark: SparkSession, blocks: RDD[CsrGraph.Block],
   /** Unpersists the blocks. */
   def release(): Unit = blocks.unpersist(blocking = false)
 
-  /** `iters` synchronous rounds from `init`: node v sends
-    * `send(state(v), deg(v))` to each neighbour (per adjacency row),
-    * the messages combine by sum (or by min when `min`), and v's next
-    * state is `next(base(v), in(v))`. `init` and `base` are
-    * co-partitioned state arrays (one per block); `in(v)` is the
-    * combiner's identity (0, or Long.MaxValue for min) when v received
-    * nothing. The returned state is lazy: one job runs all rounds. */
+  /** `iters` synchronous rounds from `init` along the rows `along`
+    * picks: node v sends `send(state(v) · w, deg(v))` over each such
+    * row of weight w (w = 1 on an unweighted graph; deg(v) = Σ w over
+    * v's picked rows; a node without picked rows sends nothing), the
+    * messages combine by sum (or by min when `min`), and v's next state
+    * is `next(base(v), in(v))`. `init` and `base` are co-partitioned
+    * state arrays (one per block); `in(v)` is the combiner's identity
+    * (0, or Long.MaxValue for min) when v received nothing. The
+    * returned state is lazy: one job runs all rounds. */
   private[operators] def propagate(init: RDD[Array[Long]], base: RDD[Array[Long]],
-                                   iters: Int, min: Boolean)(send: (Long, Long) => Long)
+                                   iters: Int, along: Along, min: Boolean)
+                                  (send: (Long, Long) => Long)
                                   (next: (Long, Long) => Long): RDD[Array[Long]] = {
     val zero = if (min) Long.MaxValue else 0L
     val owners = new HashPartitioner(parts) // key d → partition d
@@ -74,12 +91,17 @@ final case class CsrGraph(spark: SparkSession, blocks: RDD[CsrGraph.Block],
         val acc = Array.fill(b.outStart(b.outStart.length - 1))(zero)
         var i = 0
         while (i < b.ids.length) {
-          val m = send(st(i), b.offsets(i + 1) - b.offsets(i))
-          var k = b.offsets(i)
-          while (k < b.offsets(i + 1)) {
-            val c = b.slots(k)
-            acc(c) = if (min) math.min(acc(c), m) else acc(c) + m
-            k += 1
+          val lo = b.lo(i, along); val hi = b.hi(i, along)
+          if (lo < hi) {
+            val deg = b.deg(i, along)
+            val m = send(st(i), deg)
+            var k = lo
+            while (k < hi) {
+              val c = b.slots(k)
+              val mk = if (b.weights == null) m else send(st(i) * b.weights(k), deg)
+              acc(c) = if (min) math.min(acc(c), mk) else acc(c) + mk
+              k += 1
+            }
           }
           i += 1
         }
@@ -106,6 +128,11 @@ final case class CsrGraph(spark: SparkSession, blocks: RDD[CsrGraph.Block],
       }
     }
   }
+
+  /** One state array per block: each node's degree along `along`
+    * (Σ weight over those rows). */
+  private[operators] def degrees(along: Along): RDD[Array[Long]] =
+    blocks.map(b => Array.tabulate(b.ids.length)(b.deg(_, along)))
 
   /** One state array per block, every cell `v`. */
   private[operators] def fill(v: Long): RDD[Array[Long]] =
@@ -134,34 +161,58 @@ final case class CsrGraph(spark: SparkSession, blocks: RDD[CsrGraph.Block],
     }
   }
 
-  /** `state` as a (node, [deg,] `value`) frame. */
-  private[operators] def frame(state: RDD[Array[Long]], value: String,
-                               withDeg: Boolean): DataFrame = {
-    val rows = blocks.zipPartitions(state) { (bs, ss) =>
-      val b = bs.next(); val s = ss.next()
-      Iterator.range(0, b.ids.length).map { i =>
-        if (withDeg) Row(b.ids(i), (b.offsets(i + 1) - b.offsets(i)).toLong, s(i))
-        else Row(b.ids(i), s(i))
-      }
+  /** The state arrays `cols` as a (node, cols…) frame of Longs. */
+  private[operators] def frame(cols: (String, RDD[Array[Long]])*): DataFrame = {
+    val values = cols.map(_._2.map(Seq(_))).reduceLeft { (a, b) =>
+      a.zipPartitions(b)((x, y) => Iterator.single(x.next() ++ y.next())) }
+    val rows = blocks.zipPartitions(values) { (bs, vs) =>
+      val b = bs.next(); val v = vs.next()
+      Iterator.range(0, b.ids.length).map(i => Row.fromSeq(b.ids(i) +: v.map(_(i))))
     }
-    val cols = Seq("node") ++ (if (withDeg) Seq("deg") else Nil) :+ value
-    spark.createDataFrame(rows,
-      StructType(cols.map(StructField(_, LongType, nullable = false))))
+    spark.createDataFrame(rows, StructType(("node" +: cols.map(_._1))
+      .map(StructField(_, LongType, nullable = false))))
   }
 }
 
 object CsrGraph {
 
+  /** The adjacency rows a round sends along. */
+  sealed trait Along
+  /** Every row: the undirected graph. */
+  case object All extends Along
+  /** Out-rows: u sends to v for each edge (u, v). */
+  case object Out extends Along
+  /** In-rows: v sends to u for each edge (u, v). */
+  case object In extends Along
+
   /** One partition of the graph. Node `i` (id `ids(i)`, ids sorted) has
-    * the adjacency rows `offsets(i) until offsets(i + 1)`; row k's
-    * neighbour is outbox cell `slots(k)`. The cells for destination
+    * the adjacency rows `offsets(i) until offsets(i + 1)`: out-rows
+    * until `mid(i)`, in-rows from there. Row k's neighbour is outbox
+    * cell `slots(k)`, its weight `weights(k)` (no array on an
+    * unweighted graph: every row weighs 1). The cells for destination
     * partition d are `outStart(d) until outStart(d + 1)`, one per
     * distinct neighbour living in d, in id order. `in(s)(j)` is the
     * local index of the node behind cell j of partition s's outbox
     * slice for this partition. */
-  final class Block(val ids: Array[Long], val offsets: Array[Int],
-                    val slots: Array[Int], val outStart: Array[Int],
-                    val in: Array[Array[Int]]) extends Serializable
+  final class Block(val ids: Array[Long], val offsets: Array[Int], val mid: Array[Int],
+                    val slots: Array[Int], val weights: Array[Long],
+                    val outStart: Array[Int], val in: Array[Array[Int]]) extends Serializable {
+
+    /** First of node `i`'s rows along `a`. */
+    def lo(i: Int, a: Along): Int = if (a == In) mid(i) else offsets(i)
+
+    /** One past the last of node `i`'s rows along `a`. */
+    def hi(i: Int, a: Along): Int = if (a == Out) mid(i) else offsets(i + 1)
+
+    /** Σ weight over node `i`'s rows along `a`. */
+    def deg(i: Int, a: Along): Long =
+      if (weights == null) hi(i, a) - lo(i, a)
+      else {
+        var (d, k) = (0L, lo(i, a))
+        while (k < hi(i, a)) { d += weights(k); k += 1 }
+        d
+      }
+  }
 
   /** The partition owning node `v`: Spark's `hashpartitioning` of a
     * long column. */
@@ -170,29 +221,36 @@ object CsrGraph {
     if (h < 0) h + parts else h
   }
 
-  /** Builds the graph of the undirected edge list `edges` (src, dst) —
-    * both directions are added here, so pass each edge once — over
-    * `parts` partitions. One shuffle of the symmetrized rows, then one
-    * job that materializes the blocks and counts the nodes. */
+  /** Builds the graph of the edge list `edges` (src, dst[, w]) over
+    * `parts` partitions; each edge becomes the out-row of src and the
+    * in-row of dst (pass an undirected edge once), weighted by `w` when
+    * the frame has that column. One shuffle of the rows, then one job
+    * that materializes the blocks and counts the nodes. */
   def apply(edges: DataFrame, parts: Int): CsrGraph = {
     val p = parts
-    val pairs = edges.select(col("src").cast("long"), col("dst").cast("long"))
+    val weighted = edges.columns.contains("w")
+    val cols = Seq("src", "dst") ++ (if (weighted) Seq("w") else Nil)
+    val chunks = edges.select(cols.map(col(_).cast("long")): _*)
       .queryExecution.toRdd
       .mapPartitions { rows =>
-        // per owner partition, interleaved (node, neighbour) pairs
-        val buf = Array.fill(p)(new ArrayBuilder.ofLong)
+        // per owner partition: interleaved (node, neighbour) pairs of
+        // its out-rows and of its in-rows, then their weights
+        val buf = Array.fill(p, if (weighted) 4 else 2)(new ArrayBuilder.ofLong)
         rows.foreach { r =>
-          if (!r.isNullAt(0) && !r.isNullAt(1)) {
+          if (!r.isNullAt(0) && !r.isNullAt(1) && !(weighted && r.isNullAt(2))) {
             val (s, d) = (r.getLong(0), r.getLong(1))
-            buf(owner(s, p)) += s += d
-            buf(owner(d, p)) += d += s
+            val o = buf(owner(s, p)); val i = buf(owner(d, p))
+            o(0) += s += d
+            i(1) += d += s
+            if (weighted) { o(2) += r.getLong(2); i(3) += r.getLong(2) }
           }
         }
-        Iterator.range(0, p).map(d => d -> buf(d).result()).filter(_._2.nonEmpty)
+        Iterator.range(0, p).map(d => d -> buf(d).map(_.result()))
+          .filter(c => c._2(0).nonEmpty || c._2(1).nonEmpty)
       }
-    val blocks = new ShuffledRDD[Int, Array[Long], Array[Long]](
-        pairs, new HashPartitioner(p))
-      .mapPartitions(it => Iterator.single(block(it.map(_._2).toArray, p)),
+    val blocks = new ShuffledRDD[Int, Array[Array[Long]], Array[Array[Long]]](
+        chunks, new HashPartitioner(p))
+      .mapPartitions(it => Iterator.single(block(it.map(_._2).toArray, p, weighted)),
         preservesPartitioning = true)
       .setName(s"CsrGraph[$p]")
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -222,31 +280,42 @@ object CsrGraph {
     java.util.Arrays.copyOf(s, n)
   }
 
-  /** One block from the interleaved (node, neighbour) pairs its
-    * partition received. */
-  private def block(chunks: Array[Array[Long]], p: Int): Block = {
-    val m = chunks.map(_.length / 2).sum
+  /** One block from the chunks its partition received (see [[apply]]):
+    * rows `0 until nOut` are out-rows, the rest in-rows. */
+  private def block(chunks: Array[Array[Array[Long]]], p: Int, weighted: Boolean): Block = {
+    val nOut = chunks.map(_(0).length / 2).sum
+    val m = nOut + chunks.map(_(1).length / 2).sum
     val (node, nbr) = (new Array[Long](m), new Array[Long](m))
-    var k = 0
-    for (c <- chunks; j <- 0 until c.length by 2) {
-      node(k) = c(j); nbr(k) = c(j + 1); k += 1
+    val w = if (weighted) new Array[Long](m) else null
+    var (k, kw) = (0, 0)
+    for (dir <- 0 to 1; c <- chunks) {
+      for (j <- 0 until c(dir).length by 2) { node(k) = c(dir)(j); nbr(k) = c(dir)(j + 1); k += 1 }
+      if (weighted) for (x <- c(dir + 2)) { w(kw) = x; kw += 1 }
     }
     val ids = distinctSorted(node)
     val at = node.map(java.util.Arrays.binarySearch(ids, _))
     val to = nbr.map(owner(_, p))
     val offsets = new Array[Int](ids.length + 1)
-    at.foreach(i => offsets(i + 1) += 1)
+    val nOuts = new Array[Int](ids.length)
+    for (r <- 0 until m) {
+      offsets(at(r) + 1) += 1
+      if (r < nOut) nOuts(at(r)) += 1
+    }
     for (i <- ids.indices) offsets(i + 1) += offsets(i)
+    val mid = Array.tabulate(ids.length)(i => offsets(i) + nOuts(i))
     // outbox cells: per destination partition, its distinct neighbours
     val byOwner = Array.fill(p)(new ArrayBuilder.ofLong)
     for (r <- 0 until m) byOwner(to(r)) += nbr(r)
     val cells = byOwner.map(b => distinctSorted(b.result()))
     val outStart = cells.scanLeft(0)(_ + _.length)
     val slots = new Array[Int](m)
-    val fill = offsets.clone()
+    val weights = if (weighted) new Array[Long](m) else null
+    val (fillOut, fillIn) = (offsets.clone(), mid.clone())
     for (r <- 0 until m) {
-      slots(fill(at(r))) =
-        outStart(to(r)) + java.util.Arrays.binarySearch(cells(to(r)), nbr(r))
+      val fill = if (r < nOut) fillOut else fillIn
+      val k = fill(at(r))
+      slots(k) = outStart(to(r)) + java.util.Arrays.binarySearch(cells(to(r)), nbr(r))
+      if (weighted) weights(k) = w(r)
       fill(at(r)) += 1
     }
     // inbound cells from partition s: own nodes with a neighbour in s,
@@ -254,6 +323,6 @@ object CsrGraph {
     val has = Array.fill(p)(new java.util.BitSet(ids.length))
     for (r <- 0 until m) has(to(r)).set(at(r))
     val in = has.map(h => h.stream().toArray)
-    new Block(ids, offsets, slots, outStart, in)
+    new Block(ids, offsets, mid, slots, weights, outStart, in)
   }
 }

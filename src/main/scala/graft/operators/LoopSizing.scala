@@ -7,11 +7,12 @@ import org.apache.spark.sql.SparkSession
   * from a constant tuned for one deployment).
   *
   * Why not the session default: a Pregel-style loop reuses its
-  * partitioned graph every round — the [[CsrGraph]] blocks, or a
-  * persisted src-partitioned adjacency in the relational loops — so the
-  * graph's partition count sets the width of EVERY per-round stage. At
-  * the session's 32 (= core count) on a sub-million-row graph, each
-  * round schedules 32 tasks whose per-task fixed cost (dispatch, shuffle
+  * partitioned graph every round — the [[CsrGraph]] blocks, or the
+  * persisted adjacency of [[LabelProp]], [[KCore]] and
+  * [[Components]], the DataFrame loops that call this — so the graph's
+  * partition count sets the width of EVERY per-round stage. At the
+  * session's 32 (= core count) on a sub-million-row graph, each round
+  * schedules 32 tasks whose per-task fixed cost (dispatch, shuffle
   * writer setup, codegen lookup) dwarfs its ~20k-row compute. Sizing by
   * rows keeps partitions ~work-proportional at every scale: small
   * graphs collapse to a few meaty tasks, large graphs grow partitions
@@ -22,14 +23,12 @@ import org.apache.spark.sql.SparkSession
   * fixed when it is built, and every round's exchange aligns to it.
   *
   * [[Components.connectedComponents]] pioneered the pattern (500k
-  * rows/partition since round 9); the graph family now shares one
-  * implementation. Target default 150k rows, set on q112 (587k
-  * symmetrized edges) when it still ran as a relational loop: 32
-  * partitions took 3.97 s/run, 4 took 1.73 s/run, and the optimum sat
-  * at 4–8 partitions (100–150k rows each). The CSR kernel that replaced
-  * that loop keeps the sizing; its rounds are cheap enough (~40–60 ms
-  * a round at 4 partitions) that the count now matters mostly for the
-  * relational loops.
+  * rows/partition since round 9). Target default 150k rows, set on
+  * q112 (587k symmetrized edges) when it still ran as a relational
+  * loop: 32 partitions took 3.97 s/run, 4 took 1.73 s/run, and the
+  * optimum sat at 4–8 partitions (100–150k rows each). The CSR kernel
+  * that replaced that loop keeps the sizing ([[CsrGraph.once]] and the
+  * purchase graphs of the graph queries).
   */
 object LoopSizing {
 

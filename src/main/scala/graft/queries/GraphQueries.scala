@@ -103,9 +103,10 @@ object GraphQueries {
     * 2·custkey, suppliers at 2·suppkey+1 — disjoint integer ids
     * without a string tag in the shuffle key.
     *
-    * Held in [[Memo]]: seven of the eight graph queries propagate over
-    * this SAME edge list, as a production pipeline computing eight
-    * link signals builds the graph once. The lazy localCheckpoint runs
+    * Held in [[Memo]]: the purchase-graph queries share this SAME edge
+    * list, as a production pipeline computing many link signals builds
+    * the graph once. Its readers are [[purchaseGraph]] (the six kernel
+    * queries), [[purchaseParts]], q126 and q169. The lazy localCheckpoint runs
     * the build (orders⋈lineitem + distinct — two fact scans and two
     * shuffles) on the first consumer; every later query reads the
     * materialized edge blocks. The edge MULTISET is deterministic and
@@ -138,24 +139,26 @@ object GraphQueries {
 
   /** The purchase graph prepared for the message-passing kernel
     * ([[graft.operators.CsrGraph]]), held in [[Memo]] next to the edges:
-    * q112, q113, q114 and q119 share one build per (session, fixture)
-    * instead of re-symmetrizing 2·|edges| rows per call. */
+    * q112, q113, q114, q119, q123 and q125 share one build per
+    * (session, fixture) instead of re-symmetrizing 2·|edges| rows per
+    * call. Edges run customer → supplier (out-rows at the customer),
+    * which the directed members read; it carries no weights. */
   private def purchaseGraph(s: SparkSession, dir: String): CsrGraph =
     Memo(s, dir, "purchaseGraph") {
       CsrGraph(purchaseEdges(s, dir), purchaseParts(s, dir))
     }
 
-  /** q121's weighted twin: edge multiplicity w = distinct orders
-    * between the pair, held like [[purchaseEdges]]. */
-  private def weightedEdges(s: SparkSession, dir: String): DataFrame =
-    Memo(s, dir, "weightedEdges") {
+  /** q121's weighted twin of [[purchaseGraph]]: edge multiplicity
+    * w = distinct orders between the pair, one weight per row, held
+    * like it. */
+  private def weightedGraph(s: SparkSession, dir: String): CsrGraph =
+    Memo(s, dir, "weightedGraph") {
       val orders = Tables.load(s, dir, "orders")
       val lineitem = Tables.load(s, dir, "lineitem")
-      orders.join(lineitem, col("l_orderkey") === col("o_orderkey"))
+      CsrGraph(orders.join(lineitem, col("l_orderkey") === col("o_orderkey"))
         .groupBy((col("o_custkey") * 2).as("src"),
           (col("l_suppkey") * 2 + 1).as("dst"))
-        .agg(countDistinct(col("o_orderkey")).as("w"))
-        .localCheckpoint(false)
+        .agg(countDistinct(col("o_orderkey")).as("w")), purchaseParts(s, dir))
     }
 
   /** The oracle twin of [[purchaseEdges]], as the `e` CTE body. */
@@ -394,15 +397,14 @@ object GraphQueries {
     // w(customer, supplier) = number of distinct orders between them —
     // and rank flowing out proportionally to weight (the web-graph
     // link-count weighting). The aggregation that builds w replaces
-    // q112's distinct; everything downstream is the same
-    // one-shuffle-per-iteration machinery with total out-weight in
-    // place of degree.
+    // q112's distinct; everything downstream is q112's kernel on a
+    // graph with one weight per row, total weight in place of degree.
     "q121_weighted_pagerank" -> ((s, dir) => {
-      PageRank.runWeighted(weightedEdges(s, dir), Iters, purchaseParts(s, dir))
+      PageRank.run(weightedGraph(s, dir), Iters)
         .select(col("node"),
           when(col("node") % 2 === 0, lit("customer"))
             .otherwise(lit("supplier")).as("kind"),
-          col("wtot"), col("rank"))
+          col("deg").as("wtot"), col("rank"))
         .orderBy("node")
     }),
 
@@ -433,11 +435,11 @@ object GraphQueries {
     // (exact-integer share), so supplier rank accumulates purchase
     // in-links while customers keep only teleport + dangling shares —
     // rank now measures "how much demand flows INTO this node", the
-    // directed citation/authority signal. Same
-    // one-data-shuffle-per-iteration machinery as q112 plus a 1-row
-    // dangling-sum broadcast per round.
+    // directed citation/authority signal. q112's graph and kernel,
+    // sending along the out-rows only, plus one dangling-sum job per
+    // round.
     "q123_directed_pagerank" -> ((s, dir) => {
-      PageRank.runDirected(purchaseEdges(s, dir), Iters, purchaseParts(s, dir))
+      PageRank.runDirected(purchaseGraph(s, dir), Iters)
         .select(col("node"),
           when(col("node") % 2 === 0, lit("customer"))
             .otherwise(lit("supplier")).as("kind"),
@@ -457,7 +459,7 @@ object GraphQueries {
     // sides' scores separate by construction — a useful structural
     // sanity the spec pins).
     "q125_hits" -> ((s, dir) => {
-      PageRank.runHits(purchaseEdges(s, dir), Iters, purchaseParts(s, dir))
+      PageRank.runHits(purchaseGraph(s, dir), Iters)
         .select(col("node"),
           when(col("node") % 2 === 0, lit("customer"))
             .otherwise(lit("supplier")).as("kind"),

@@ -203,7 +203,10 @@ object StreamingIngest {
 
   /** One micro-batch of the prefix store merge (factored for replay
     * tests): counts SUM on merge — double-applying a batch corrupts
-    * the store, so an already-committed batchId must skip. */
+    * the store, so an already-committed batchId must skip. The merge
+    * streams straight into the commit's write: the commit writes a new
+    * version directory and never overwrites the one the merge reads,
+    * so nothing is materialized first. */
   private[graft] def mergePrefixBatch(batch: DataFrame, batchId: Long,
                                           targetPath: String): Unit = {
     if (VersionedStore.committed(targetPath, batchId)) return
@@ -216,12 +219,9 @@ object StreamingIngest {
       .groupBy("h").agg(sum("n_docs").as("n_docs"),
         min("prefix_len").as("prefix_len"),
         min("rep_doc_id").as("rep_doc_id"))
-      .persist()
-    merged.count() // materialize before reading+rewriting the store
     VersionedStore.commit(targetPath, batchId) { dir =>
       merged.write.mode("overwrite").parquet(dir)
     }
-    merged.unpersist()
   }
 
   /** Streaming Bloom admission — q91's broadcast-index incremental

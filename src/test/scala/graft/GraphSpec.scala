@@ -92,13 +92,9 @@ class GraphSpec extends SparkSpec {
     assert(weighted == plain)
   }
 
-  test("weighted PageRank matches a driver-side weighted reference fold") {
-    val rng = new scala.util.Random(31)
-    val edges = (0 until 70).map(_ =>
-        (rng.nextInt(18).toLong, rng.nextInt(18).toLong,
-          (rng.nextInt(5) + 1).toLong))
-      .filter { case (s, d, _) => s != d }
-      .groupBy(e => (e._1, e._2)).map(_._2.head).toSeq // unique pairs
+  /** Driver-side weighted reference: rank flows out in proportion to
+    * edge weight, (r(u) · w) div W(u) over the symmetrized rows. */
+  private def refWeighted(edges: Seq[(Long, Long, Long)], iters: Int): Map[Long, Long] = {
     val sym = edges ++ edges.map { case (s, d, w) => (d, s, w) }
     val adj = sym.groupBy(_._1).map { case (s, es) =>
       s -> es.map(e => (e._2, e._3)) }
@@ -106,15 +102,25 @@ class GraphSpec extends SparkSpec {
     val n = wtot.size.toLong
     val base = (15L * (PageRank.Mass / n)) / 100L
     var r = wtot.map { case (v, _) => v -> PageRank.Mass / n }
-    for (_ <- 1 to 3) {
+    for (_ <- 1 to iters) {
       val in = scala.collection.mutable.Map.empty[Long, Long].withDefaultValue(0L)
       for ((u, es) <- adj; (d, w) <- es) in(d) += (r(u) * w) / wtot(u)
       r = wtot.map { case (v, _) =>
         v -> ((PageRank.DampNum * in(v)) / PageRank.DampDen + base) }
     }
+    r
+  }
+
+  test("weighted PageRank matches a driver-side weighted reference fold") {
+    val rng = new scala.util.Random(31)
+    val edges = (0 until 70).map(_ =>
+        (rng.nextInt(18).toLong, rng.nextInt(18).toLong,
+          (rng.nextInt(5) + 1).toLong))
+      .filter { case (s, d, _) => s != d }
+      .groupBy(e => (e._1, e._2)).map(_._2.head).toSeq // unique pairs
     val got = PageRank.runWeighted(edges.toDF("src", "dst", "w"), 3)
       .collect().map(x => x.getLong(0) -> x.getLong(2)).toMap
-    assert(got == r)
+    assert(got == refWeighted(edges, 3))
   }
 
   /** Driver-side TrustRank reference: seed-concentrated base/start. */
@@ -210,18 +216,26 @@ class GraphSpec extends SparkSpec {
 
   test("CsrGraph kernel: identical ranks and distances at 1, 3 and 7 partitions") {
     val rng = new scala.util.Random(41)
-    // a self-loop and a parallel edge count like rows of the edge list
+    // a self-loop and a parallel edge count like rows of the edge list;
+    // 40..42 only ever appear as destinations (sinks of the directed reading)
     val edges = (0 until 150).map(_ =>
-      (rng.nextInt(40).toLong, rng.nextInt(40).toLong)) ++ Seq((3L, 3L), (1L, 2L), (1L, 2L))
+      (rng.nextInt(40).toLong, rng.nextInt(40).toLong)) ++
+      Seq((3L, 3L), (1L, 2L), (1L, 2L), (0L, 40L), (5L, 41L), (9L, 42L))
+    val weighted = edges.map { case (s, d) => (s, d, (rng.nextInt(5) + 1).toLong) }
     val (e, seedSet) = (edges.toDF("src", "dst"), Set(0L, 7L))
-    val seeds = seedSet.toSeq.toDF("node")
+    val (ew, seeds) = (weighted.toDF("src", "dst", "w"), seedSet.toSeq.toDF("node"))
+    def col2(df: org.apache.spark.sql.DataFrame, c: Int) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(c)).toMap
     def at(p: Int) =
-      try (PageRank.run(e, 3, p).collect().map(r => r.getLong(0) -> r.getLong(2)).toMap,
-           PageRank.runTrust(e, seeds, 3, p).collect().map(r => r.getLong(0) -> r.getLong(2)).toMap,
-           Bfs.run(e, seeds, 4, p).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+      try (col2(PageRank.run(e, 3, p), 2), col2(PageRank.runTrust(e, seeds, 3, p), 2),
+           col2(Bfs.run(e, seeds, 4, p), 1), col2(PageRank.runWeighted(ew, 3, p), 2),
+           col2(PageRank.runDirected(e, 3, p), 2),
+           PageRank.runHits(e, 3, p).collect()
+             .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap)
       finally spark.catalog.clearCache()
     val one = at(1)
-    assert(one == ((refRanks(edges, 3), refTrust(edges, seedSet, 3), refDists(edges, seedSet, 4))))
+    assert(one == ((refRanks(edges, 3), refTrust(edges, seedSet, 3), refDists(edges, seedSet, 4),
+      refWeighted(weighted, 3), refDirected(edges, 3), refHits(edges, 3))))
     assert(at(3) == one && at(7) == one)
   }
 
@@ -249,9 +263,10 @@ class GraphSpec extends SparkSpec {
       finally spark.catalog.clearCache() // harness isolation, as in Verify/Bench
     val d = fixture()
     val before = graphIds
-    for (q <- Seq("q112_pagerank", "q119_trustrank", "q113_seed_distance")) rows(q, d)
+    for (q <- Seq("q112_pagerank", "q119_trustrank", "q113_seed_distance",
+                  "q123_directed_pagerank", "q125_hits")) rows(q, d)
     val built = graphIds -- before
-    assert(built.size == 1, s"one build for the three queries, got $built")
+    assert(built.size == 1, s"one build for the five queries, got $built")
     val half = spark.read.parquet(d.resolve("orders.parquet").toString)
       .where(col("o_orderkey") % 2 === 0)
     put(d, "orders", half)
@@ -268,11 +283,14 @@ class GraphSpec extends SparkSpec {
     spark.catalog.clearCache()
     val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val e = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L), (4L, 5L)).toDF("src", "dst")
+    val ew = e.withColumn("w", col("src") % 3 + 1)
     val seeds = Seq(1L).toDF("node")
-    for (r <- Seq(PageRank.run(e, 2), PageRank.runTrust(e, seeds, 2), Bfs.run(e, seeds, 2)))
+    for (r <- Seq(PageRank.run(e, 2), PageRank.runTrust(e, seeds, 2), Bfs.run(e, seeds, 2),
+                  PageRank.runWeighted(ew, 2), PageRank.runDirected(e, 2), PageRank.runHits(e, 2)))
       assert(r.count() == 5)
     assert((graphIds -- before).isEmpty, "a throwaway graph outlived its call")
     spark.catalog.clearCache() // the documented release of the results
+    // nothing else is left either: no per-round state of the scalar loops
     assert((spark.sparkContext.getPersistentRDDs.keySet.toSet -- before).isEmpty)
   }
 

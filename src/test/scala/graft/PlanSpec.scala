@@ -174,14 +174,17 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q112: PageRank rounds run on the CSR kernel, not joins") {
-    val p = plan("q112_pagerank")
-    // the rounds are the CsrGraph kernel's RDD lineage; the frame on top
-    // is its (node, deg, rank) rows, and the only Sort is the output order
-    assert(p.contains("Scan ExistingRDD"), p)
-    for (op <- Seq("SortMergeJoin", "BroadcastNestedLoopJoin", "InMemoryTableScan",
-                   "CartesianProduct"))
-      assert(!p.contains(op), s"$op in\n$p")
-    assert(p.linesIterator.count(_.matches("""\(\d+\) Sort\b.*""")) == 1, p)
+    for (q <- Seq("q112_pagerank", "q121_weighted_pagerank", "q123_directed_pagerank",
+                  "q125_hits")) {
+      val p = plan(q)
+      // the rounds are the CsrGraph kernel's RDD lineage; the frame on
+      // top is its (node, …) rows, and the only Sort is the output order
+      assert(p.contains("Scan ExistingRDD"), s"$q\n$p")
+      for (op <- Seq("SortMergeJoin", "BroadcastNestedLoopJoin", "InMemoryTableScan",
+                     "CartesianProduct"))
+        assert(!p.contains(op), s"$op in $q\n$p")
+      assert(p.linesIterator.count(_.matches("""\(\d+\) Sort\b.*""")) == 1, s"$q\n$p")
+    }
   }
 
   test("q114: centrality sample runs through TopKPerKeyExec; no cartesian") {

@@ -643,8 +643,34 @@ class StreamingSpec extends SparkSpec {
       .select("h", "n_docs").as[(String, Long)].collect().toMap
     assert(once.nonEmpty && twice == once,
       s"replay double-counted: $twice vs $once")
-    // the NEXT batchId merges normally
-    StreamingIngest.mergePrefixBatch(docs, 1L, store)
+    // the NEXT batchId merges normally, in a pinned number of jobs
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    // the listener bus delivers in order: once the marker job's start
+    // arrives, every job of the merge has been counted
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("merge") => jobs.incrementAndGet()
+          case Some("marker") => drained.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("merge", "merge")
+      StreamingIngest.mergePrefixBatch(docs, 1L, store)
+      sc.setJobGroup("marker", "marker")
+      sc.parallelize(Seq(1)).count()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    // the merge streams into the commit's write: no count before it
+    // (7 jobs when the merged frame was persisted and counted first)
+    assert(jobs.get == 4, s"${jobs.get} jobs")
     val next = StreamingIngest.readStore(spark, store).get
       .select("h", "n_docs").as[(String, Long)].collect().toMap
     assert(next.values.sum == 2 * once.values.sum)
