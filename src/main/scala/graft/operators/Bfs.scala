@@ -48,7 +48,7 @@ object Bfs {
   def run(g: CsrGraph, seeds: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val d0 = g.mark(seeds).map(_.map(s => if (s == 1L) 0L else Inf))
-    g.frame("dist" -> g.propagate(d0, d0, iters, CsrGraph.All, min = true)((d, _) => d)(
+    g.frame("dist" -> g.propagate(d0, d0, iters, CsrGraph.All, CsrGraph.Min)((d, _) => d)(
       (floor, md) => if (md >= Inf) floor else math.min(floor, md + 1)))
   }
 

@@ -15,7 +15,11 @@ import org.apache.spark.sql.functions._
   * optimizer, not the data, becomes the bottleneck. Rounds needed =
   * graph diameter ≤ maxIter; each round is one shuffle-join + one
   * aggregation over the edge list, so 100 TB-scale components cost
-  * O(diameter) passes, not O(n²).
+  * O(diameter) passes, not O(n²). The loop stays off the [[CsrGraph]]
+  * kernel: its pointer jumping (label := label(label)) looks a label
+  * up by value, which is no message along an edge, and without it the
+  * rounds grow from ≈log₂(diameter) to the diameter, so `maxIter` = 50
+  * would throw on chains this loop handles.
   */
 object Components {
 

@@ -3,15 +3,16 @@ package graft.operators
 import org.apache.spark.{HashPartitioner, TaskContext}
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
 import scala.collection.mutable.ArrayBuilder
 
 /** A prepared graph for the synchronous message-passing loops of the
-  * link-analysis family ([[PageRank]], [[Bfs]]): the Pregel layout,
-  * built once and reused by every call and every round.
+  * link-analysis family ([[PageRank]] and its members, [[Bfs]],
+  * [[KCore]], [[HyperAnf]]): the Pregel layout, built once and reused
+  * by every call and every round.
   *
   * Layout. The edge list is symmetrized once and hash-partitioned by
   * node into `parts` partitions (Spark's own `hashpartitioning` of a
@@ -35,19 +36,22 @@ import scala.collection.mutable.ArrayBuilder
   * One round ([[propagate]]) sends along the rows an algorithm picks
   * ([[CsrGraph.Along]]): all of them (undirected), out-rows only (u → v:
   * directed PageRank, HITS's hub → authority step) or in-rows only
-  * (v → u: HITS's authority → hub step). Every sending node ships one
-  * value per row; the sender combines them per cell map-side (sum or
-  * min) and ships one primitive array per destination partition — at
-  * most |nodes of d| values, no keys — in ONE shuffle; a cell no row of
-  * the round reaches carries the combiner's identity, so every
+  * (v → u: HITS's authority → hub step). A node's state is `width`
+  * Longs (lanes): 1, or [[HyperAnf]]'s m registers. It lives in one
+  * flat primitive array per partition, co-partitioned with the blocks,
+  * so width = array length / node count. Every sending node ships its
+  * lanes over each row; the sender combines them per cell and lane
+  * map-side (sum, min or max: [[CsrGraph.Combiner]]) and ships one
+  * primitive array per destination partition — at most
+  * width · |nodes of d| values, no keys — in ONE shuffle; a cell no row
+  * of the round reaches carries the combiner's identity, so every
   * direction uses the same cells. The receiver folds the arrays into
-  * its nodes and computes the next state. The node state lives in one
-  * primitive array per partition, co-partitioned with the blocks;
-  * nothing is broadcast, nothing is sorted per round, and a round's
-  * traffic is bounded by |nodes| per partition.
+  * its nodes and computes the next state. Nothing is broadcast or
+  * sorted per round.
   *
-  * Exactness: the combiners are sums and mins of non-negative Longs, so
-  * a result cannot depend on the partition count or message order.
+  * Exactness: the combiners are sums, mins and maxes of non-negative
+  * Longs, so a result cannot depend on the partition count or message
+  * order.
   * Parallel edges and self-loops count like rows of the edge list
   * (degree = Σ weight over the rows taken); rows with a null endpoint
   * or weight are dropped.
@@ -71,35 +75,40 @@ final case class CsrGraph(spark: SparkSession, blocks: RDD[CsrGraph.Block],
   def release(): Unit = blocks.unpersist(blocking = false)
 
   /** `iters` synchronous rounds from `init` along the rows `along`
-    * picks: node v sends `send(state(v) · w, deg(v))` over each such
-    * row of weight w (w = 1 on an unweighted graph; deg(v) = Σ w over
-    * v's picked rows; a node without picked rows sends nothing), the
-    * messages combine by sum (or by min when `min`), and v's next state
-    * is `next(base(v), in(v))`. `init` and `base` are co-partitioned
-    * state arrays (one per block); `in(v)` is the combiner's identity
-    * (0, or Long.MaxValue for min) when v received nothing. The
-    * returned state is lazy: one job runs all rounds. */
+    * picks: in each lane l node v sends `send(state(v, l) · w, deg(v))`
+    * over each such row of weight w (w = 1 on an unweighted graph;
+    * deg(v) = Σ w over v's picked rows; a node without picked rows
+    * sends nothing), the messages combine `by`, and v's next state is
+    * `next(base(v, l), in(v, l))`. `init` and `base` are co-partitioned
+    * state arrays of one width; `in(v, l)` is `by.zero` when v received
+    * nothing. The returned state is lazy: one job runs all rounds. */
   private[operators] def propagate(init: RDD[Array[Long]], base: RDD[Array[Long]],
-                                   iters: Int, along: Along, min: Boolean)
+                                   iters: Int, along: Along, by: Combiner)
                                   (send: (Long, Long) => Long)
                                   (next: (Long, Long) => Long): RDD[Array[Long]] = {
-    val zero = if (min) Long.MaxValue else 0L
     val owners = new HashPartitioner(parts) // key d → partition d
     (1 to iters).foldLeft(init) { (state, _) =>
       val out = blocks.zipPartitions(state) { (bs, ss) =>
         val b = bs.next(); val st = ss.next()
-        val acc = Array.fill(b.outStart(b.outStart.length - 1))(zero)
+        val w = st.length / math.max(b.ids.length, 1)
+        val acc = Array.fill(b.outStart(b.outStart.length - 1) * w)(by.zero)
+        val m = new Array[Long](w)
         var i = 0
         while (i < b.ids.length) {
           val lo = b.lo(i, along); val hi = b.hi(i, along)
           if (lo < hi) {
             val deg = b.deg(i, along)
-            val m = send(st(i), deg)
+            var l = 0
+            while (l < w) { m(l) = send(st(i * w + l), deg); l += 1 }
             var k = lo
             while (k < hi) {
-              val c = b.slots(k)
-              val mk = if (b.weights == null) m else send(st(i) * b.weights(k), deg)
-              acc(c) = if (min) math.min(acc(c), mk) else acc(c) + mk
+              val c = b.slots(k) * w
+              l = 0
+              while (l < w) {
+                val mk = if (b.weights == null) m(l) else send(st(i * w + l) * b.weights(k), deg)
+                acc(c + l) = by(acc(c + l), mk)
+                l += 1
+              }
               k += 1
             }
           }
@@ -109,22 +118,24 @@ final case class CsrGraph(spark: SparkSession, blocks: RDD[CsrGraph.Block],
         Iterator.range(0, b.outStart.length - 1)
           .filter(d => b.outStart(d + 1) > b.outStart(d))
           .map(d => d -> (me -> java.util.Arrays.copyOfRange(
-            acc, b.outStart(d), b.outStart(d + 1))))
+            acc, b.outStart(d) * w, b.outStart(d + 1) * w)))
       }
       val msgs = new ShuffledRDD[Int, (Int, Array[Long]), (Int, Array[Long])](out, owners)
       blocks.zipPartitions(base, msgs) { (bs, as, ms) =>
         val b = bs.next(); val bv = as.next()
-        val in = Array.fill(b.ids.length)(zero)
+        val w = bv.length / math.max(b.ids.length, 1)
+        val in = Array.fill(bv.length)(by.zero)
         ms.foreach { case (_, (from, vs)) =>
           val at = b.in(from)
           var j = 0
-          while (j < vs.length) {
-            val v = at(j)
-            in(v) = if (min) math.min(in(v), vs(j)) else in(v) + vs(j)
+          while (j < at.length) {
+            val v = at(j) * w
+            var l = 0
+            while (l < w) { in(v + l) = by(in(v + l), vs(j * w + l)); l += 1 }
             j += 1
           }
         }
-        Iterator.single(Array.tabulate(b.ids.length)(v => next(bv(v), in(v))))
+        Iterator.single(Array.tabulate(bv.length)(v => next(bv(v), in(v))))
       }
     }
   }
@@ -138,28 +149,44 @@ final case class CsrGraph(spark: SparkSession, blocks: RDD[CsrGraph.Block],
   private[operators] def fill(v: Long): RDD[Array[Long]] =
     blocks.map(b => Array.fill(b.ids.length)(v))
 
-  /** Per block, 1 for the nodes listed in `seeds` (column `node`), else
-    * 0. Seeds absent from the graph are ignored. The seed ids are
-    * hash-partitioned like the nodes (one shuffle of the seed list). */
-  private[operators] def mark(seeds: DataFrame): RDD[Array[Long]] = {
+  /** A state of `width` lanes from the `cells` (node, lane, value):
+    * 0 where no cell is listed, the larger value where one repeats;
+    * nodes absent from the graph are ignored. One shuffle of the cells,
+    * hash-partitioned like the nodes. */
+  private[operators] def load(cells: DataFrame, width: Int): RDD[Array[Long]] = {
     val p = parts
-    val byOwner = seeds.select(col("node").cast("long")).queryExecution.toRdd
+    val byOwner = cells.select(Seq("node", "lane", "value").map(col(_).cast("long")): _*)
+      .queryExecution.toRdd
       .mapPartitions { rows =>
         val buf = Array.fill(p)(new ArrayBuilder.ofLong)
-        rows.foreach(r => if (!r.isNullAt(0)) buf(owner(r.getLong(0), p)) += r.getLong(0))
+        rows.foreach { r =>
+          if (!r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2)) {
+            require(r.getLong(1) >= 0 && r.getLong(1) < width, s"lane ${r.getLong(1)} of $width")
+            buf(owner(r.getLong(0), p)) += r.getLong(0) += r.getLong(1) += r.getLong(2)
+          }
+        }
         Iterator.range(0, p).map(d => d -> buf(d).result()).filter(_._2.nonEmpty)
       }
     blocks.zipPartitions(new ShuffledRDD[Int, Array[Long], Array[Long]](
         byOwner, new HashPartitioner(p))) { (bs, ss) =>
       val b = bs.next()
-      val m = new Array[Long](b.ids.length)
-      ss.foreach(_._2.foreach { s =>
-        val i = java.util.Arrays.binarySearch(b.ids, s)
-        if (i >= 0) m(i) = 1L
-      })
+      val m = new Array[Long](b.ids.length * width)
+      ss.foreach { case (_, xs) =>
+        for (j <- 0 until xs.length by 3) {
+          val i = java.util.Arrays.binarySearch(b.ids, xs(j))
+          if (i >= 0) {
+            val c = i * width + xs(j + 1).toInt
+            m(c) = math.max(m(c), xs(j + 2))
+          }
+        }
+      }
       Iterator.single(m)
     }
   }
+
+  /** 1 for the nodes listed in `seeds` (column `node`), else 0. */
+  private[operators] def mark(seeds: DataFrame): RDD[Array[Long]] =
+    load(seeds.select(col("node"), lit(0).as("lane"), lit(1L).as("value")), 1)
 
   /** The state arrays `cols` as a (node, cols…) frame of Longs. */
   private[operators] def frame(cols: (String, RDD[Array[Long]])*): DataFrame = {
@@ -184,6 +211,14 @@ object CsrGraph {
   case object Out extends Along
   /** In-rows: v sends to u for each edge (u, v). */
   case object In extends Along
+
+  /** How messages combine per cell and lane, with the identity `zero`. */
+  sealed abstract class Combiner(val zero: Long, f: (Long, Long) => Long) extends Serializable {
+    def apply(a: Long, b: Long): Long = f(a, b)
+  }
+  case object Sum extends Combiner(0L, _ + _)
+  case object Min extends Combiner(Long.MaxValue, math.min)
+  case object Max extends Combiner(0L, math.max)
 
   /** One partition of the graph. Node `i` (id `ids(i)`, ids sorted) has
     * the adjacency rows `offsets(i) until offsets(i + 1)`: out-rows

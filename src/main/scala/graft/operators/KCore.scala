@@ -1,7 +1,8 @@
 package graft.operators
 
+import graft.operators.CsrGraph.{All, Sum}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.{col, when}
 
 /** Synchronous distributed k-core peeling (the iterative pruning shape
   * of Montresor, De Pellegrini & Miorandi, "Distributed k-Core
@@ -11,12 +12,12 @@ import org.apache.spark.sql.functions._
   * of, and at fixpoint exactly) the k-core — the maximal subgraph with
   * minimum degree ≥ k.
   *
-  * Input: undirected simple edges (u, v), u < v, distinct. Output: one
-  * row per node — (node, deg, peel_round) with peel_round = 0 for
-  * nodes below k outright, i for nodes collapsing at round i, and −1
-  * for nodes still live after `rounds` rounds. The cascade index is
-  * the useful signal (an onion layering under threshold k), not just
-  * core membership.
+  * Input: undirected edges (u, v); parallel edges and self-loops count
+  * like rows of the edge list, as degrees do. Output: one row per node
+  * — (node, deg, peel_round) with peel_round = 0 for nodes below k
+  * outright, i for nodes collapsing at round i, and −1 for nodes still
+  * live after `rounds` rounds. The cascade index is the useful signal
+  * (an onion layering under threshold k), not just core membership.
   *
   * Round semantics follow the repo's BFS convention: the round budget
   * is part of the DECLARED semantics, and the differential oracle
@@ -24,53 +25,35 @@ import org.apache.spark.sql.functions._
   * or not the cascade has converged; GraphSpec additionally proves
   * fixpoint on the fixture family.
   *
-  * Scale shape: each round is two left-semi joins of the edge list
-  * against the |live| node list plus one map-side-combinable degree
-  * count — O(m) work per round with shuffles keyed on node ids, no
-  * driver-side state. Plan growth per round is linear (each round
-  * references the previous state once), truncated to O(1) by the
-  * graph family's alternating localCheckpoint.
+  * Scale shape: the [[CsrGraph]] kernel at width 1, combining by sum.
+  * From live₀(v) = [deg(v) ≥ k] a round is
+  * live'(v) = [Σ_{u~v} live(u) ≥ k] — one shuffle of at most |nodes|
+  * values per partition. That is "live with ≥ k live neighbours"
+  * because the live set only shrinks: a node with ≥ k live neighbours
+  * had ≥ k live neighbours a round earlier (≥ k neighbours, for
+  * live₀), so it was itself live; a round needs only its messages, as
+  * in [[Bfs]]. peel_round = −1 if live after the last round, else
+  * Σᵢ liveᵢ. Cache contract as in [[PageRank]].
   */
 object KCore {
 
-  private def degrees(e: DataFrame, out: String): DataFrame =
-    e.select(col("u").as("node")).unionAll(e.select(col("v").as("node")))
-      .groupBy("node").agg(count(lit(1)).as(out))
+  /** (node, deg, peel_round) for every node of `edges` (u, v); `parts`
+    * ≤ 0: [[LoopSizing]]. Persisted. */
+  def run(edges: DataFrame, k: Int, rounds: Int, parts: Int = 0): DataFrame =
+    CsrGraph.once(edges.select(col("u").as("src"), col("v").as("dst")), parts)(
+      run(_, k, rounds))
 
-  /** (node, deg, peel_round) for every node of `edges`.
-    * `parts` sizes the loop width ([[LoopSizing]], r14): the peeling
-    * rounds re-reference the edge list every round, so its partition
-    * count sets each round's stage width — size-derived, never the
-    * session default (the kNN graph is a few thousand rows; 32-wide
-    * rounds measured as ~90–120 ms of empty 32-task stages each). */
-  def run(edges0: DataFrame, k: Int, rounds: Int, parts: Int = 0): DataFrame = {
+  /** [[run]] on a prepared graph. Lazy; persists nothing. */
+  def run(g: CsrGraph, k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1, "k and rounds must be positive")
-    val p = if (parts > 0) parts
-      else LoopSizing.partitions(edges0.sparkSession, edges0.count())
-    val edges = edges0.repartition(p, col("u"))
-    val deg0 = degrees(edges, "deg").persist()
-    var peeled = deg0.select(col("node"), col("deg"),
-      when(col("deg") < k, lit(0L)).otherwise(lit(null).cast("long")).as("pr"))
-    var e = edges
-    for (i <- 1 to rounds) {
-      val live = peeled.where(col("pr").isNull).select("node")
-      e = e.join(live.select(col("node").as("u")), Seq("u"), "left_semi")
-        .join(live.select(col("node").as("v")), Seq("v"), "left_semi")
-      // a live node absent from the filtered edge list has live-degree
-      // 0 — the coalesce below peels it the same round
-      peeled = peeled.join(degrees(e, "dc"), Seq("node"), "left")
-        .select(col("node"), col("deg"),
-          when(col("pr").isNotNull, col("pr"))
-            .when(coalesce(col("dc"), lit(0L)) < k, lit(i.toLong))
-            .otherwise(lit(null).cast("long")).as("pr"))
-      if (i % 2 == 0 && i < rounds) {
-        peeled = peeled.localCheckpoint(false)
-        e = e.localCheckpoint(false)
-      }
-    }
-    deg0.unpersist()
-    peeled.select(col("node"), col("deg"),
-      coalesce(col("pr"), lit(-1L)).as("peel_round"))
+    val deg = g.degrees(All)
+    val live0 = deg.map(_.map(d => if (d >= k) 1L else 0L))
+    val lives = (1 to rounds).scanLeft(live0)((l, _) =>
+      g.propagate(l, live0, 1, All, Sum)((x, _) => x)((_, in) => if (in >= k) 1L else 0L))
+    val names = lives.indices.map(i => s"live$i")
+    g.frame(("deg" -> deg) +: names.zip(lives): _*)
+      .select(col("node"), col("deg"), when(col(names.last) === 1L, -1L)
+        .otherwise(names.map(col).reduce(_ + _)).as("peel_round"))
   }
 
   /** DuckDB CTE chain mirroring [[run]]; expects `e(u, v)` in scope,

@@ -8,8 +8,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Why not the session default: a Pregel-style loop reuses its
   * partitioned graph every round — the [[CsrGraph]] blocks, or the
-  * persisted adjacency of [[LabelProp]], [[KCore]] and
-  * [[Components]], the DataFrame loops that call this — so the graph's
+  * persisted adjacency of [[LabelProp]] and [[Components]], the
+  * DataFrame loops that call this — so the graph's
   * partition count sets the width of EVERY per-round stage. At the
   * session's 32 (= core count) on a sub-million-row graph, each round
   * schedules 32 tasks whose per-task fixed cost (dispatch, shuffle

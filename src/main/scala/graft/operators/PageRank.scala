@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.operators.CsrGraph.{All, Along, In, Out}
+import graft.operators.CsrGraph.{All, Along, In, Out, Sum}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 
@@ -114,7 +114,7 @@ object PageRank {
   private def ranks(g: CsrGraph, init: RDD[Array[Long]], base: RDD[Array[Long]],
                     iters: Int): DataFrame =
     g.frame("deg" -> g.degrees(All),
-      "rank" -> g.propagate(init, base, iters, All, min = false)((r, deg) => r / deg)(
+      "rank" -> g.propagate(init, base, iters, All, Sum)((r, deg) => r / deg)(
         (b, insum) => (DampNum * insum) / DampDen + b))
 
   /** Σ of a state over every node: one job. */
@@ -166,7 +166,7 @@ object PageRank {
         Iterator.single(x.indices.iterator.filter(d(_) == 0L).map(x(_)).sum)
       }
       val share = sinks.fold(0L)(_ + _) / n
-      g.propagate(r, base, 1, Out, min = false)((x, deg) => x / deg)(
+      g.propagate(r, base, 1, Out, Sum)((x, deg) => x / deg)(
         (b, insum) => (DampNum * (insum + share)) / DampDen + b)
     }
     g.frame("outdeg" -> outdeg, "rank" -> rank)
@@ -269,7 +269,7 @@ object PageRank {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val norm = (x: Long, s: Long) => (x * HMass) / math.max(s, 1L)
     def half(x: RDD[Array[Long]], s: Long, along: Along): RDD[Array[Long]] =
-      g.propagate(x, x, 1, along, min = false)((v, _) => norm(v, s))((_, insum) => insum)
+      g.propagate(x, x, 1, along, Sum)((v, _) => norm(v, s))((_, insum) => insum)
     // h0 = HMass per node under normaliser HMass: its messages are HMass
     var (h, sH) = (g.fill(HMass), HMass)
     var (a, sA) = (h, 1L)

@@ -2,18 +2,21 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{Bfs, CsrGraph, KCore, LabelProp, PageRank, TopK, Triangles}
+import graft.operators.{Bfs, CsrGraph, HyperAnf, KCore, LabelProp, PageRank, TopK, Triangles}
 import graft.sources.{Memo, Tables}
 
-/** Graph / link-analysis extension queries (q112–q114): deterministic
-  * integer PageRank, multi-source BFS seed distance, and
+/** Graph / link-analysis extension queries: deterministic integer
+  * PageRank and its family, multi-source BFS seed distance and
   * centrality-weighted sampling over the customer–supplier purchase
   * graph derived from the fact tables — the link-structure quality
   * signals a web-corpus curation pipeline ranks and selects documents
   * by (host centrality, hop distance from a trusted whitelist), with
   * the fixture's bipartite purchase relation standing in for the host
-  * graph. Engine + exact-arithmetic + 100 TB analysis in
-  * [[graft.operators.PageRank]] / [[graft.operators.Bfs]] scaladoc.
+  * graph — and triangle, k-core, HyperANF, assortativity and community
+  * signals over the supplier co-purchase kNN graph. The message-passing
+  * loops run on the [[graft.operators.CsrGraph]] kernel, one memoized
+  * graph per edge list ([[purchaseGraph]], [[knnGraph]]); engine,
+  * exact-arithmetic and 100 TB analysis in the operators' scaladoc.
   */
 object GraphQueries {
 
@@ -28,45 +31,28 @@ object GraphQueries {
   private val AnfRounds = 4
 
   /** The q229 curve, shared with q235's derivations — see the q229
-    * entry's scaladoc for the algorithm and scale shape. */
+    * entry's comment for the algorithm and scale shape. */
   private def hyperAnf(s: SparkSession, dir: String): DataFrame = {
     import MiningQueries.{h48, hllEst, HllM, HllNum}
     val e = knnEdges(s, dir)
-    val adj = e.select(col("u").as("a"), col("v").as("b"))
-      .unionByName(e.select(col("v").as("a"), col("u").as("b")))
-      .repartition(knnParts(s, dir), col("a")).persist()
-    val nodes = adj.select(col("a").as("node")).distinct()
-    val r0 = nodes
+    // a node listed once per edge end renders the same register each time
+    val seeds = e.select(col("u").as("node")).unionAll(e.select(col("v").as("node")))
       .withColumn("h", h48(concat(lit("anf:"), col("node").cast("string"))))
-      .select(col("node"), (col("h") % HllM).as("reg"),
+      .select(col("node"), (col("h") % HllM).as("lane"),
         when(expr(s"h div $HllM") === 0, lit(43L))
-          .otherwise(lit(43L) - length(bin(expr(s"h div $HllM"))))
-          .cast("long").as("rho"))
-      .localCheckpoint()
-    val states = (1 to AnfRounds).scanLeft(r0) { (prev, _) =>
-      val msgs = adj
-        .join(prev.withColumnRenamed("node", "b"), "b")
-        .select(col("a").as("node"), col("reg"), col("rho"))
-      prev.unionByName(msgs)
-        .groupBy("node", "reg").agg(max("rho").as("rho"))
-        .localCheckpoint()
-    }
-    states.zipWithIndex.map { case (st, h) =>
-      st.groupBy("node")
-        .agg(sum(expr(
-          "shiftleft(CAST(1 AS BIGINT), 30 - least(CAST(rho AS INT), 30))"))
-          .as("s_nz"), count(lit(1)).as("cnt"))
-        .select(col("node"),
-          (col("s_nz") +
-            (lit(HllM.toLong) - col("cnt")) * lit(1L << 30)).as("s"),
-          (lit(HllM.toLong) - col("cnt")).as("v"))
-        .withColumn("raw", expr(s"$HllNum div (1000 * s)"))
-        .select(hllEst(col("raw"), col("v")).as("est"))
-        .agg(count(lit(1)).as("n_nodes"), sum("est").as("est_pairs"))
-        .select(lit(h.toLong).as("h"), col("n_nodes"), col("est_pairs"),
-          expr("(CAST(1000 AS BIGINT) * est_pairs) div n_nodes")
-            .as("avg_ball_milli"))
-    }.reduce(_ unionByName _).orderBy("h")
+          .otherwise(lit(43L) - length(bin(expr(s"h div $HllM")))).as("value"))
+    HyperAnf.run(knnGraph(s, dir), seeds, HllM, AnfRounds)
+      .select(col("h"),
+        expr("""aggregate(regs, CAST(0 AS BIGINT), (a, rho) ->
+          |  a + shiftleft(CAST(1 AS BIGINT), 30 - least(CAST(rho AS INT), 30)))""".stripMargin)
+          .as("s"),
+        size(filter(col("regs"), _ === 0L)).cast("long").as("v"))
+      .withColumn("raw", expr(s"$HllNum div (1000 * s)"))
+      .select(col("h"), hllEst(col("raw"), col("v")).as("est"))
+      .groupBy("h").agg(count(lit(1)).as("n_nodes"), sum("est").as("est_pairs"))
+      .select(col("h"), col("n_nodes"), col("est_pairs"),
+        expr("(CAST(1000 AS BIGINT) * est_pairs) div n_nodes").as("avg_ball_milli"))
+      .orderBy("h")
   }
 
   /** q169: negative-sampling geometry — candidates drawn per source
@@ -174,8 +160,9 @@ object GraphQueries {
     * undirected (u < v) kNN edge list with degree ≤ 2·TriK at ANY
     * scale — the sparsification that makes downstream triangle/core
     * analytics O(|V|) where the raw projection densifies
-    * quadratically. Held like [[purchaseEdges]] (both consumers
-    * reference it from several subtrees). */
+    * quadratically. Held like [[purchaseEdges]]: q140, q144, q183,
+    * q216, q226 and q229's seeds read it, and [[knnGraph]] is built
+    * from it. */
   private def knnEdges(s: SparkSession, dir: String): DataFrame =
     Memo(s, dir, "knnEdges") {
       val li = Tables.load(s, dir, "lineitem")
@@ -195,6 +182,15 @@ object GraphQueries {
           greatest(col("node"), col("nbr")).as("v"))
         .distinct()
         .localCheckpoint(false)
+    }
+
+  /** The kNN graph prepared for the kernel, held in [[Memo]] next to
+    * [[knnEdges]]: q142, q229 and q235 share one build per (session,
+    * fixture), like [[purchaseGraph]]. */
+  private def knnGraph(s: SparkSession, dir: String): CsrGraph =
+    Memo(s, dir, "knnGraph") {
+      CsrGraph(knnEdges(s, dir).select(col("u").as("src"), col("v").as("dst")),
+        knnParts(s, dir))
     }
 
   /** [[knnEdges]] as oracle CTEs ending in `e(u, v)`. */
@@ -228,14 +224,13 @@ object GraphQueries {
     // similarity graph is one small world (dedup components will
     // chain) or many islands. Deterministic end-to-end: the q177
     // register representation (content-addressed 48-bit hash → (reg,
-    // rho) rows, integer rho, max-merge) makes the "approximate"
-    // sketch bit-exact and oracle-checkable — the DuckDB twin unrolls
-    // the same rounds. Scale shape, per round: ONE shuffle of the
-    // SPARSE (node, reg, rho) state along edges (≤ 64 registers per
-    // node — constant-size state, the entire point of ANF-by-sketch
-    // vs exact pair BFS), a map-combinable max-merge, localCheckpoint
-    // to keep the doubly-referenced state's plan O(1); estimates are
-    // one rollup per round over the node-bounded state.
+    // rho), integer rho, max-merge) makes the "approximate" sketch
+    // bit-exact and oracle-checkable — the DuckDB twin unrolls the
+    // same rounds. The seed registers are rendered here (h48, the
+    // oracle's md5); the rounds are graft.operators.HyperAnf on the
+    // memoized kNN CsrGraph (64 registers per node at any ball size —
+    // the point of ANF-by-sketch vs exact pair BFS); the estimates are
+    // ONE rollup keyed on h over each node's per-round (s, v).
     "q229_hyperanf" -> ((s, dir) => hyperAnf(s, dir)),
 
     // EFFECTIVE DIAMETER & EXPANSION PROFILE (q235): the headline
@@ -537,24 +532,19 @@ object GraphQueries {
     // density-decomposition signal spam/quality curation uses (a
     // document cluster that survives high-k peeling is a tightly
     // self-similar block; SEO farms and template mills show up as
-    // high-core regions of the similarity graph). Synchronous
-    // distributed peeling (the Montresor et al. k-core shape): each
-    // round drops every live node whose degree among LIVE nodes fell
-    // below K, so the output is the peel CASCADE — peel_round 0 for
-    // nodes below K outright, i for nodes collapsing at round i, -1
-    // for core survivors — not just a membership bit. KCoreK = 6 sits
+    // high-core regions of the similarity graph). The output is the
+    // peel CASCADE (graft.operators.KCore), not just a membership
+    // bit. KCoreK = 6 sits
     // above the kNN graph's guaranteed minimum degree (every node
     // keeps TriK = 5 partners), so peeling is genuinely selective:
     // only nodes that also RECEIVE selections survive round 0. Fixed
     // KCoreRounds with the q113 convention: the differential is exact
     // at any round count because the oracle unrolls the same rounds;
-    // GraphSpec proves fixpoint on the fixture family. Per round: two
-    // semi-joins against the |live| list + one map-combinable degree
-    // count — O(m) per round, O(1) plan size via the family's
-    // alternating localCheckpoint.
+    // GraphSpec proves fixpoint on the fixture family. Runs on the
+    // memoized kNN CsrGraph shared with q229/q235; each round is one
+    // kernel round summing live flags.
     "q142_kcore" -> ((s, dir) =>
-      KCore.run(knnEdges(s, dir), KCoreK, KCoreRounds,
-        knnParts(s, dir)).orderBy("node")),
+      KCore.run(knnGraph(s, dir), KCoreK, KCoreRounds).orderBy("node")),
 
     // Graph-embedding positive pairs (q144): DeepWalk/node2vec's
     // preprocessing (Perozzi et al. 2014 — public literature) made

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Path, StandardCopyOption}
 import org.apache.spark.sql.functions._
-import graft.operators.{Bfs, PageRank}
+import graft.operators.{Bfs, HyperAnf, KCore, PageRank}
 
 /** Exact-integer PageRank invariants: bit-identical agreement with a
   * driver-side reference fold (the property that makes the unrolled
@@ -214,6 +214,21 @@ class GraphSpec extends SparkSpec {
         s"edge ($s,$d) violates relaxation: ${dist(s)} vs ${dist(d)}")
   }
 
+  /** Driver-side register rounds: reg₀ from the seed cells (the larger
+    * value where a cell repeats, 0 where none), then
+    * reg'(v) = max(reg₀(v), max_{u~v} reg(u)) lane by lane; per
+    * (node, h) for h = 0..rounds. */
+  private def refRegs(edges: Seq[(Long, Long)], seeds: Seq[(Long, Int, Long)], m: Int,
+                      rounds: Int): Map[(Long, Long), Seq[Long]] = {
+    val adj = (edges ++ edges.map(_.swap)).groupBy(_._1).map { case (v, es) => v -> es.map(_._2) }
+    val r0 = adj.keys.map(v => v -> Seq.tabulate(m)(l =>
+      seeds.collect { case (`v`, `l`, x) => x }.maxOption.getOrElse(0L))).toMap
+    val states = (1 to rounds).scanLeft(r0)((r, _) => r0.map { case (v, s) =>
+      v -> adj(v).map(r).foldLeft(s)((a, b) => a.zip(b).map(p => math.max(p._1, p._2))) })
+    states.zipWithIndex.flatMap { case (st, h) =>
+      st.map { case (v, regs) => (v, h.toLong) -> regs } }.toMap
+  }
+
   test("CsrGraph kernel: identical ranks and distances at 1, 3 and 7 partitions") {
     val rng = new scala.util.Random(41)
     // a self-loop and a parallel edge count like rows of the edge list;
@@ -224,6 +239,11 @@ class GraphSpec extends SparkSpec {
     val weighted = edges.map { case (s, d) => (s, d, (rng.nextInt(5) + 1).toLong) }
     val (e, seedSet) = (edges.toDF("src", "dst"), Set(0L, 7L))
     val (ew, seeds) = (weighted.toDF("src", "dst", "w"), seedSet.toSeq.toDF("node"))
+    // register seeds at width 4: some nodes seedless, a repeated cell,
+    // a node absent from the graph
+    val regSeeds = (0 until 60).map(_ =>
+      (rng.nextInt(45).toLong, rng.nextInt(4), (rng.nextInt(30) + 1).toLong)) ++
+      Seq((3L, 1, 7L), (3L, 1, 2L), (999L, 0, 5L))
     def col2(df: org.apache.spark.sql.DataFrame, c: Int) =
       df.collect().map(r => r.getLong(0) -> r.getLong(c)).toMap
     def at(p: Int) =
@@ -231,11 +251,14 @@ class GraphSpec extends SparkSpec {
            col2(Bfs.run(e, seeds, 4, p), 1), col2(PageRank.runWeighted(ew, 3, p), 2),
            col2(PageRank.runDirected(e, 3, p), 2),
            PageRank.runHits(e, 3, p).collect()
-             .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap)
+             .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap,
+           HyperAnf.run(e, regSeeds.toDF("node", "lane", "value"), 4, 3, p).collect()
+             .map(r => (r.getLong(0), r.getLong(1)) -> r.getSeq[Long](2)).toMap)
       finally spark.catalog.clearCache()
     val one = at(1)
     assert(one == ((refRanks(edges, 3), refTrust(edges, seedSet, 3), refDists(edges, seedSet, 4),
-      refWeighted(weighted, 3), refDirected(edges, 3), refHits(edges, 3))))
+      refWeighted(weighted, 3), refDirected(edges, 3), refHits(edges, 3),
+      refRegs(edges, regSeeds, 4, 3))))
     assert(at(3) == one && at(7) == one)
   }
 
@@ -267,11 +290,14 @@ class GraphSpec extends SparkSpec {
                   "q123_directed_pagerank", "q125_hits")) rows(q, d)
     val built = graphIds -- before
     assert(built.size == 1, s"one build for the five queries, got $built")
+    for (q <- Seq("q142_kcore", "q229_hyperanf", "q235_effective_diameter")) rows(q, d)
+    val knn = graphIds -- before -- built
+    assert(knn.size == 1, s"one kNN build for the three queries, got $knn")
     val half = spark.read.parquet(d.resolve("orders.parquet").toString)
       .where(col("o_orderkey") % 2 === 0)
     put(d, "orders", half)
     val rewritten = rows("q112_pagerank", d)
-    val rebuilt = graphIds -- before
+    val rebuilt = graphIds -- before -- knn
     assert((rebuilt & built).isEmpty, "the old blocks are still persisted")
     assert(rebuilt.size == 1)
     val fresh = fixture()
@@ -285,9 +311,12 @@ class GraphSpec extends SparkSpec {
     val e = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L), (4L, 5L)).toDF("src", "dst")
     val ew = e.withColumn("w", col("src") % 3 + 1)
     val seeds = Seq(1L).toDF("node")
-    for (r <- Seq(PageRank.run(e, 2), PageRank.runTrust(e, seeds, 2), Bfs.run(e, seeds, 2),
-                  PageRank.runWeighted(ew, 2), PageRank.runDirected(e, 2), PageRank.runHits(e, 2)))
-      assert(r.count() == 5)
+    val cells = Seq((1L, 0L, 3L), (5L, 1L, 2L)).toDF("node", "lane", "value")
+    for ((r, n) <- Seq(PageRank.run(e, 2), PageRank.runTrust(e, seeds, 2), Bfs.run(e, seeds, 2),
+                       PageRank.runWeighted(ew, 2), PageRank.runDirected(e, 2),
+                       PageRank.runHits(e, 2), KCore.run(e.toDF("u", "v"), 2, 2))
+                     .map(_ -> 5) :+ (HyperAnf.run(e, cells, 2, 2, 0) -> 15))
+      assert(r.count() == n)
     assert((graphIds -- before).isEmpty, "a throwaway graph outlived its call")
     spark.catalog.clearCache() // the documented release of the results
     // nothing else is left either: no per-round state of the scalar loops
@@ -513,14 +542,15 @@ class GraphSpec extends SparkSpec {
     deg0.map { case (n, d) => n -> ((d, pr(n).getOrElse(-1L))) }
   }
 
-  private def peelToMap(edges: Seq[(Long, Long)], k: Int, rounds: Int) =
-    graft.operators.KCore.run(edges.toDF("u", "v"), k, rounds)
+  private def peelToMap(edges: Seq[(Long, Long)], k: Int, rounds: Int, parts: Int) =
+    try KCore.run(edges.toDF("u", "v"), k, rounds, parts)
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    finally spark.catalog.clearCache()
 
   test("k-core: path cascade peels layer by layer, triangle survives (k=2)") {
     val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L),
       (10L, 11L), (10L, 12L), (11L, 12L))
-    assert(peelToMap(edges, k = 2, rounds = 4) == Map(
+    assert(peelToMap(edges, k = 2, rounds = 4, parts = 0) == Map(
       0L -> ((1L, 0L)), 4L -> ((1L, 0L)),
       1L -> ((2L, 1L)), 3L -> ((2L, 1L)),
       2L -> ((2L, 2L)),
@@ -534,15 +564,11 @@ class GraphSpec extends SparkSpec {
       .filter { case (s, d) => s != d }
       .map { case (s, d) => (math.min(s, d), math.max(s, d)) }.distinct
     val want = refPeel(edges, 3, 8)
-    // 8 rounds crosses several alternating localCheckpoint truncations
-    assert(peelToMap(edges, 3, 8) == want)
+    // 8 kernel rounds, each a sum of live flags; the graph's partition
+    // count must not change a peel round
+    for (p <- Seq(1, 3, 7)) assert(peelToMap(edges, 3, 8, p) == want, s"at $p partitions")
     // fixpoint on this graph: extra rounds change nothing
     assert(refPeel(edges, 3, 12) == want)
-    // partition-layout invariance
-    val got2 = graft.operators.KCore.run(
-        edges.toDF("u", "v").repartition(7), 3, 8)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    assert(got2 == want)
   }
 
   test("q144 walks follow edges with the content-addressed argmin choice") {

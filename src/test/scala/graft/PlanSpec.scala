@@ -175,7 +175,7 @@ class PlanSpec extends SparkSpec {
 
   test("q112: PageRank rounds run on the CSR kernel, not joins") {
     for (q <- Seq("q112_pagerank", "q121_weighted_pagerank", "q123_directed_pagerank",
-                  "q125_hits")) {
+                  "q125_hits", "q142_kcore")) {
       val p = plan(q)
       // the rounds are the CsrGraph kernel's RDD lineage; the frame on
       // top is its (node, …) rows, and the only Sort is the output order
@@ -185,6 +185,11 @@ class PlanSpec extends SparkSpec {
         assert(!p.contains(op), s"$op in $q\n$p")
       assert(p.linesIterator.count(_.matches("""\(\d+\) Sort\b.*""")) == 1, s"$q\n$p")
     }
+    // q229's register rounds are the same kernel; its estimate rollup is
+    // the only relational part
+    val p = plan("q229_hyperanf")
+    assert(p.contains("Scan ExistingRDD"), p)
+    for (op <- Seq("SortMergeJoin", "InMemoryTableScan")) assert(!p.contains(op), s"$op in q229\n$p")
   }
 
   test("q114: centrality sample runs through TopKPerKeyExec; no cartesian") {
