@@ -18,9 +18,9 @@ import scala.jdk.CollectionConverters._
   * timings: single-shot numbers on a shared machine carry multi-second
   * noise spikes (observed: a 0.9 s query recorded at 5.2 s by a
   * concurrent-load hiccup), and min-of-2 measures the query instead of
-  * the neighbor's page-cache eviction. First-run-only costs (the posts
-  * proxy persist) amortize into whichever run pays them — exactly as
-  * they would across a long-lived session.
+  * the neighbor's page-cache eviction. First-run-only costs amortize
+  * into whichever run pays them — exactly as they would across a
+  * long-lived session.
   *
   * CONTENTION SELF-DEFENSE (round 11): two consecutive rounds the
   * official sweep record was phantom-inflated by sustained co-tenant

@@ -288,7 +288,10 @@ object DedupQueries {
     // once and Blocking.expand emits each doc pair once, as in q51:
     // no GROUP BY over the 1.23 M-row doc-pair expansion at sf0.1 (the
     // oracle keeps its GROUP BY form and certifies the shape by the
-    // row hash).
+    // row hash). The verified title pairs (~250 KB at sf0.1) pass one
+    // shuffle before the expansion: without it the verify fuses into
+    // the stage under the final sort, and the sort's range sampler
+    // runs the whole array_intersect stage a second time.
     "q53_ngram_jaccard" -> ((s, dir) => {
       val titles = proxyTitles(s, dir).where(size(TextAnalysis.tokens(col("title"))) > 0)
       val blocks = Blocking(titles.groupBy("title").agg(min(col("doc_id")).as("rep"))
@@ -303,7 +306,7 @@ object DedupQueries {
         .select(col("title_a"), col("title_b"), (col("inter").cast("double") /
           (col("sza") + col("szb") - col("inter"))).as("jaccard"))
         .where(col("jaccard") >= 0.6)
-      memberPairs(sel, titles)
+      memberPairs(sel.repartition(s.sparkContext.defaultParallelism), titles)
     }),
 
     // Duplicate-cluster assignment: connected components over the q51

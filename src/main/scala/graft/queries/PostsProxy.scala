@@ -74,39 +74,33 @@ object PostsProxy {
        |FROM documents""".stripMargin
   }
 
-  // One persisted proxy per fixture, held in graft.sources.Memo. Two
-  // reasons:
+  // One proxy per fixture, held in graft.sources.Memo as an eager
+  // localCheckpoint. Two reasons:
   //  (1) codegen: even with element_at(array(...)), downstream queries fuse
   //      the 12-branch title expression into their own Sort/Project stages,
   //      and the combined method blows janino's 64 KB limit → interpreted
   //      fallback on every proxy consumer (q01–q05, q51–q53). The
-  //      InMemoryRelation is a codegen boundary: the big expression runs
-  //      once, in a Project-only stage that janino splits fine.
-  //  (2) cost: six queries share the derivation; deriving once is the same
-  //      move as materializing a shared staging table on a real cluster.
-  // The proxy is a test-fixture corpus (|documents| rows, narrow), so
-  // MEMORY_AND_DISK is safe at every driver SF.
+  //      checkpoint's LogicalRDD is a codegen boundary: the big expression
+  //      runs once, in the memo build, and consumers read Scan ExistingRDD.
+  //  (2) cost: the proxy consumers share the derivation; deriving once is
+  //      the same move as materializing a shared staging table on a real
+  //      cluster.
+  // A checkpoint, not a persist: spark.catalog.clearCache() (the harness's
+  // per-operation isolation) leaves RDD-level checkpoint blocks alone, and
+  // AQE plans a LogicalRDD scan as part of its consumer's stage. A
+  // persisted frame's InMemoryTableScan becomes a TableCacheQueryStage of
+  // its own (one job per scan), and AQE reuses no exchange above one, so
+  // a self-join over a persisted proxy (q53) runs its title aggregate and
+  // cap once per side.
+  // The proxy is a test-fixture corpus (|documents| rows, narrow), so the
+  // checkpoint's memory-and-disk blocks are safe at every driver SF.
 
   /** Spark-side proxy DataFrame (registers `documents` as a temp view). */
-  def df(spark: SparkSession, sfDir: String): DataFrame = {
-    val frame = Memo(spark, sfDir, "postsProxy") {
+  def df(spark: SparkSession, sfDir: String): DataFrame =
+    Memo(spark, sfDir, "postsProxy") {
       Tables.load(spark, sfDir, "documents").createOrReplaceTempView("documents")
-      spark.sql(sql(SparkSql))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      spark.sql(sql(SparkSql)).localCheckpoint()
     }
-    // spark.catalog.clearCache() (Bench's per-run isolation) does not
-    // just evict blocks — it DEREGISTERS the plan from the cache
-    // manager, so the memoized frame stops substituting an
-    // InMemoryRelation and every consumer re-inlines the synthesis
-    // projection into its own codegen span: exactly the 64 KB janino
-    // blowout reason (1) above exists to prevent (observed in the r9
-    // bench sweeps as sort_addToSorter stacks on q05's dedup sort).
-    // Re-registering on access is idempotent; the rebuild cost lands
-    // on the first consumer, as the Bench scaladoc documents.
-    if (frame.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      frame.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    frame
-  }
 
   /** DuckDB CTE prefix for oracle queries needing the proxy. */
   val duckCte: String = s"WITH posts_proxy AS (${sql(DuckSql)})"

@@ -39,8 +39,7 @@ import scala.jdk.CollectionConverters._
   * memoized purchase graph). Frames held here survive
   * `spark.catalog.clearCache()` only as far as their storage does:
   * `localCheckpoint` blocks and persisted RDDs are RDD-level and
-  * survive it, `persist`ed frames are deregistered by it (PostsProxy
-  * re-persists on access).
+  * survive it, `persist`ed frames are deregistered by it.
   */
 object Memo {
 

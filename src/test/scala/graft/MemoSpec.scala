@@ -34,6 +34,10 @@ class MemoSpec extends SparkSpec {
       "CAST(((id * 7919 + i * 104729) % 1000) / 1000.0 AS FLOAT))").as("embedding"),
     lit(0).as("label"))
 
+  /** The first `n` rows of the smallest documents fixture. */
+  private def documents(n: Int): DataFrame =
+    spark.read.parquet("/root/testdata/sf0.001/documents.parquet").orderBy("doc_id").limit(n)
+
   private def persistentIds: Set[Int] =
     spark.sparkContext.getPersistentRDDs.keySet.toSet
 
@@ -44,6 +48,17 @@ class MemoSpec extends SparkSpec {
     val a = Memo(spark, d.toString, "hit") { builds += 1; Array(1L, 2L) }
     val b = Memo(spark, d.toString, "hit") { builds += 1; Array(3L) }
     assert(builds == 1 && (a eq b))
+    // the posts proxy is a checkpoint: the harness's clearCache leaves
+    // it in place, so the next consumer gets the same frame and no job
+    // rebuilds it
+    put(d, "documents", documents(40))
+    val before = graft.queries.PostsProxy.df(spark, d.toString)
+    var after: DataFrame = null
+    val jobs = jobsDuring {
+      spark.catalog.clearCache()
+      after = graft.queries.PostsProxy.df(spark, d.toString)
+    }
+    assert((before eq after) && jobs == 0, s"$jobs jobs")
   }
 
   test("a rewrite at the same path misses and releases the old frames") {
@@ -67,6 +82,16 @@ class MemoSpec extends SparkSpec {
     assert(p2.count() == 102 && c2.count() == 52)
     assert((held & persistentIds).isEmpty, "old entry's blocks still held")
     p2.unpersist()
+    // the posts proxy's checkpoint RDD goes with a rewritten documents
+    // fixture
+    put(d, "documents", documents(40))
+    val before2 = persistentIds
+    assert(graft.queries.PostsProxy.df(spark, d.toString).count() == 40)
+    val proxy = persistentIds -- before2
+    assert(proxy.size == 1, s"the proxy's checkpoint RDD, got $proxy")
+    put(d, "documents", documents(60))
+    assert(graft.queries.PostsProxy.df(spark, d.toString).count() == 60)
+    assert((proxy & persistentIds).isEmpty, "old proxy's checkpoint still held")
   }
 
   test("a rewrite releases the RDDs a value holds (a CsrGraph's blocks)") {

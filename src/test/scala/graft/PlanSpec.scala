@@ -561,18 +561,39 @@ class PlanSpec extends SparkSpec {
     assert(!plan("q239_contamination_matrix").contains("CartesianProduct"))
   }
 
-  test("posts proxy re-registers its persist after catalog.clearCache") {
-    // clearCache() DEREGISTERS plans from the cache manager, not just
-    // evicts blocks; without the storageLevel==NONE re-persist in
-    // PostsProxy.df, every consumer re-inlines the 12-branch title
-    // synthesis into its own codegen span and q05's dedup sort blows
-    // janino's 64 KB method limit (the r9 bench-sweep stacks). The
-    // consumer plan must keep an InMemoryRelation boundary even right
-    // after a clearCache.
+  test("posts proxy is a memoized checkpoint that survives catalog.clearCache") {
+    // clearCache() DEREGISTERS persisted plans from the cache manager;
+    // the proxy is a localCheckpoint instead, whose LogicalRDD it does
+    // not touch. A consumer must keep reading the materialized rows:
+    // if the 12-branch title synthesis re-inlined into its codegen
+    // span, q05's dedup sort would blow janino's 64 KB method limit
+    // (the r9 bench-sweep stacks), and an InMemoryTableScan would
+    // cost one job per scan and block AQE's exchange reuse.
     graft.queries.PostsProxy.df(spark, dir).count()
     spark.catalog.clearCache()
     val p = plan("q05_transform")
-    assert(p.contains("InMemoryTableScan") || p.contains("InMemoryRelation"),
-      s"q05 lost the proxy cache boundary after clearCache:\n${p.take(2000)}")
+    assert(p.contains("Scan ExistingRDD"), s"q05 does not read the proxy checkpoint:\n${p.take(2000)}")
+    assert(!p.contains("InMemoryTableScan"), s"q05 reads a persisted frame:\n${p.take(2000)}")
+    assert(!p.contains("Hiring Senior Data Engineer"),
+      s"q05 re-inlined the title synthesis:\n${p.take(2000)}")
+  }
+
+  test("q53: the self-join reuses its exchange over the proxy, and one call runs 9 jobs") {
+    val q53 = SparkEntry.queries("q53_ngram_jaccard")
+    val sf001 = "/root/testdata/sf0.01"
+    q53(spark, sf001).write.format("noop").mode("overwrite").save() // builds the memo
+    spark.catalog.clearCache() // harness isolation, as in Verify/Bench
+    val df = q53(spark, sf001)
+    val jobs = jobsDuring(df.queryExecution.toRdd.count())
+    val p = df.queryExecution.executedPlan.toString
+    assert(p.contains("isFinalPlan=true"), p)
+    // the title aggregate and the cap run once: the self-join's second
+    // side reads the first side's exchange
+    assert(p.contains("ReusedExchange"), s"q53 reuses no exchange:\n$p")
+    assert(!p.contains("TableCacheQueryStage"), s"q53 scans a persisted frame:\n$p")
+    // the title aggregate, the members broadcast, the cap, the pin, the
+    // cap rows' broadcast, the verify (its pairs' shuffle), the final
+    // sort's range sampler and map stage over the expansion, the result
+    assert(jobs == 9, s"$jobs jobs")
   }
 }

@@ -23,6 +23,32 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     d
   }
 
+  /** The number of Spark jobs `body` starts, broadcast jobs included.
+    * The listener bus delivers in order: once a marker job's start
+    * arrives, every job of `body` has been counted. */
+  def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).map(_.getProperty("spark.jobGroup.id")).contains("marker"))
+          drained.countDown()
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobGroup("marker", "marker")
+      sc.parallelize(Seq(1)).count()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
+
   override def withFixture(test: NoArgTest): Outcome =
     try super.withFixture(test)
     finally {
