@@ -326,8 +326,7 @@ object Bench {
 
     // ---- end-of-sweep contention re-time (defense 2) ----
     val sfName = new java.io.File(sfDir).getName
-    val recordPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_RECORD",
-      "/root/repo/BENCH_RECORD.json")
+    val recordPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_RECORD", "BENCH_RECORD.json")
     val recordLine =
       try {
         val src = scala.io.Source.fromFile(recordPath)
@@ -351,8 +350,9 @@ object Bench {
     // just before it pushed the summary past the window). The record
     // therefore splits in two:
     //  (1) the COMPLETE record (full per-query wall + cpu maps,
-    //      re-time annotations) goes ONLY to BENCH_LOCAL.json (repo
-    //      root, override via SPARK_GRAFT_BENCH_OUT) — never to stdout;
+    //      re-time annotations) goes ONLY to BENCH_LOCAL.json (working
+    //      directory — the checkout root under sbt's forked run —
+    //      override via SPARK_GRAFT_BENCH_OUT) — never to stdout;
     //  (2) stdout's last (and only payload) line is [[summaryLine]] —
     //      headline fields plus only the 3 slowest queries, ~300 bytes —
     //      so the driver's parse of the final JSON line succeeds
@@ -369,7 +369,7 @@ object Bench {
       ns.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val fullLine =
       s"""{"queries":${qmap(walls)},"cpu":${qmap(results.map { case (n, (_, c)) => n -> c })},"retimed":${qmap(retimed.sortBy(_._1))},"load_flagged":${nameList(flagged)},"wall_suspect":${nameList(wallSuspects)},"record_file":"${if (record.nonEmpty) recordPath else ""}","n_failed":$nFailed,"metric":"total","value":${fmt(total)},"cpu_sec":${fmt(cpuTotal)},"unit":"sec","sf":"$sfName"}"""
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/BENCH_LOCAL.json")
+    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
     try {
       val w = new java.io.PrintWriter(new java.io.File(out))
       try w.println(fullLine) finally w.close()

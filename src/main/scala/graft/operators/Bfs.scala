@@ -18,7 +18,7 @@ import org.apache.spark.sql.DataFrame
   *    hops of a seed and `Inf` beyond (the GraphFrames
   *    shortestPaths/maxIter contract).
   *
-  * Scale shape: the [[CsrGraph]] kernel, as for [[PageRank.run]]. One
+  * Scale shape: the [[CsrGraph]] kernel, as for [[PageRank]]. One
   * round ships each node's distance to its neighbours, min-combined
   * per destination map-side (at most |nodes| values per partition in
   * ONE shuffle), and the receiver takes
@@ -36,15 +36,10 @@ object Bfs {
     * and never beats a real distance). */
   val Inf = 1L << 30
 
-  /** Hop distances after `iters` rounds over the UNDIRECTED graph
-    * `edges` (src, dst) from `seeds` (single column `node`). Returns
-    * (node, dist) for every node in the edge list, persisted (cache
-    * contract in [[PageRank]]); unreached nodes carry dist = [[Inf]]. */
-  def run(edges: DataFrame, seeds: DataFrame, iters: Int,
-          parts: Int = 0): DataFrame =
-    CsrGraph.once(edges, parts)(run(_, seeds, iters))
-
-  /** [[run]] on a prepared graph. Lazy; persists nothing. */
+  /** Hop distances after `iters` rounds over `g`, every row read as an
+    * undirected edge, from `seeds` (single column `node`). Returns
+    * (node, dist) for every node of the graph; unreached nodes carry
+    * dist = [[Inf]]. Lazy; persists nothing. */
   def run(g: CsrGraph, seeds: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val d0 = g.mark(seeds).map(_.map(s => if (s == 1L) 0L else Inf))

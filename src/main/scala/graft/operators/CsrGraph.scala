@@ -11,8 +11,10 @@ import scala.collection.mutable.ArrayBuilder
 
 /** A prepared graph for the synchronous message-passing loops of the
   * link-analysis family ([[PageRank]] and its members, [[Bfs]],
-  * [[KCore]], [[HyperAnf]]): the Pregel layout, built once and reused
-  * by every call and every round.
+  * [[KCore]], [[HyperAnf]], [[LabelProp]]): the Pregel layout, built
+  * once and reused by every call and every round. It is the family's
+  * only entry: a caller builds a graph with [[CsrGraph.apply]] (or reads
+  * a memoized one) and releases it.
   *
   * Layout. The edge list is symmetrized once and hash-partitioned by
   * node into `parts` partitions (Spark's own `hashpartitioning` of a
@@ -49,6 +51,15 @@ import scala.collection.mutable.ArrayBuilder
   * its nodes and computes the next state. Nothing is broadcast or
   * sorted per round.
   *
+  * The other round ([[pull]]) hands each node its neighbours' states,
+  * one per adjacency row, uncombined: what [[LabelProp]]'s label
+  * histogram needs, which no per-cell combiner can fold. Partition s
+  * ships d the states of `in(d)` — its own nodes with a neighbour in d,
+  * in id order — which are exactly d's outbox cells for s, so d copies
+  * them to its cells from `outStart(s)` and row k reads its neighbour
+  * at cell `slots(k)`. One shuffle, no keys, the volume of a width-1
+  * [[propagate]] round.
+  *
   * Exactness: the combiners are sums, mins and maxes of non-negative
   * Longs, so a result cannot depend on the partition count or message
   * order.
@@ -59,11 +70,11 @@ import scala.collection.mutable.ArrayBuilder
   * Lifetime: the blocks are persisted (MEMORY_AND_DISK, lineage kept,
   * so a lost block is recomputed) and survive
   * `spark.catalog.clearCache()`. The owner releases them: a graph held
-  * in [[graft.sources.Memo]] is released by the memo on replacement;
-  * [[once]] releases its throwaway graph itself. Rounds persist
-  * nothing: a loop that reads a driver scalar between rounds runs one
-  * job per round, and each job reads the previous round's messages
-  * from their shuffle output instead of recomputing them.
+  * in [[graft.sources.Memo]] is released by the memo on replacement,
+  * any other by its builder. Rounds persist nothing: a loop that reads
+  * a driver scalar between rounds runs one job per round, and each job
+  * reads the previous round's messages from their shuffle output
+  * instead of recomputing them.
   */
 final case class CsrGraph(spark: SparkSession, blocks: RDD[CsrGraph.Block],
                           nodes: Long) {
@@ -137,6 +148,30 @@ final case class CsrGraph(spark: SparkSession, blocks: RDD[CsrGraph.Block],
         }
         Iterator.single(Array.tabulate(bv.length)(v => next(bv(v), in(v))))
       }
+    }
+  }
+
+  /** One pull round: node v's next state is `next` of its neighbours'
+    * states, one per adjacency row of v (every row, in row order;
+    * `next` owns the array and may reorder it). Width 1. Lazy. */
+  private[operators] def pull(state: RDD[Array[Long]])
+                             (next: Array[Long] => Long): RDD[Array[Long]] = {
+    val out = blocks.zipPartitions(state) { (bs, ss) =>
+      val b = bs.next(); val st = ss.next()
+      val me = TaskContext.getPartitionId()
+      Iterator.range(0, b.in.length).filter(d => b.in(d).nonEmpty)
+        .map(d => d -> (me -> b.in(d).map(st(_))))
+    }
+    val msgs = new ShuffledRDD[Int, (Int, Array[Long]), (Int, Array[Long])](
+      out, new HashPartitioner(parts))
+    blocks.zipPartitions(msgs) { (bs, ms) =>
+      val b = bs.next()
+      val cells = new Array[Long](b.outStart(b.outStart.length - 1))
+      ms.foreach { case (_, (from, vs)) =>
+        System.arraycopy(vs, 0, cells, b.outStart(from), vs.length) }
+      Iterator.single(Array.tabulate(b.ids.length)(i =>
+        next(Array.tabulate(b.offsets(i + 1) - b.offsets(i))(j =>
+          cells(b.slots(b.offsets(i) + j))))))
     }
   }
 
@@ -291,19 +326,6 @@ object CsrGraph {
       .persist(StorageLevel.MEMORY_AND_DISK)
     CsrGraph(edges.sparkSession, blocks,
       blocks.map(_.ids.length.toLong).fold(0L)(_ + _))
-  }
-
-  /** Runs `f` on a graph of `edges` built for this one call (`parts` ≤ 0:
-    * [[LoopSizing]] of the symmetrized row count) and returns its result
-    * persisted in the session cache; the graph is released before
-    * returning. The caller releases the result with
-    * `spark.catalog.clearCache()` or `unpersist()`. */
-  private[operators] def once(edges: DataFrame, parts: Int)
-                             (f: CsrGraph => DataFrame): DataFrame = {
-    val p = if (parts > 0) parts
-      else LoopSizing.partitions(edges.sparkSession, 2L * edges.count())
-    val g = CsrGraph(edges, p)
-    try { val r = f(g).persist(); r.count(); r } finally g.release()
   }
 
   /** Sorted distinct copy of `xs`. */

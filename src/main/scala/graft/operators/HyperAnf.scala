@@ -20,11 +20,6 @@ import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
   */
 object HyperAnf {
 
-  /** [[run]] on a graph of `edges` (src, dst) built for this call
-    * (`parts` ≤ 0: [[LoopSizing]]); persisted. */
-  def run(edges: DataFrame, seeds: DataFrame, m: Int, rounds: Int, parts: Int): DataFrame =
-    CsrGraph.once(edges, parts)(run(_, seeds, m, rounds))
-
   /** (node, h, regs) for every node and h = 0..`rounds`: its `m`
     * registers after h rounds from the seed cells (node, lane, value).
     * Lazy; persists nothing. */

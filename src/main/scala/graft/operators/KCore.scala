@@ -12,11 +12,11 @@ import org.apache.spark.sql.functions.{col, when}
   * of, and at fixpoint exactly) the k-core — the maximal subgraph with
   * minimum degree ≥ k.
   *
-  * Input: undirected edges (u, v); parallel edges and self-loops count
-  * like rows of the edge list, as degrees do. Output: one row per node
-  * — (node, deg, peel_round) with peel_round = 0 for nodes below k
-  * outright, i for nodes collapsing at round i, and −1 for nodes still
-  * live after `rounds` rounds. The cascade index is the useful signal
+  * Input: a graph of undirected edges; parallel edges and self-loops
+  * count like rows of the edge list, as degrees do. Output: one row per
+  * node — (node, deg, peel_round) with peel_round = 0 for nodes below
+  * k outright, i for nodes collapsing at round i, and −1 for nodes
+  * still live after `rounds` rounds. The cascade index is the useful signal
   * (an onion layering under threshold k), not just core membership.
   *
   * Round semantics follow the repo's BFS convention: the round budget
@@ -37,13 +37,8 @@ import org.apache.spark.sql.functions.{col, when}
   */
 object KCore {
 
-  /** (node, deg, peel_round) for every node of `edges` (u, v); `parts`
-    * ≤ 0: [[LoopSizing]]. Persisted. */
-  def run(edges: DataFrame, k: Int, rounds: Int, parts: Int = 0): DataFrame =
-    CsrGraph.once(edges.select(col("u").as("src"), col("v").as("dst")), parts)(
-      run(_, k, rounds))
-
-  /** [[run]] on a prepared graph. Lazy; persists nothing. */
+  /** (node, deg, peel_round) for every node of `g`, every row read as
+    * an undirected edge. Lazy; persists nothing. */
   def run(g: CsrGraph, k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1, "k and rounds must be positive")
     val deg = g.degrees(All)

@@ -1,10 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Synchronous label propagation (Raghavan et al. 2007) for community
-  * detection over an undirected edge list — the cheap clustering signal
+  * detection over an undirected graph — the cheap clustering signal
   * corpus pipelines use to group near-duplicate/same-site documents
   * when full connected components over-merge (LPA communities respect
   * local density; components chain through any single weak edge).
@@ -15,57 +14,43 @@ import org.apache.spark.sql.functions._
   * SMALLEST label, and every node starts labeled with its own id.
   * Integer counts + total tie order ⇒ bit-identical across engines and
   * partitionings; the oracle unrolls the same rounds as CTEs.
+  * Neighbours count once per adjacency row, as in the oracle's
+  * `UNION ALL` adjacency: a parallel edge once per copy, a self-loop
+  * twice.
   *
-  * Scale shape, per round: ONE map-side-combinable shuffle builds the
-  * (node, label, cnt) message histogram over the persisted
-  * src-partitioned adjacency, then the argmax-per-node streams through
-  * the custom TopKPerKeyExec (k = 1 — an O(1) heap per node, no full
-  * per-node sort). The label state is referenced ONCE per round, so
-  * plan growth is only linear (not the doubling of Bfs/HITS) — but a
-  * user raising iters toward convergence would still pay linearly
-  * growing analysis cost per round, so the loop localCheckpoints every
-  * OTHER round: plan depth stays bounded at two rounds' worth while
-  * only half the rounds pay an eager materialization job (the
-  * scheduling floor of checkpoint-every-round is what dominates these
-  * loops at small scale). Fixed-round contract and the
-  * caller-must-clearCache cache contract match the rest of the graph
-  * family ([[PageRank]]'s scaladoc).
+  * Scale shape: one [[CsrGraph.pull]] per round. Each node receives
+  * its neighbours' labels, one per row (one keyless shuffle in which a
+  * partition ships each partition at most one value per own node),
+  * sorts them and keeps the longest run — O(deg · log deg) per node.
+  * No frame is cached between rounds: all rounds run in one job over
+  * the graph's blocks.
   */
 object LabelProp {
 
-  /** Labels after `iters` synchronous rounds over the UNDIRECTED graph
-    * given by `edges` (src, dst) — both directions added here, pass
-    * each undirected edge once. Returns (node, label). */
-  def run(edges: DataFrame, iters: Int, parts: Int = 0): DataFrame = {
+  /** Labels after `iters` synchronous rounds over `g`, every row read
+    * as an undirected edge. Returns (node, label); lazy, caches
+    * nothing (the graph's owner releases it). */
+  def run(g: CsrGraph, iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val lp = if (parts > 0) parts
-      else LoopSizing.partitions(edges.sparkSession, 2L * edges.count())
-    val adj = edges.select(col("src"), col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(lp, col("src"))
-      .persist()
-    // every node of an undirected edge list appears as a src
-    val nodes = adj.select(col("src").as("node")).distinct().persist()
-    val l0 = nodes.withColumn("label", col("node"))
-    (1 to iters).foldLeft(l0) { (l, i) =>
-      val msgs = adj
-        .join(l.select(col("node").as("src"), col("label")), "src")
-        .groupBy(col("dst").as("node"), col("label"))
-        .agg(count(lit(1)).as("cnt"))
-      val next = TopK.perKey(msgs, keys = Seq("node"),
-          order = Seq("cnt" -> false, "label" -> true), k = 1)
-        .select(col("node"), col("label"))
-      // bounded-depth lineage truncation (scaladoc above): every other
-      // round, so analysis stays O(1)-per-round at any iters while the
-      // loop pays only iters/2 eager checkpoint jobs
-      if (i % 2 == 0) next.localCheckpoint() else next
+    val labels = (1 to iters).foldLeft(g.blocks.map(_.ids)) { (l, _) =>
+      g.pull(l) { ls =>
+        java.util.Arrays.sort(ls)
+        var (best, bestN, i) = (ls(0), 0, 0)
+        while (i < ls.length) {
+          var j = i + 1
+          while (j < ls.length && ls(j) == ls(i)) j += 1
+          if (j - i > bestN) { best = ls(i); bestN = j - i } // ties: first = smallest
+          i = j
+        }
+        best
+      }
     }
+    g.frame("label" -> labels)
   }
 
   /** DuckDB rendering over an edge CTE named `e` (src, dst); ends in
-    * `lp` = (node, label). The TopKPerKey argmax is rendered as the
-    * equivalent rank-1 window (same (cnt DESC, label ASC) total
-    * order). */
+    * `lp` = (node, label). The argmax is rendered as a rank-1 window
+    * over the same (cnt DESC, label ASC) total order. */
   def oracleCtes(iters: Int, edge: String = "e"): String = {
     def step(i: Int): String =
       s"""m$i AS (SELECT a.dst AS node, l.label, count(*) AS cnt

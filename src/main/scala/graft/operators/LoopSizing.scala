@@ -8,12 +8,12 @@ import org.apache.spark.sql.SparkSession
   *
   * Why not the session default: a Pregel-style loop reuses its
   * partitioned graph every round — the [[CsrGraph]] blocks, or the
-  * persisted adjacency of [[LabelProp]] and [[Components]], the
-  * DataFrame loops that call this — so the graph's
-  * partition count sets the width of EVERY per-round stage. At the
-  * session's 32 (= core count) on a sub-million-row graph, each round
-  * schedules 32 tasks whose per-task fixed cost (dispatch, shuffle
-  * writer setup, codegen lookup) dwarfs its ~20k-row compute. Sizing by
+  * persisted adjacency of [[Components]], the one DataFrame loop that
+  * calls this — so the graph's partition count sets the width of EVERY
+  * per-round stage. At the session's 32 (= core count) on a
+  * sub-million-row graph, each round schedules 32 tasks whose per-task
+  * fixed cost (dispatch, shuffle writer setup, codegen lookup) dwarfs
+  * its ~20k-row compute. Sizing by
   * rows keeps partitions ~work-proportional at every scale: small
   * graphs collapse to a few meaty tasks, large graphs grow partitions
   * linearly until the session width (the cluster-size knob,
@@ -27,8 +27,8 @@ import org.apache.spark.sql.SparkSession
   * q112 (587k symmetrized edges) when it still ran as a relational
   * loop: 32 partitions took 3.97 s/run, 4 took 1.73 s/run, and the
   * optimum sat at 4–8 partitions (100–150k rows each). The CSR kernel
-  * that replaced that loop keeps the sizing ([[CsrGraph.once]] and the
-  * purchase graphs of the graph queries).
+  * that replaced that loop keeps the sizing: the graph queries size
+  * their memoized purchase and kNN graphs with it.
   */
 object LoopSizing {
 

@@ -91,11 +91,11 @@ object GraphQueries {
     *
     * Held in [[Memo]]: the purchase-graph queries share this SAME edge
     * list, as a production pipeline computing many link signals builds
-    * the graph once. Its readers are [[purchaseGraph]] (the six kernel
-    * queries), [[purchaseParts]], q126 and q169. The lazy localCheckpoint runs
-    * the build (orders⋈lineitem + distinct — two fact scans and two
-    * shuffles) on the first consumer; every later query reads the
-    * materialized edge blocks. The edge MULTISET is deterministic and
+    * the graph once. Its readers are [[purchaseParts]],
+    * [[purchaseGraph]] (the seven kernel queries) and q169. The lazy
+    * localCheckpoint runs the build (orders⋈lineitem + distinct — two
+    * fact scans and two shuffles) on the first consumer; every later
+    * query reads the materialized edge blocks. The edge MULTISET is deterministic and
     * every consumer is order-insensitive (exact-integer folds with
     * total tie orders); only the physical row layout differs. */
   private def purchaseEdges(s: SparkSession, dir: String): DataFrame =
@@ -125,7 +125,7 @@ object GraphQueries {
 
   /** The purchase graph prepared for the message-passing kernel
     * ([[graft.operators.CsrGraph]]), held in [[Memo]] next to the edges:
-    * q112, q113, q114, q119, q123 and q125 share one build per
+    * q112, q113, q114, q119, q123, q125 and q126 share one build per
     * (session, fixture) instead of re-symmetrizing 2·|edges| rows per
     * call. Edges run customer → supplier (out-rows at the customer),
     * which the directed members read; it carries no weights. */
@@ -185,8 +185,8 @@ object GraphQueries {
     }
 
   /** The kNN graph prepared for the kernel, held in [[Memo]] next to
-    * [[knnEdges]]: q142, q229 and q235 share one build per (session,
-    * fixture), like [[purchaseGraph]]. */
+    * [[knnEdges]]: q142, q216, q229 and q235 share one build per
+    * (session, fixture), like [[purchaseGraph]]. */
   private def knnGraph(s: SparkSession, dir: String): CsrGraph =
     Memo(s, dir, "knnGraph") {
       CsrGraph(knnEdges(s, dir).select(col("u").as("src"), col("v").as("dst")),
@@ -312,7 +312,8 @@ object GraphQueries {
     // numerator are int64 (safe while m < ~10⁹ edges; past that drop
     // to a coarser fixed point); only the final ppm rendering divides,
     // in doubles with floor (negative-safe — `div`/`//` disagree on
-    // negative operands). Scale shape: the label join is the e⋈lp
+    // negative operands). Scale shape: the labels are LPA rounds on
+    // the memoized kNN CsrGraph (q142's); the label join is the e⋈lp
     // equi-join twice (shuffles on node — linear); community stats are
     // map-combinable rollups; the global numerator is ONE scalar agg
     // broadcast back; output is the 20 largest communities via
@@ -322,7 +323,7 @@ object GraphQueries {
     "q216_modularity" -> ((s, dir) => {
       val e = knnEdges(s, dir)
         .select(col("u").as("src"), col("v").as("dst"))
-      val labels = LabelProp.run(e, Iters, knnParts(s, dir))
+      val labels = LabelProp.run(knnGraph(s, dir), Iters)
       e.createOrReplaceTempView("q216_edges")
       labels.createOrReplaceTempView("q216_labels")
       val ein = s.sql(
@@ -467,12 +468,11 @@ object GraphQueries {
     // label, smallest-label ties). Communities respect local density
     // where q70's connected components chain through any single shared
     // edge — the distinction that matters when grouping documents by
-    // host/near-dup affinity for mixing decisions. The per-round
-    // argmax runs through the custom TopKPerKeyExec (k = 1), i.e. the
-    // operator inventory composes inside iterative loops, not just as
-    // a terminal stage.
+    // host/near-dup affinity for mixing decisions. q112's graph; each
+    // round pulls the neighbours' labels along the rows and keeps the
+    // most frequent.
     "q126_label_propagation" -> ((s, dir) => {
-      LabelProp.run(purchaseEdges(s, dir), Iters, purchaseParts(s, dir))
+      LabelProp.run(purchaseGraph(s, dir), Iters)
         .select(col("node"),
           when(col("node") % 2 === 0, lit("customer"))
             .otherwise(lit("supplier")).as("kind"),

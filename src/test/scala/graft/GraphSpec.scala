@@ -1,8 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Path, StandardCopyOption}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import graft.operators.{Bfs, HyperAnf, KCore, PageRank}
+import graft.operators.{Bfs, CsrGraph, HyperAnf, KCore, LabelProp, PageRank}
 
 /** Exact-integer PageRank invariants: bit-identical agreement with a
   * driver-side reference fold (the property that makes the unrolled
@@ -31,9 +32,16 @@ class GraphSpec extends SparkSpec {
     r
   }
 
+  /** `f` on a graph of `edges` built at `parts` partitions, collected;
+    * the graph is released before returning. */
+  private def onGraph(edges: DataFrame, parts: Int)(f: CsrGraph => DataFrame): Array[Row] = {
+    val g = CsrGraph(edges, parts)
+    try f(g).collect() finally g.release()
+  }
+
   private def runToMap(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] =
-    PageRank.run(edges.toDF("src", "dst"), iters)
-      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+    onGraph(edges.toDF("src", "dst"), 1)(PageRank.run(_, iters))
+      .map(r => r.getLong(0) -> r.getLong(2)).toMap
 
   test("ranks match the driver-side reference fold bit-for-bit on a random graph") {
     val rng = new scala.util.Random(7)
@@ -74,9 +82,11 @@ class GraphSpec extends SparkSpec {
       (rng.nextInt(20).toLong, rng.nextInt(20).toLong))
       .filter { case (s, d) => s != d }.distinct
     val base = runToMap(edges, 2)
-    val shuffled = PageRank.run(
-        scala.util.Random.shuffle(edges).toDF("src", "dst").repartition(7), 2)
-      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+    // shuffled input rows on a graph of 7 partitions (base: 1)
+    val shuffled = onGraph(
+        scala.util.Random.shuffle(edges).toDF("src", "dst").repartition(7), 7)(
+        PageRank.run(_, 2))
+      .map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(base == shuffled)
   }
 
@@ -86,9 +96,9 @@ class GraphSpec extends SparkSpec {
       (rng.nextInt(25).toLong, rng.nextInt(25).toLong))
       .filter { case (s, d) => s != d }.distinct
     val plain = runToMap(edges, 3)
-    val weighted = PageRank.runWeighted(
-        edges.map { case (s, d) => (s, d, 1L) }.toDF("src", "dst", "w"), 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+    val weighted = onGraph(
+        edges.map { case (s, d) => (s, d, 1L) }.toDF("src", "dst", "w"), 1)(PageRank.run(_, 3))
+      .map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(weighted == plain)
   }
 
@@ -118,8 +128,8 @@ class GraphSpec extends SparkSpec {
           (rng.nextInt(5) + 1).toLong))
       .filter { case (s, d, _) => s != d }
       .groupBy(e => (e._1, e._2)).map(_._2.head).toSeq // unique pairs
-    val got = PageRank.runWeighted(edges.toDF("src", "dst", "w"), 3)
-      .collect().map(x => x.getLong(0) -> x.getLong(2)).toMap
+    val got = onGraph(edges.toDF("src", "dst", "w"), 1)(PageRank.run(_, 3))
+      .map(x => x.getLong(0) -> x.getLong(2)).toMap
     assert(got == refWeighted(edges, 3))
   }
 
@@ -152,9 +162,9 @@ class GraphSpec extends SparkSpec {
         Seq((100L, 101L), (101L, 102L), (102L, 103L)))
       .filter { case (s, d) => s != d }.distinct
     val seeds = Set(0L, 3L, 999L) // 999 absent from the graph: ignored
-    val got = PageRank.runTrust(edges.toDF("src", "dst"),
-        seeds.toSeq.toDF("node"), 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+    val got = onGraph(edges.toDF("src", "dst"), 1)(
+        PageRank.runTrust(_, seeds.toSeq.toDF("node"), 3))
+      .map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(got == refTrust(edges, seeds, 3))
     // the island never receives trust; seeds hold positive trust
     for (v <- Seq(100L, 101L, 102L, 103L)) assert(got(v) == 0L)
@@ -190,9 +200,9 @@ class GraphSpec extends SparkSpec {
         Seq((100L, 101L), (101L, 102L), (102L, 103L), (103L, 104L)))
       .filter { case (s, d) => s != d }.distinct
     val seeds = Set(0L, 5L)
-    val got = Bfs.run(edges.toDF("src", "dst"),
-        seeds.toSeq.toDF("node"), 4)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = onGraph(edges.toDF("src", "dst"), 1)(
+        Bfs.run(_, seeds.toSeq.toDF("node"), 4))
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == refDists(edges, seeds, 4))
     // the island stays at the sentinel
     assert(got(100L) == Bfs.Inf && got(104L) == Bfs.Inf)
@@ -206,9 +216,8 @@ class GraphSpec extends SparkSpec {
       (rng.nextInt(15).toLong, rng.nextInt(15).toLong))
       .filter { case (s, d) => s != d }.distinct
     // 15 nodes: 14 rounds always converge
-    val dist = Bfs.run(edges.toDF("src", "dst"),
-        Seq(0L).toDF("node"), 14)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val dist = onGraph(edges.toDF("src", "dst"), 1)(Bfs.run(_, Seq(0L).toDF("node"), 14))
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
     for ((s, d) <- edges if dist(s) < Bfs.Inf && dist(d) < Bfs.Inf)
       assert(math.abs(dist(s) - dist(d)) <= 1,
         s"edge ($s,$d) violates relaxation: ${dist(s)} vs ${dist(d)}")
@@ -244,21 +253,24 @@ class GraphSpec extends SparkSpec {
     val regSeeds = (0 until 60).map(_ =>
       (rng.nextInt(45).toLong, rng.nextInt(4), (rng.nextInt(30) + 1).toLong)) ++
       Seq((3L, 1, 7L), (3L, 1, 2L), (999L, 0, 5L))
-    def col2(df: org.apache.spark.sql.DataFrame, c: Int) =
+    def col2(df: DataFrame, c: Int) =
       df.collect().map(r => r.getLong(0) -> r.getLong(c)).toMap
-    def at(p: Int) =
-      try (col2(PageRank.run(e, 3, p), 2), col2(PageRank.runTrust(e, seeds, 3, p), 2),
-           col2(Bfs.run(e, seeds, 4, p), 1), col2(PageRank.runWeighted(ew, 3, p), 2),
-           col2(PageRank.runDirected(e, 3, p), 2),
-           PageRank.runHits(e, 3, p).collect()
+    def at(p: Int) = {
+      val (g, gw) = (CsrGraph(e, p), CsrGraph(ew, p))
+      try (col2(PageRank.run(g, 3), 2), col2(PageRank.runTrust(g, seeds, 3), 2),
+           col2(Bfs.run(g, seeds, 4), 1), col2(PageRank.run(gw, 3), 2),
+           col2(PageRank.runDirected(g, 3), 2),
+           PageRank.runHits(g, 3).collect()
              .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap,
-           HyperAnf.run(e, regSeeds.toDF("node", "lane", "value"), 4, 3, p).collect()
-             .map(r => (r.getLong(0), r.getLong(1)) -> r.getSeq[Long](2)).toMap)
-      finally spark.catalog.clearCache()
+           HyperAnf.run(g, regSeeds.toDF("node", "lane", "value"), 4, 3).collect()
+             .map(r => (r.getLong(0), r.getLong(1)) -> r.getSeq[Long](2)).toMap,
+           col2(LabelProp.run(g, 3), 1))
+      finally { g.release(); gw.release() }
+    }
     val one = at(1)
     assert(one == ((refRanks(edges, 3), refTrust(edges, seedSet, 3), refDists(edges, seedSet, 4),
       refWeighted(weighted, 3), refDirected(edges, 3), refHits(edges, 3),
-      refRegs(edges, regSeeds, 4, 3))))
+      refRegs(edges, regSeeds, 4, 3), refLpa(edges, 3))))
     assert(at(3) == one && at(7) == one)
   }
 
@@ -287,12 +299,13 @@ class GraphSpec extends SparkSpec {
     val d = fixture()
     val before = graphIds
     for (q <- Seq("q112_pagerank", "q119_trustrank", "q113_seed_distance",
-                  "q123_directed_pagerank", "q125_hits")) rows(q, d)
+                  "q123_directed_pagerank", "q125_hits", "q126_label_propagation")) rows(q, d)
     val built = graphIds -- before
-    assert(built.size == 1, s"one build for the five queries, got $built")
-    for (q <- Seq("q142_kcore", "q229_hyperanf", "q235_effective_diameter")) rows(q, d)
+    assert(built.size == 1, s"one build for the six queries, got $built")
+    for (q <- Seq("q142_kcore", "q229_hyperanf", "q235_effective_diameter",
+                  "q216_modularity")) rows(q, d)
     val knn = graphIds -- before -- built
-    assert(knn.size == 1, s"one kNN build for the three queries, got $knn")
+    assert(knn.size == 1, s"one kNN build for the four queries, got $knn")
     val half = spark.read.parquet(d.resolve("orders.parquet").toString)
       .where(col("o_orderkey") % 2 === 0)
     put(d, "orders", half)
@@ -305,21 +318,20 @@ class GraphSpec extends SparkSpec {
     assert(rewritten == rows("q112_pagerank", fresh), "stale graph served after the rewrite")
   }
 
-  test("edge-list overloads hold no persistent RDD once the result is released") {
-    spark.catalog.clearCache()
+  test("graph members persist nothing: releasing the graph leaves no persistent RDD") {
     val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val e = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L), (4L, 5L)).toDF("src", "dst")
-    val ew = e.withColumn("w", col("src") % 3 + 1)
     val seeds = Seq(1L).toDF("node")
     val cells = Seq((1L, 0L, 3L), (5L, 1L, 2L)).toDF("node", "lane", "value")
-    for ((r, n) <- Seq(PageRank.run(e, 2), PageRank.runTrust(e, seeds, 2), Bfs.run(e, seeds, 2),
-                       PageRank.runWeighted(ew, 2), PageRank.runDirected(e, 2),
-                       PageRank.runHits(e, 2), KCore.run(e.toDF("u", "v"), 2, 2))
-                     .map(_ -> 5) :+ (HyperAnf.run(e, cells, 2, 2, 0) -> 15))
+    val (g, gw) = (CsrGraph(e, 2), CsrGraph(e.withColumn("w", col("src") % 3 + 1), 2))
+    for ((r, n) <- Seq(PageRank.run(g, 2), PageRank.runTrust(g, seeds, 2), Bfs.run(g, seeds, 2),
+                       PageRank.run(gw, 2), PageRank.runDirected(g, 2),
+                       PageRank.runHits(g, 2), KCore.run(g, 2, 2), LabelProp.run(g, 2))
+                     .map(_ -> 5) :+ (HyperAnf.run(g, cells, 2, 2) -> 15))
       assert(r.count() == n)
-    assert((graphIds -- before).isEmpty, "a throwaway graph outlived its call")
-    spark.catalog.clearCache() // the documented release of the results
-    // nothing else is left either: no per-round state of the scalar loops
+    g.release(); gw.release()
+    // no per-round state of the loops is left, and no result was
+    // persisted: nothing but the graph needed releasing
     assert((spark.sparkContext.getPersistentRDDs.keySet.toSet -- before).isEmpty)
   }
 
@@ -349,8 +361,8 @@ class GraphSpec extends SparkSpec {
     val edges = ((0 until 80).map(_ =>
         (rng.nextInt(20).toLong, rng.nextInt(25).toLong)) :+ (0L, 21L))
       .filter { case (s, d) => s != d }.distinct
-    val got = PageRank.runDirected(edges.toDF("src", "dst"), 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+    val got = onGraph(edges.toDF("src", "dst"), 1)(PageRank.runDirected(_, 3))
+      .map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(got == refDirected(edges, 3))
     // sinks exist, hold positive rank, and truncation never creates mass
     assert(edges.exists(e => e._2 >= 20L))
@@ -372,8 +384,8 @@ class GraphSpec extends SparkSpec {
       .map { case (s, d) => (math.min(s, d), math.max(s, d)) }.distinct
     val undirected = runToMap(edges, 3)
     val sym = (edges ++ edges.map { case (s, d) => (d, s) }).distinct
-    val directed = PageRank.runDirected(sym.toDF("src", "dst"), 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+    val directed = onGraph(sym.toDF("src", "dst"), 1)(PageRank.runDirected(_, 3))
+      .map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(directed == undirected)
   }
 
@@ -403,8 +415,8 @@ class GraphSpec extends SparkSpec {
     // bipartite: sources 0..14 point at targets 100..109 only
     val edges = (0 until 70).map(_ =>
       (rng.nextInt(15).toLong, 100L + rng.nextInt(10))).distinct
-    val got = PageRank.runHits(edges.toDF("src", "dst"), 3)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    val got = onGraph(edges.toDF("src", "dst"), 1)(PageRank.runHits(_, 3))
+      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(got == refHits(edges, 3))
     // pure hubs hold zero authority, pure authorities zero hub mass
     assert((0L to 14L).filter(got.contains).forall(got(_)._2 == 0L))
@@ -430,15 +442,15 @@ class GraphSpec extends SparkSpec {
   }
 
   test("label propagation matches the reference fold; cliques separate where components merge") {
-    import graft.operators.{Components, LabelProp}
+    import graft.operators.Components
     // two 4-cliques joined by ONE bridge edge — a single component,
     // but two density communities
     def clique(ids: Seq[Long]) =
       for (a <- ids; b <- ids if a < b) yield (a, b)
     val edges = (clique(Seq(0L, 1L, 2L, 3L)) ++
       clique(Seq(10L, 11L, 12L, 13L)) :+ ((3L, 10L))).distinct
-    val got = LabelProp.run(edges.toDF("src", "dst"), 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = onGraph(edges.toDF("src", "dst"), 1)(LabelProp.run(_, 3))
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == refLpa(edges, 3))
     val aLabels = Seq(0L, 1L, 2L, 3L).map(got).distinct
     val bLabels = Seq(10L, 11L, 12L, 13L).map(got).distinct
@@ -454,35 +466,31 @@ class GraphSpec extends SparkSpec {
       (rng.nextInt(24).toLong, rng.nextInt(24).toLong))
       .filter { case (s, d) => s != d }
       .map { case (s, d) => (math.min(s, d), math.max(s, d)) }.distinct
-    val got2 = LabelProp.run(rand.toDF("src", "dst"), 4)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got2 = onGraph(rand.toDF("src", "dst"), 1)(LabelProp.run(_, 4))
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got2 == refLpa(rand, 4))
   }
 
-  test("label propagation stays bit-stable at high iteration counts (checkpointed loop)") {
-    import graft.operators.LabelProp
-    // 10 rounds crosses several every-other-round localCheckpoint
-    // truncations — the reference fold agreement proves truncation
-    // changes the PLAN only, never a label; the repartitioned rerun
-    // proves layout invariance through the checkpoints.
+  test("label propagation stays bit-stable over 10 rounds at 1, 3 and 7 partitions") {
+    // 10 pull rounds in one job: every round's labels must survive the
+    // partition count of the graph
     val rng = new scala.util.Random(11)
     val edges = (0 until 140).map(_ =>
       (rng.nextInt(30).toLong, rng.nextInt(30).toLong))
       .filter { case (s, d) => s != d }
       .map { case (s, d) => (math.min(s, d), math.max(s, d)) }.distinct
     val want = refLpa(edges, 10)
-    val got = LabelProp.run(edges.toDF("src", "dst"), 10)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == want)
-    val got2 = LabelProp.run(edges.toDF("src", "dst").repartition(7), 10)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got2 == want)
+    for (p <- Seq(1, 3, 7)) {
+      val got = onGraph(edges.toDF("src", "dst"), p)(LabelProp.run(_, 10))
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == want, s"at $p partitions")
+    }
   }
 
   test("deg column is the undirected degree") {
     val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L))
-    val degs = PageRank.run(edges.toDF("src", "dst"), 1)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val degs = onGraph(edges.toDF("src", "dst"), 1)(PageRank.run(_, 1))
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(degs == Map(1L -> 2L, 2L -> 2L, 3L -> 2L))
   }
 
@@ -543,14 +551,13 @@ class GraphSpec extends SparkSpec {
   }
 
   private def peelToMap(edges: Seq[(Long, Long)], k: Int, rounds: Int, parts: Int) =
-    try KCore.run(edges.toDF("u", "v"), k, rounds, parts)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    finally spark.catalog.clearCache()
+    onGraph(edges.toDF("src", "dst"), parts)(KCore.run(_, k, rounds))
+      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
 
   test("k-core: path cascade peels layer by layer, triangle survives (k=2)") {
     val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L),
       (10L, 11L), (10L, 12L), (11L, 12L))
-    assert(peelToMap(edges, k = 2, rounds = 4, parts = 0) == Map(
+    assert(peelToMap(edges, k = 2, rounds = 4, parts = 1) == Map(
       0L -> ((1L, 0L)), 4L -> ((1L, 0L)),
       1L -> ((2L, 1L)), 3L -> ((2L, 1L)),
       2L -> ((2L, 2L)),

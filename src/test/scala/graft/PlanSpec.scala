@@ -175,7 +175,7 @@ class PlanSpec extends SparkSpec {
 
   test("q112: PageRank rounds run on the CSR kernel, not joins") {
     for (q <- Seq("q112_pagerank", "q121_weighted_pagerank", "q123_directed_pagerank",
-                  "q125_hits", "q142_kcore")) {
+                  "q125_hits", "q126_label_propagation", "q142_kcore")) {
       val p = plan(q)
       // the rounds are the CsrGraph kernel's RDD lineage; the frame on
       // top is its (node, …) rows, and the only Sort is the output order

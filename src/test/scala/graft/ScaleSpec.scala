@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Blocking, Dedup, HyperAnf, Similarity, SkewJoin}
+import graft.operators.{Blocking, CsrGraph, Dedup, HyperAnf, Similarity, SkewJoin}
 
 /** Scale-technique specs: salted skew joins and bucketed co-located
   * joins — the explicit 100 TB tools the query inventory leans on. */
@@ -456,9 +456,10 @@ class ScaleSpec extends SparkSpec {
       .select(col("node"), (col("h") % 64).as("lane"),
         when(expr("h div 64") === 0, lit(43L))
           .otherwise(lit(43L) - length(bin(expr("h div 64")))).as("value"))
-    val regs = try HyperAnf.run(edges, seeds, 64, 2, 3).collect()
+    val g = CsrGraph(edges, 3)
+    val regs = try HyperAnf.run(g, seeds, 64, 2).collect()
         .map(r => (r.getLong(0), r.getLong(1)) -> r.getSeq[Long](2)).toMap
-      finally spark.catalog.clearCache()
+      finally g.release()
     assert(regs.size == 3 * n && regs.values.forall(_.length == 64))
     val top = (0L until n).map(v => regs((v, 0L))).transpose.map(_.max)
     for (v <- 0L until n) {
